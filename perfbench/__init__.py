@@ -1,0 +1,6 @@
+"""Benchmark for dce_spark: seeded workloads, timed and traced runs.
+
+Entry point: ``python3 perfbench/run.py --workload <name> --seed <n>
+--seconds <s> --trace <0|1>`` from the repository root. See
+``perfbench/README.md``.
+"""
