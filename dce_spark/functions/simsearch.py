@@ -576,7 +576,8 @@ def _quantize_embeddings(embeddings: DataFrame) -> DataFrame:
 
 def _centroid_df(spark, centroids: list[list[int]]):
     """Centroid table (j, c) — k rows of dim bigints, broadcast into
-    the assignment join. A TABLE, not k per-row literal arrays: the
+    the ivf_topk probe ranking and the centroid_far similarity join.
+    A TABLE, not k per-row literal arrays: the
     plan size is independent of k, so tens-of-thousands of clusters
     (the SemDeDup corpus-scale regime) compile and broadcast fine."""
     from pyspark.sql.types import (
@@ -599,110 +600,85 @@ _SQDIST = (
 )
 
 
-def _assign_join(em: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Assignment via broadcast centroid table + min(struct(dist, j)):
-    each vector meets the k broadcast centroids (BroadcastNestedLoop —
-    no shuffle of the big side), the integer squared distance is a
-    Catalyst fold, and the argmin is the struct MIN (dist first, then
-    j — ties to the LOWER cluster id), aggregated with map-side
-    partials so the groupBy shuffles one row per vector. No encoding,
-    no cap on k. Returns (vec_id, em, cluster)."""
-    from dce_spark.functions.textops import ensure_scan_parallelism
+def _micro_matrix(tbl, dim: int):
+    """(n, dim) int64 matrix of a record batch's ``em`` column (the
+    1e-6 fixed-point coordinates from ``_quantize_embeddings``)."""
+    import numpy as np
 
-    em = ensure_scan_parallelism(em, key="vec_id")
-    cent = F.broadcast(_centroid_df(em.sparkSession, centroids))
-    scored = em.crossJoin(cent).select(
-        "vec_id", "em",
-        F.struct(
-            F.expr(_SQDIST).alias("d"), F.col("j").alias("j")
-        ).alias("dj"),
-    )
     return (
-        scored.groupBy("vec_id")
-        .agg(F.min("dj").alias("m"), F.first("em").alias("em"))
-        .select(
-            "vec_id", "em", F.col("m.j").cast("long").alias("cluster")
-        )
+        tbl.column("em").flatten()
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int64).reshape(tbl.num_rows, dim)
     )
+
+
+def _nearest(X, C):
+    """Exact argmin of squared distance from each row of X to the
+    centroids C: one int64 ``|x|^2 - 2 X @ C.T + |c|^2`` and
+    ``np.argmin``, which takes the FIRST minimum — ties go to the
+    lower cluster id. int64 throughout (micro-coords <= ~2e6, dot
+    terms <= 64 * 4e12 — exact), so the decision matches the oracle's
+    integer struct-min."""
+    import numpy as np
+
+    d = (
+        (X * X).sum(axis=1)[:, None] - 2 * (X @ C.T)
+        + (C * C).sum(axis=1)[None, :]
+    )
+    return np.argmin(d, axis=1)
 
 
 def _assign_arrow(em: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Assignment via an Arrow-batched NumPy matmul — the very-large-k
-    path (k in the tens of thousands): per batch one int64
-    ``|x|^2 - 2 X @ C.T + |c|^2`` and an argmin, instead of a k-way
-    row blowup. int64 throughout (micro-coords <= ~2e6, dot terms
-    <= 64 * 4e12 — exact), and ``np.argmin`` takes the FIRST minimum,
-    i.e. ties to the lower cluster id — bit-identical to
-    ``_assign_join`` (pinned by test_kmeans_assign_paths_identical)."""
+    """(vec_id, cluster): each vector's nearest centroid via one
+    map-only Arrow kernel (see ``_nearest``) — no N*k row blowup and
+    no shuffle, so k may run to the tens of thousands."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from pyspark.sql.types import (
-        ArrayType, LongType, StructField, StructType,
-    )
-
-    C = np.asarray(centroids, dtype=np.int64)
-    cn = (C * C).sum(axis=1)
-
-    def kernel(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["em"]]
-            )
-            xn = (X * X).sum(axis=1)
-            d = xn[:, None] - 2 * (X @ C.T) + cn[None, :]
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"].astype("int64"),
-                "em": pdf["em"],
-                "cluster": np.argmin(d, axis=1).astype("int64"),
-            })
-
-    out_schema = StructType([
-        StructField("vec_id", LongType()),
-        StructField("em", ArrayType(LongType())),
-        StructField("cluster", LongType()),
-    ])
     from dce_spark.functions.textops import ensure_scan_parallelism
 
-    return ensure_scan_parallelism(em, key="vec_id").mapInPandas(
-        kernel, out_schema
-    )
+    C = np.asarray(centroids, dtype=np.int64)
+    dim = C.shape[1]
+
+    def kernel(batches):
+        for tbl in batches:
+            if not tbl.num_rows:
+                continue
+            yield pa.record_batch({
+                "vec_id": tbl.column("vec_id"),
+                "cluster": pa.array(
+                    _nearest(_micro_matrix(tbl, dim), C), type=pa.int64()
+                ),
+            })
+
+    return ensure_scan_parallelism(
+        em.select("vec_id", "em"), key="vec_id"
+    ).mapInArrow(kernel, "vec_id long, cluster long")
 
 
 def _update_partials_arrow(em: DataFrame, centroids: list[list[int]]):
     """Fused assignment + per-cluster coordinate partial sums for one
-    Lloyd update, as ONE map-only Arrow kernel: each batch computes the
-    exact-integer argmin assignment (|x|^2 - 2 X C^T + |c|^2, first
-    minimum = ties to the lower cluster id — the same decision as
-    ``_assign_join``/``_assign_arrow``) and emits at most k*dim partial
-    rows (cluster, pos, s, c). Replaces assignment -> full-corpus
-    struct-min shuffle -> posexplode of dim rows per vector -> hash
-    aggregate (guide §2.3: aggregate before you shuffle — the exchange
-    now carries k*dim-row partials per task instead of the corpus).
-    Integer sums are associative, so the reduced (s, c) are identical
-    under any partitioning."""
+    Lloyd update, as ONE map-only Arrow kernel: each batch takes the
+    ``_nearest`` assignment (the same decision as ``_assign_arrow``)
+    and emits at most k*dim partial rows (cluster, pos, s, c) — the
+    exchange carries k*dim-row partials per task instead of the corpus
+    (guide §2.3: aggregate before you shuffle). Integer sums are
+    associative, so the reduced (s, c) are identical under any
+    partitioning."""
     import numpy as np
     import pyarrow as pa
 
+    from dce_spark.functions.textops import ensure_scan_parallelism
+
     C = np.asarray(centroids, dtype=np.int64)
     k, dim = C.shape
-    cn = (C * C).sum(axis=1)
 
     def kernel(batches):
         for tbl in batches:
-            n = tbl.num_rows
-            if not n:
+            if not tbl.num_rows:
                 continue
-            X = (
-                tbl.column("em").flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64).reshape(n, dim)
-            )
-            xn = (X * X).sum(axis=1)
-            d = xn[:, None] - 2 * (X @ C.T) + cn[None, :]
-            a = np.argmin(d, axis=1)
+            X = _micro_matrix(tbl, dim)
+            a = _nearest(X, C)
             s = np.zeros((k, dim), dtype=np.int64)
             np.add.at(s, a, X)
             c = np.bincount(a, minlength=k)
@@ -724,8 +700,6 @@ def _update_partials_arrow(em: DataFrame, centroids: list[list[int]]):
                 ),
             })
 
-    from dce_spark.functions.textops import ensure_scan_parallelism
-
     return ensure_scan_parallelism(
         em.select("vec_id", "em"), key="vec_id"
     ).select("em").mapInArrow(
@@ -733,26 +707,11 @@ def _update_partials_arrow(em: DataFrame, centroids: list[list[int]]):
     )
 
 
-def _pick_assign(assign_via: str, k: int):
-    """'join' (struct-min, pure Catalyst), 'arrow' (NumPy matmul), or
-    'auto' (the default): arrow. The matmul path is map-only — no N*k
-    row blowup, no per-vector struct-min shuffle — so it wins at every
-    k, and above a few hundred clusters the join path's N*k plan is
-    not sane at all (the VERDICT-flagged 50k-cluster case). 'join'
-    stays available explicitly as the pure-Catalyst reference path.
-    Both paths are bit-identical (pinned by
-    test_kmeans_assign_paths_identical)."""
-    if assign_via == "join":
-        return _assign_join
-    return _assign_arrow
-
-
 def kmeans_fit(
     embeddings: DataFrame,
     k: int = 4,
     n_iters: int = 2,
     dim: int = 64,
-    assign_via: str = "auto",
     sample_mod: int | None = None,
 ) -> list[list[int]]:
     """Fit Lloyd's k-means and return the FINAL centroids as k lists
@@ -764,19 +723,17 @@ def kmeans_fit(
 
     * initial centroids are the ``k`` lowest-vec_id vectors (j = rank);
     * assignment is argmin of exact integer squared distance with ties
-      to the lower cluster id (struct-min — no k cap);
+      to the lower cluster id (``_nearest`` — no k cap);
     * centroid updates take floor(sum/count) per coordinate (computed
       in double, exact below 2^53), and a cluster that loses all its
       members keeps its previous centroid.
 
-    Scale shape: per iteration one broadcast of the k*dim-integer
-    centroid table into the assignment join, one posexplode +
-    (cluster, pos) hash aggregation with map-side partials, and a
+    Scale shape: per iteration the k*dim-integer centroids ride the
+    closure of one map-only Arrow kernel that assigns each batch and
+    emits k*dim-row partial sums (``_update_partials_arrow``), one
+    (cluster, pos) hash aggregation of those partials, and a
     k*dim-row collect — the standard k-means control-plane scalar
-    (MLlib's runs the same loop). ``assign_via="arrow"`` swaps the
-    broadcast-join argmin for a NumPy matmul per Arrow batch (the
-    tens-of-thousands-of-clusters regime; identical output).
-    ``sample_mod=m`` fits the update phase on the deterministic
+    (MLlib's runs the same loop). ``sample_mod=m`` fits the update phase on the deterministic
     1/m id-slice (``vec_id % m == 0``) — the 10^12-row path, where
     scanning the full corpus ``n_iters`` times to place centroids is
     waste; the final full-corpus assignment is unaffected by HOW the
@@ -801,8 +758,7 @@ def kmeans_fit(
     centroids = [list(r.em) for r in init]
     for _ in range(n_iters):
         # fused assignment + k*dim-row partial sums per task (see
-        # _update_partials_arrow) — identical integer (s, c) to the
-        # former assignment -> posexplode -> groupBy chain
+        # _update_partials_arrow)
         sums = (
             _update_partials_arrow(em_fit, centroids)
             .groupBy("cluster", "pos")
@@ -825,7 +781,6 @@ def kmeans_embeddings(
     k: int = 4,
     n_iters: int = 2,
     dim: int = 64,
-    assign_via: str = "auto",
     sample_mod: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding column — the clustering pass
@@ -834,13 +789,8 @@ def kmeans_embeddings(
     pruning where the candidates actually live). Returns
     (vec_id, cluster); see ``kmeans_fit`` for the model semantics and
     the scale shape."""
-    centroids = kmeans_fit(
-        embeddings, k, n_iters, dim, assign_via, sample_mod
-    )
-    assign = _pick_assign(assign_via, k)
-    return assign(_quantize_embeddings(embeddings), centroids).select(
-        "vec_id", F.col("cluster").cast("long")
-    )
+    centroids = kmeans_fit(embeddings, k, n_iters, dim, sample_mod)
+    return _assign_arrow(_quantize_embeddings(embeddings), centroids)
 
 
 def split_bits(cnt: int, cap: int, max_bits: int = 16) -> int:
@@ -861,7 +811,7 @@ def semdedup(
     embeddings: DataFrame, k: int = 4, n_iters: int = 1, dim: int = 64,
     threshold: float = 0.95, max_cluster_size: int | None = None,
     sub_planes: int = 16, keep_policy: str = "min_id",
-    assign_via: str = "auto", sample_mod: int | None = None,
+    sample_mod: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): k-means shards the
@@ -923,13 +873,8 @@ def semdedup(
 
     if keep_policy not in ("min_id", "centroid_far"):
         raise ValueError(f"unknown keep_policy {keep_policy!r}")
-    centroids = kmeans_fit(
-        embeddings, k, n_iters, dim, assign_via, sample_mod
-    )
-    assign = _pick_assign(assign_via, k)
-    assigned = assign(
-        _quantize_embeddings(embeddings), centroids
-    ).select("vec_id", F.col("cluster").cast("long"))
+    centroids = kmeans_fit(embeddings, k, n_iters, dim, sample_mod)
+    assigned = _assign_arrow(_quantize_embeddings(embeddings), centroids)
     withv = assigned.join(
         embeddings.select(
             F.col("vec_id").cast("long").alias("vec_id"), "embedding"
@@ -1075,7 +1020,6 @@ def ivf_topk(
     n_iters: int = 1,
     dim: int = 64,
     n_probes: int = 2,
-    assign_via: str = "auto",
 ) -> DataFrame:
     """IVF (inverted-file) ANN: a coarse k-means quantizer routes each
     candidate into ONE inverted list (its nearest centroid); a query
@@ -1091,8 +1035,8 @@ def ivf_topk(
     corpus. A candidate lives in exactly one list, so a (query, cand)
     pair is produced at most once regardless of ``n_probes`` — no
     dedup pass needed (unlike multi-table LSH). At 10^12 rows
-    ``n_clusters`` scales with N / target-list-size (the struct-min /
-    Arrow assignment has no k cap) and the fit phase runs over a
+    ``n_clusters`` scales with N / target-list-size (the Arrow
+    assignment has no k cap) and the fit phase runs over a
     deterministic sample.
 
     Deterministic end to end: kmeans_fit is integer-exact, probe
@@ -1102,14 +1046,10 @@ def ivf_topk(
     """
     from pyspark.sql.window import Window
 
-    centroids = kmeans_fit(
-        embeddings, n_clusters, n_iters, dim, assign_via
-    )
-    assign = _pick_assign(assign_via, n_clusters)
+    centroids = kmeans_fit(embeddings, n_clusters, n_iters, dim)
     em = _quantize_embeddings(embeddings)
     cands = (
-        assign(em.filter(F.col("vec_id") >= n_queries), centroids)
-        .select("vec_id", "cluster")
+        _assign_arrow(em.filter(F.col("vec_id") >= n_queries), centroids)
         .join(
             embeddings.select(
                 F.col("vec_id").cast("long").alias("vec_id"),

@@ -1,15 +1,18 @@
 """Text-analysis + deduplication operators over a documents table.
 
-All operators are pure Catalyst expressions (split/transform/aggregate/
-md5/window) — whole-stage-codegen-friendly, no Python on the hot path.
-Each has a matching ANSI-SQL oracle in __spark_entry__.py.
+Most operators are Catalyst expressions (split/transform/aggregate/
+md5/window). The hash-heavy ones — shingling, MinHash, SimHash and the
+DSIR features — are map-only Arrow kernels instead: md5 at C speed in
+the Python worker, a worker-resident memo for Zipf-repeated grams, and
+no explode or shuffle. Each operator has a matching ANSI-SQL oracle in
+__spark_entry__.py.
 
 Scale notes:
 * exact_dedup / fingerprint: one hash-shuffle on the group key; at
   10^12 rows group by md5(text) (fixed 32-byte key) rather than raw
   text to keep shuffle rows small.
-* minhash: shingle explode -> 8 per-seed min-aggregations in ONE
-  groupBy pass (map-side partial aggregation does the heavy lifting);
+* minhash: one mapInArrow pass takes each document's per-seed min
+  md5 over its shingles and hashes the bands (no explode, no groupBy);
   band hashes then bucket candidates without any pairwise join.
 * ngram_jaccard: pairwise join restricted to a blocking key (source)
   so the candidate space stays bounded; the general path is
@@ -76,12 +79,29 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 # process survives across tasks, so Zipf-repeated shingles/tokens/
 # grams hash ONCE per worker instead of once per occurrence (the
 # bench corpus measures ~93%% duplicate 3-shingles; real crawls are
-# also heavily Zipf). Bounded: cleared wholesale past the cap —
-# deterministic values, so eviction can never change a result.
-_MINHASH_SIG_CACHE: dict = {}
-_SIMHASH_MASK_CACHE: dict = {}
-_DSIR_BUCKET_CACHE: dict = {}
-_HASH_CACHE_MAX = 1_000_000
+# also heavily Zipf). Bounded by BYTES, not entries: each cache key
+# holds at most _WORKER_CACHE_BYTES // entry_bytes entries, where
+# entry_bytes is the tracemalloc-measured footprint of one entry
+# (key string + value + dict slot), and is cleared wholesale past
+# that cap — deterministic values, so eviction can never change a
+# result.
+_WORKER_CACHE_BYTES = 128 << 20
+_WORKER_CACHES: dict = {}
+_INT_ENTRY_BYTES = 192  # one gram -> int (SimHash mask, DSIR bucket)
+
+
+def _minhash_entry_bytes(n_seeds: int) -> int:
+    """One cached shingle: n_seeds 16-byte digests in a list."""
+    return 256 + 56 * n_seeds
+
+
+def _worker_cache(key, entry_bytes: int) -> tuple[dict, int]:
+    """(cache, cap) for one worker-resident memo; callers clear the
+    dict before inserting once ``len(cache) >= cap``."""
+    return (
+        _WORKER_CACHES.setdefault(key, {}),
+        _WORKER_CACHE_BYTES // entry_bytes,
+    )
 
 
 _BLOOM_BITS_PER_WORD = 63  # bits 0..62 only: bit 63 is the BIGINT
@@ -1002,12 +1022,6 @@ def _doc_shingles_arrow(
     ).mapInArrow(kernel, schema)
 
 
-def shingle_table(documents: DataFrame, k: int = 3) -> DataFrame:
-    return _doc_shingles_arrow(documents, k, with_source=True).select(
-        "doc_id", "source", F.explode("shingles").alias("shingle")
-    )
-
-
 def ngram_jaccard_pairs(
     documents: DataFrame, k: int = 3, threshold: float = 0.1,
     max_df: int = 64,
@@ -1109,16 +1123,23 @@ def _minhash_bands_arrow(
     lexicographic min over lowercase hex strings; duplicate shingles
     cannot change a min, so skipping array_distinct is value-neutral.
     Docs that produce no shingle (null text or < k tokens) emit no row,
-    exactly like the groupBy over an empty explode."""
+    exactly like the groupBy over an empty explode.
+
+    Raises ValueError unless ``n_bands`` divides ``n_seeds``: a
+    remainder seed would otherwise fall outside every band."""
     import pyarrow as pa
 
+    if n_bands < 1 or n_seeds % n_bands != 0:
+        raise ValueError("n_bands must divide n_seeds")
     r = n_seeds // n_bands
 
     def kernel(batches):
         from hashlib import md5
 
         bases = [md5(f"{s}:".encode()) for s in range(n_seeds)]
-        cache = _MINHASH_SIG_CACHE.setdefault(n_seeds, {})
+        cache, cap = _worker_cache(
+            ("minhash", n_seeds), _minhash_entry_bytes(n_seeds)
+        )
         for tbl in batches:
             ids = tbl.column("doc_id").to_pylist()
             texts = tbl.column("text").to_pylist()
@@ -1139,7 +1160,7 @@ def _minhash_bands_arrow(
                     sh = join(toks[j:j + k])
                     digs = cache.get(sh)
                     if digs is None:
-                        if len(cache) > _HASH_CACHE_MAX:
+                        if len(cache) >= cap:
                             cache.clear()
                         b = sh.encode("utf-8")
                         digs = []
@@ -1175,44 +1196,21 @@ def _minhash_bands_arrow(
 
 def minhash_bands(
     documents: DataFrame, n_seeds: int = 8, k: int = 3,
-    portable_hash: bool = True,
 ) -> DataFrame:
-    """MinHash signature (lexicographic/numeric min per seed) + 2 LSH
-    band hashes of 4 rows each. Candidate duplicate groups share a band.
-
-    ``portable_hash=True`` (the oracled default) derives hashes from md5
-    hex digests so the exact same values are computable in ANSI SQL.
-    ``portable_hash=False`` is the production path: xxhash64 (JVM
-    intrinsic, no string materialization) — same algorithm, different
-    hash family, ~2x cheaper per token at corpus scale."""
-    if portable_hash:
-        # map-only Arrow kernel (see _minhash_bands_arrow): no explode,
-        # no groupBy shuffle, md5 at C speed — identical values
-        sig = _minhash_bands_arrow(documents, n_seeds, 2, k)
-        return sig.select(
-            "doc_id",
-            F.element_at("bands", 1).alias("band_a"),
-            F.element_at("bands", 2).alias("band_b"),
-        )
-    sh = shingle_table(documents, k)
-    seed_hash = lambda s: F.xxhash64(  # noqa: E731
-        F.lit(f"{s}:"), F.col("shingle")
-    )
-    band_hash = lambda cols: F.xxhash64(*cols)  # noqa: E731
-    cast = lambda c: c.cast("string")  # noqa: E731
-    aggs = [F.min(seed_hash(s)).alias(f"m{s}") for s in range(n_seeds)]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    half = n_seeds // 2
-    band_a = band_hash([F.col(f"m{s}") for s in range(0, half)])
-    band_b = band_hash([F.col(f"m{s}") for s in range(half, n_seeds)])
+    """MinHash signature (lexicographic min per seed) + 2 LSH band
+    hashes of n_seeds/2 rows each. Candidate duplicate groups share a
+    band. Hashes derive from md5 hex digests so the exact same values
+    are computable in ANSI SQL (see ``_minhash_bands_arrow``)."""
+    sig = _minhash_bands_arrow(documents, n_seeds, 2, k)
     return sig.select(
-        "doc_id", cast(band_a).alias("band_a"), cast(band_b).alias("band_b")
+        "doc_id",
+        F.element_at("bands", 1).alias("band_a"),
+        F.element_at("bands", 2).alias("band_b"),
     )
 
 
 def minhash_band_table(
-    documents: DataFrame, n_seeds: int = 8, n_bands: int = 2,
-    k: int = 3, portable_hash: bool = True,
+    documents: DataFrame, n_seeds: int = 8, n_bands: int = 2, k: int = 3,
 ) -> DataFrame:
     """General (bands x rows) MinHash LSH in LONG form: one
     (doc_id, band) row per band — the tunable API behind the fixed
@@ -1222,28 +1220,8 @@ def minhash_band_table(
     P(candidate) = 1-(1-j^r)^b); n_seeds must divide into n_bands.
     At n_bands=2 the band values are bit-identical to
     minhash_bands' band_a/band_b."""
-    if n_seeds % n_bands != 0:
-        raise ValueError("n_bands must divide n_seeds")
-    r = n_seeds // n_bands
-    if portable_hash:
-        # map-only Arrow kernel (see _minhash_bands_arrow): no explode,
-        # no groupBy shuffle, md5 at C speed — identical values
-        sig = _minhash_bands_arrow(documents, n_seeds, n_bands, k)
-        return sig.select("doc_id", F.explode("bands").alias("band"))
-    sh = shingle_table(documents, k)
-    seed_hash = lambda s: F.xxhash64(  # noqa: E731
-        F.lit(f"{s}:"), F.col("shingle")
-    )
-    band_hash = lambda cols: F.xxhash64(*cols)  # noqa: E731
-    cast = lambda c: c.cast("string")  # noqa: E731
-    aggs = [F.min(seed_hash(s)).alias(f"m{s}") for s in range(n_seeds)]
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    bands = F.array(*[
-        cast(band_hash([F.col(f"m{s}")
-                        for s in range(b * r, (b + 1) * r)]))
-        for b in range(n_bands)
-    ])
-    return sig.select("doc_id", F.explode(bands).alias("band"))
+    sig = _minhash_bands_arrow(documents, n_seeds, n_bands, k)
+    return sig.select("doc_id", F.explode("bands").alias("band"))
 
 
 def minhash_dedup(
@@ -1326,12 +1304,12 @@ def dsir_weights(
             from hashlib import md5
 
             pre = f"{salt}:".encode()
-            cache = _DSIR_BUCKET_CACHE.setdefault((salt, B), {})
+            cache, cap = _worker_cache(("dsir", salt, B), _INT_ENTRY_BYTES)
 
             def bucket_of(g: str):
                 b = cache.get(g)
                 if b is None:
-                    if len(cache) > _HASH_CACHE_MAX:
+                    if len(cache) >= cap:
                         cache.clear()
                     h = md5(pre + g.encode("utf-8")).hexdigest()
                     b = int(h[:8], 16) % B
@@ -1413,16 +1391,15 @@ def dsir_weights(
 def minhash_incremental_dedup(
     new_docs: DataFrame, stored_bands: DataFrame,
     n_seeds: int = 8, n_bands: int = 2, k: int = 3,
-    portable_hash: bool = True,
 ) -> DataFrame:
     """Cross-crawl incremental near-dup gate — the MinHash analogue of
     the historical Bloom gate (streaming/stream.py): a NEW crawl batch
     is deduped against an already-signed history WITHOUT recomputing
     history signatures. ``stored_bands`` is the persisted
     minhash_band_table output for the historical corpus ((doc_id, band)
-    long form; must be built with the same n_seeds/n_bands/k/hash
-    family, and doc_ids must be unique across history + new — monotone
-    crawl ids satisfy both).
+    long form; must be built with the same n_seeds/n_bands/k, and
+    doc_ids must be unique across history + new — monotone crawl ids
+    satisfy both).
 
     Decision semantics are EXACTLY batch minhash_dedup over the union
     corpus restricted to the new batch's rows (when historical ids
@@ -1441,7 +1418,6 @@ def minhash_incremental_dedup(
     """
     new_bands = minhash_band_table(
         new_docs, n_seeds=n_seeds, n_bands=n_bands, k=k,
-        portable_hash=portable_hash,
     ).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "band",
@@ -1564,14 +1540,14 @@ def simhash64(documents: DataFrame) -> DataFrame:
     def kernel(batches):
         from hashlib import md5
 
-        cache = _SIMHASH_MASK_CACHE  # worker-resident, see above
+        cache, cap = _worker_cache("simhash", _INT_ENTRY_BYTES)
         shifts = np.arange(64, dtype=np.uint64)
         weights = (np.uint64(1) << shifts)
 
         def mask_of(tok: str):
             m = cache.get(tok)
             if m is None:
-                if len(cache) > _HASH_CACHE_MAX:
+                if len(cache) >= cap:
                     cache.clear()
                 m = int(md5(tok.encode("utf-8")).hexdigest()[15::-1], 16)
                 cache[tok] = m
@@ -2578,7 +2554,8 @@ def boilerplate_lines(
     rule, because a nav row is not content on the first page that
     shipped it either. Lines below the threshold survive everywhere,
     so page-specific text is never touched. Blank (whitespace-only)
-    lines are paragraph STRUCTURE and always survive in place.
+    lines are paragraph STRUCTURE and always survive in place, and a
+    page whose host is NULL belongs to no site, so it keeps every line.
 
     Plan shape: posexplode -> distinct(line-key, doc) with map-side
     partials (per-page repetition of a line collapses before the
@@ -2611,8 +2588,10 @@ def boilerplate_lines(
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     ).withColumn("_lh", F.xxhash64(F.col("_host"), F.col("line")))
     blank = F.trim(F.col("line")) == ""
+    # a NULL host is no site: its lines never count as template
+    # (xxhash64 of a NULL host is still non-null, so filter explicitly)
     boiler = (
-        lines.filter(~blank)
+        lines.filter(~blank & F.col("_host").isNotNull())
         .select("_lh", "doc_id")
         .distinct()
         .groupBy("_lh")

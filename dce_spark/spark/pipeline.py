@@ -74,26 +74,6 @@ def salt_partitions(df: DataFrame, num_partitions: int, salt_factor: int = 4) ->
     return df.repartition(num_partitions * salt_factor, F.xxhash64("url"))
 
 
-def salt_partitions_two_tier(
-    df: DataFrame,
-    num_partitions: int,
-    salt_factor: int = 4,
-    big_page_bytes: int = 1_000_000,
-) -> DataFrame:
-    """Cost-per-row skew variant: multi-MB pages cost 10-100x a median
-    page, so hash placement alone leaves variance (one unlucky task can
-    draw several). Big pages are round-robined (exactly uniform, at most
-    ceil(n_big/P) per task); the rest hash on xxhash64(url). Each row
-    crosses one exchange; both legs share the downstream map plan."""
-    p = num_partitions * salt_factor
-    is_big = F.length("html") > big_page_bytes
-    big = df.filter(is_big).repartition(p)  # round-robin: exact spread
-    small = df.filter(~is_big | F.col("html").isNull()).repartition(
-        p, F.xxhash64("url")
-    )
-    return small.unionByName(big)
-
-
 def extract_pages(df: DataFrame, mode: str = "both",
                   num_partitions: int | None = None,
                   salt_factor: int = 4) -> DataFrame:

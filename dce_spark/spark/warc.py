@@ -353,16 +353,20 @@ class _MemberRangeStream(io.RawIOBase):
         return b""
 
 
-def _open_local(path: str):
-    """Binary file handle for a local path / file: URI; None when the
-    scheme is non-local (caller falls back to the buffered source)."""
+def _local_path(path: str) -> str:
+    """Filesystem path of a local path / file: URI; ValueError naming
+    the scheme for anything else (route object-store archives through
+    a mount or a localization step first)."""
     from urllib.parse import urlparse, unquote
 
     u = urlparse(path)
-    if u.scheme in ("", "file"):
-        p = unquote(u.path) if u.scheme == "file" else path
-        return open(p, "rb")
-    return None
+    if u.scheme == "file":
+        return unquote(u.path)
+    if u.scheme == "":
+        return path
+    raise ValueError(
+        f"read_warc reads local paths only, not {u.scheme!r} URIs"
+    )
 
 
 def read_warc(
@@ -384,9 +388,9 @@ def read_warc(
     the range; a single-stream ``.gz`` or plain ``.warc`` file cannot
     be split safely, so the range at offset 0 streams the whole file
     (still through a file handle, never a whole-file buffer) and the
-    other ranges find no owned boundary and emit nothing. Non-local
-    URI schemes fall back to buffering one archive per task (the old
-    binaryFile behavior, minus the listing).
+    other ranges find no owned boundary and emit nothing. Only local
+    paths and ``file:`` URIs are read: any other scheme raises
+    ValueError on the driver before the listing runs.
 
     ``flush_bytes`` bounds the parser's in-flight row buffer per task
     (see module doc); the downstream extraction kernel re-chunks by its
@@ -397,6 +401,7 @@ def read_warc(
 
     from dce_spark.spark.schema import PAGES_SCHEMA
 
+    _local_path(path)  # fail on the driver, not inside a task
     meta = spark.read.format("binaryFile").load(path).select(
         "path", "length"
     )
@@ -431,16 +436,7 @@ def read_warc(
         for pdf in it:
             for rec in pdf.itertuples(index=False):
                 start, end = int(rec.start), int(rec.end)
-                f = _open_local(rec.path)
-                if f is None:
-                    # matches the WET sink's documented local/shared-
-                    # filesystem posture: route object-store paths
-                    # through a mount or an fsspec localization step
-                    raise NotImplementedError(
-                        "non-local WARC paths need a filesystem "
-                        "mount; localize the archives first"
-                    )
-                with f:
+                with open(_local_path(rec.path), "rb") as f:
                     head = f.read(len(_GZ_MAGIC))
                     is_gz_member = head == _GZ_MAGIC
                     if not is_gz_member:

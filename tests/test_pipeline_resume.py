@@ -61,26 +61,6 @@ def test_manifest_lineage_counters(spark, pages_path, tmp_path_factory):
     assert all(r.wall_ms >= 0 for r in rows)
 
 
-def test_two_tier_routing_spreads_big_pages(spark):
-    from dce_spark.spark.pipeline import salt_partitions_two_tier
-
-    rows = [(f"https://h/{i}", b"x" * 2_000_000) for i in range(8)] + [
-        (f"https://s/{i}", b"y" * 100) for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, ["url", "html"])
-    routed = salt_partitions_two_tier(df, num_partitions=4, salt_factor=2,
-                                      big_page_bytes=1_000_000)
-    assert routed.count() == 108
-    per_part = (
-        routed.withColumn("big", F.length("html") > 1_000_000)
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(F.sum(F.col("big").cast("int")).alias("n_big"))
-        .collect()
-    )
-    assert max(r.n_big for r in per_part) <= 1  # 8 big pages, 8+ slots
-
-
 def test_salting_spreads_hot_domain(spark):
     # 40% of urls share one host; after the salted exchange no partition
     # should hold a grossly disproportionate share of rows

@@ -429,15 +429,15 @@ def test_semdedup_bounded_pair_group_key(spark):
 
 def test_ivf_topk_plan_bucketed_no_cartesian(spark):
     """IVF ANN stays a bucketed equi-join on the cluster id: no
-    CartesianProduct anywhere. The default assignment is the map-only
-    Arrow matmul (no N*k row blowup, no per-vector struct-min
-    shuffle); no row-at-a-time Python anywhere."""
+    CartesianProduct anywhere. The assignment is the map-only Arrow
+    matmul (no N*k row blowup, no per-vector struct-min shuffle); no
+    row-at-a-time Python anywhere."""
     import __spark_entry__ as e
 
     plan = _plan(e.queries()["emb_ivf_topk"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    assert "MapInPandas" in plan  # the matmul assignment path
+    assert "MapInArrow" in plan  # the matmul assignment path
 
 
 def test_boilerplate_strip_plan_no_window(spark):

@@ -200,6 +200,22 @@ def test_truncated_archive_is_total():
 
 
 @pytest.mark.spark
+def test_read_warc_rejects_remote_scheme_on_driver(spark):
+    """An object-store URI fails on the driver with a ValueError that
+    names the scheme, before the listing or any executor task runs."""
+    from dce_spark.spark.warc import read_warc
+
+    sc = spark.sparkContext
+    sc.setJobGroup("warc-scheme", "read_warc scheme check")
+    try:
+        with pytest.raises(ValueError, match="s3a"):
+            read_warc(spark, "s3a://b/x.warc.gz")
+        assert sc.statusTracker().getJobIdsForGroup("warc-scheme") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.spark
 def test_read_warc_into_extraction(spark, tmp_path):
     from dce_spark.spark.pipeline import extract_pages
     from dce_spark.spark.warc import read_warc

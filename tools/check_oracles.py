@@ -45,7 +45,7 @@ def main():
     import __spark_entry__ as entrymod
     from dce_spark.spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
 
     con = duckdb.connect()
     for t in TABLES:
