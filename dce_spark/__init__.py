@@ -17,9 +17,15 @@ re-architected for Spark:
                             DataFrame transformations.
 - ``dce_spark.streaming`` — Structured Streaming wrapper of the same
                             extraction batch function.
+
+Importing it installs ``_importcache``: unchanged zips are not re-read per task.
 """
 
 __version__ = "0.1.0"
+
+from dce_spark import _importcache
+
+_importcache.install()
 
 from dce_spark.core.api import extract_article, extract_content, extract_page
 

@@ -91,7 +91,8 @@ def extract_batches(
             cols["primary_script"].append(rec["primary_script"])
             cols["content_links"].append(rec.get("content_links", []))
             cols["bytes_in"].append(nbytes)
-            budget += nbytes + len(rec["extracted_text"]) + len(rec["article_text"])
+            budget += (nbytes + len(rec["extracted_text"]) + len(rec["article_text"])
+                       + len(rec.get("extracted_md") or ""))
             if budget >= _OUT_BUDGET_BYTES or len(cols["url"]) >= _OUT_BUDGET_ROWS:
                 out = flush()
                 if out is not None:
