@@ -1,8 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride through the pipeline as `binary` columns with a
-metadata struct; decode / feature-extraction are Arrow-batched
-`mapInPandas` kernels. The actual codecs are NOT available in this
+metadata struct; decode, feature extraction, resize, frame sampling
+and header parsing are Arrow-batched row maps (`udf.map_rows`), each
+total per row: a failure is a status value or no output rows, never a
+task failure. The actual codecs are NOT available in this
 environment, so the decode step is a clearly-marked stub behind
 `DecodeBackend`: the default `FakeDecodeBackend` produces deterministic
 features from the bytes (so the Spark-side plumbing — schema,
@@ -14,12 +16,12 @@ methods.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from dce_spark.spark.udf import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -87,72 +89,58 @@ class FakeDecodeBackend(DecodeBackend):
         return rng.integers(0, 256, size=(32, 16, 16, 3), dtype=np.uint8)
 
 
-def _extract_features(
-    pdf_iter: Iterator[pd.DataFrame], backend: DecodeBackend
-) -> Iterator[pd.DataFrame]:
-    for pdf in pdf_iter:
-        rows = []
-        for rec in pdf.itertuples(index=False):
-            payload = rec.payload
-            if payload is None:
-                rows.append((rec.media_id, rec.kind, "empty", None, None))
-                continue
-            sha1 = hashlib.sha1(payload).hexdigest()
-            try:
-                if rec.kind == "image":
-                    arr = backend.decode_image(bytes(payload)).astype(np.float32)
-                    # 12-dim feature: per-channel mean/std + downsampled
-                    feat = np.concatenate(
-                        [
-                            arr.mean(axis=(0, 1)) / 255.0,
-                            arr.std(axis=(0, 1)) / 255.0,
-                            arr.reshape(-1)[:6] / 255.0,
-                        ]
-                    )
-                elif rec.kind == "audio":
-                    sig = backend.decode_audio(bytes(payload))
-                    if len(sig) < 8:  # too short to frame: zero-pad
-                        sig = np.pad(sig, (0, 8 - len(sig)))
-                    # frame-level energy profile (8 frames) + rms + zc rate
-                    frames = sig[: len(sig) - (len(sig) % 8)].reshape(8, -1)
-                    feat = np.concatenate(
-                        [
-                            np.sqrt((frames**2).mean(axis=1)),
-                            [float(np.sqrt((sig**2).mean()))],
-                            [float((np.diff(np.sign(sig)) != 0).mean())],
-                        ]
-                    ).astype(np.float32)
-                else:
-                    rows.append((rec.media_id, rec.kind, "unsupported", None, sha1))
-                    continue
-                rows.append(
-                    (rec.media_id, rec.kind, "ok", feat.astype(np.float32).tolist(), sha1)
-                )
-            except NotImplementedError:
-                rows.append((rec.media_id, rec.kind, "no_backend", None, sha1))
-            except Exception as exc:  # total per row, like extraction
-                rows.append(
-                    (rec.media_id, rec.kind, f"error:{type(exc).__name__}",
-                     None, sha1)
-                )
-        yield pd.DataFrame(
-            rows, columns=["media_id", "kind", "status", "feature", "payload_sha1"]
-        )
-
-
 def media_features(
     media: DataFrame, backend: DecodeBackend | None = None
 ) -> DataFrame:
-    """media table -> per-item feature vectors via Arrow-batched
-    mapInPandas. Pure per-row map: salting/partitioning follows the
+    """media table -> per-item feature vectors via an Arrow-batched
+    row map. Pure per-row map: salting/partitioning follows the
     same url/id-hash strategy as page extraction."""
     backend = backend or FakeDecodeBackend()
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _extract_features(it, backend)
+    def features(media_id, kind, payload):
+        if payload is None:
+            yield media_id, kind, "empty", None, None
+            return
+        status, feat = "ok", None
+        try:
+            if kind == "image":
+                arr = backend.decode_image(payload).astype(np.float32)
+                # 12-dim feature: per-channel mean/std + downsampled
+                feat = np.concatenate(
+                    [
+                        arr.mean(axis=(0, 1)) / 255.0,
+                        arr.std(axis=(0, 1)) / 255.0,
+                        arr.reshape(-1)[:6] / 255.0,
+                    ]
+                )
+            elif kind == "audio":
+                sig = backend.decode_audio(payload)
+                if len(sig) < 8:  # too short to frame: zero-pad
+                    sig = np.pad(sig, (0, 8 - len(sig)))
+                # frame-level energy profile (8 frames) + rms + zc rate
+                frames = sig[: len(sig) - (len(sig) % 8)].reshape(8, -1)
+                feat = np.concatenate(
+                    [
+                        np.sqrt((frames**2).mean(axis=1)),
+                        [float(np.sqrt((sig**2).mean()))],
+                        [float((np.diff(np.sign(sig)) != 0).mean())],
+                    ]
+                )
+            else:
+                status = "unsupported"
+        except NotImplementedError:
+            status = "no_backend"
+        except Exception as exc:  # total per row, like extraction
+            status = f"error:{type(exc).__name__}"
+        yield (
+            media_id, kind, status,
+            None if feat is None else feat.astype(np.float32).tolist(),
+            hashlib.sha1(payload).hexdigest(),
+        )
 
-    pruned = media.select("media_id", "kind", "payload")
-    return pruned.mapInPandas(kernel, FEATURE_SCHEMA)
+    return map_rows(
+        media.select("media_id", "kind", "payload"), FEATURE_SCHEMA, features
+    )
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -187,35 +175,23 @@ def resize_images(
     reinterpret the binary without metadata lookups."""
     backend = backend or FakeDecodeBackend()
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                if rec.payload is None or rec.kind != "image":
-                    rows.append((rec.media_id, "skipped", None, None, None))
-                    continue
-                try:
-                    arr = backend.decode_image(bytes(rec.payload))
-                    small = np.ascontiguousarray(
-                        _nn_resize(arr, out_h, out_w).astype(np.uint8)
-                    )
-                    rows.append(
-                        (rec.media_id, "ok", out_h, out_w, small.tobytes())
-                    )
-                except NotImplementedError:
-                    rows.append((rec.media_id, "no_backend", None, None, None))
-                except Exception as exc:
-                    rows.append(
-                        (rec.media_id, f"error:{type(exc).__name__}",
-                         None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "status", "height", "width", "pixels"],
+    def resize(media_id, kind, payload):
+        if payload is None or kind != "image":
+            yield media_id, "skipped", None, None, None
+            return
+        try:
+            arr = backend.decode_image(payload)
+            small = np.ascontiguousarray(
+                _nn_resize(arr, out_h, out_w).astype(np.uint8)
             )
+            yield media_id, "ok", out_h, out_w, small.tobytes()
+        except NotImplementedError:
+            yield media_id, "no_backend", None, None, None
+        except Exception as exc:
+            yield media_id, f"error:{type(exc).__name__}", None, None, None
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, RESIZED_SCHEMA
+    return map_rows(
+        media.select("media_id", "kind", "payload"), RESIZED_SCHEMA, resize
     )
 
 
@@ -236,28 +212,18 @@ def pdf_text(media: DataFrame) -> DataFrame:
     so unlike image/audio this path is NOT stubbed)."""
     from dce_spark.core.pdftext import extract_pdf_text
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                if rec.kind != "pdf":
-                    rows.append((rec.media_id, "skipped", None))
-                    continue
-                try:
-                    text = extract_pdf_text(
-                        bytes(rec.payload) if rec.payload is not None else b""
-                    )
-                    rows.append(
-                        (rec.media_id, "ok" if text else "empty", text)
-                    )
-                except Exception as exc:
-                    rows.append(
-                        (rec.media_id, f"error:{type(exc).__name__}", None)
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "status", "text"])
+    def text(media_id, kind, payload):
+        if kind != "pdf":
+            yield media_id, "skipped", None
+            return
+        try:
+            t = extract_pdf_text(payload if payload is not None else b"")
+            yield media_id, "ok" if t else "empty", t
+        except Exception as exc:
+            yield media_id, f"error:{type(exc).__name__}", None
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, PDF_TEXT_SCHEMA
+    return map_rows(
+        media.select("media_id", "kind", "payload"), PDF_TEXT_SCHEMA, text
     )
 
 
@@ -281,38 +247,32 @@ def sample_frames(
     """Uniform video frame sampling: decode -> pick n uniformly-spaced
     frames -> one output row per frame (a per-row flatMap; row counts
     multiply by n_frames, so the Arrow batch size bounds still hold).
-    The sampling index math is real; only the codec is backend-pluggable."""
+    Total per row: a video whose decode raises, or that decodes to zero
+    frames, yields no rows. The sampling index math is real; only the
+    codec is backend-pluggable."""
     backend = backend or FakeDecodeBackend()
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                if rec.payload is None or rec.kind != "video":
-                    continue
-                try:
-                    vid = backend.decode_video(bytes(rec.payload))
-                except NotImplementedError:
-                    continue
-                t, h, w = vid.shape[0], vid.shape[1], vid.shape[2]
-                picks = (
-                    (np.arange(n_frames) * (t / n_frames))
-                    .astype(np.int64)
-                    .clip(0, t - 1)
-                )
-                for out_i, src_i in enumerate(picks):
-                    rows.append(
-                        (rec.media_id, out_i, int(src_i), h, w,
-                         np.ascontiguousarray(vid[src_i]).tobytes())
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "source_frame",
-                         "height", "width", "pixels"],
-            )
+    def frames(media_id, kind, payload):
+        if payload is None or kind != "video":
+            return
+        try:
+            vid = backend.decode_video(payload)
+            t, h, w = vid.shape[:3]
+        except Exception:  # no backend or undecodable: no frames
+            return
+        if t == 0:
+            return
+        picks = (
+            (np.arange(n_frames) * (t / n_frames))
+            .astype(np.int64)
+            .clip(0, t - 1)
+        )
+        for out_i, src_i in enumerate(picks):
+            yield (media_id, out_i, int(src_i), h, w,
+                   np.ascontiguousarray(vid[src_i]).tobytes())
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, FRAME_SCHEMA
+    return map_rows(
+        media.select("media_id", "kind", "payload"), FRAME_SCHEMA, frames
     )
 
 
@@ -415,43 +375,22 @@ def image_meta(media: DataFrame) -> DataFrame:
     `meta_matches` cross-checks the parsed dimensions against the
     table's DECLARED width/height metadata (null when either side is
     unknown), the standard corpus-hygiene check for mislabeled media.
-    Arrow-batched mapInPandas; per-row work is bounded header
+    Arrow-batched row map; per-row work is bounded header
     scanning, so the kernel is payload-size-independent except for
     pathological JPEGs (marker scan capped by segment lengths)."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = (
-                    bytes(rec.payload) if rec.payload is not None else b""
-                )
-                fmt, w, h = _parse_image_header(payload)
-                matches = None
-                # declared metadata arrives as NaN (not None) for null
-                # ints in pandas — notna covers both representations
-                if (
-                    w is not None
-                    and h is not None
-                    and pd.notna(rec.width)
-                    and pd.notna(rec.height)
-                ):
-                    matches = bool(
-                        w == int(rec.width) and h == int(rec.height)
-                    )
-                rows.append(
-                    (rec.media_id, fmt, w, h, len(payload), matches)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "format", "width", "height",
-                    "n_bytes", "meta_matches",
-                ],
-            )
+    def meta(media_id, payload, width, height):
+        payload = payload or b""
+        fmt, w, h = _parse_image_header(payload)
+        matches = None
+        if None not in (w, h, width, height):
+            matches = w == width and h == height
+        yield media_id, fmt, w, h, len(payload), matches
 
-    cols = ["media_id", "payload", "width", "height"]
-    return media.select(*cols).mapInPandas(kernel, IMAGE_META_SCHEMA)
+    return map_rows(
+        media.select("media_id", "payload", "width", "height"),
+        IMAGE_META_SCHEMA, meta,
+    )
 
 
 def _parse_audio_header(b: bytes):
@@ -527,25 +466,12 @@ def audio_meta(media: DataFrame) -> DataFrame:
     channels, duration_ms, n_bytes) — WAV exact, MP3 CBR-estimated;
     same codec-free discipline as image_meta."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = (
-                    bytes(rec.payload) if rec.payload is not None else b""
-                )
-                fmt, sr, ch, dur = _parse_audio_header(payload)
-                rows.append(
-                    (rec.media_id, fmt, sr, ch, dur, len(payload))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "format", "sample_rate",
-                         "channels", "duration_ms", "n_bytes"],
-            )
+    def meta(media_id, payload):
+        payload = payload or b""
+        yield (media_id, *_parse_audio_header(payload), len(payload))
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, AUDIO_META_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), AUDIO_META_SCHEMA, meta
     )
 
 
@@ -628,23 +554,12 @@ def video_meta(media: DataFrame) -> DataFrame:
     from mvhd, dims from tkhd), WebM magic; same codec-free
     discipline as image_meta/audio_meta."""
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                payload = (
-                    bytes(rec.payload) if rec.payload is not None else b""
-                )
-                fmt, w, h, dur = _parse_video_header(payload)
-                rows.append((rec.media_id, fmt, w, h, dur, len(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "format", "width", "height",
-                         "duration_ms", "n_bytes"],
-            )
+    def meta(media_id, payload):
+        payload = payload or b""
+        yield (media_id, *_parse_video_header(payload), len(payload))
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, VIDEO_META_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"), VIDEO_META_SCHEMA, meta
     )
 
 

@@ -21,7 +21,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
+from hashlib import md5
+
 from pyspark.sql import DataFrame, functions as F
+
+from dce_spark.spark.udf import map_rows
 
 STOPWORDS_EN = (
     "the", "and", "of", "to", "a", "in", "is", "it", "for", "on",
@@ -93,6 +98,13 @@ _INT_ENTRY_BYTES = 192  # one gram -> int (SimHash mask, DSIR bucket)
 def _minhash_entry_bytes(n_seeds: int) -> int:
     """One cached shingle: n_seeds 16-byte digests in a list."""
     return 256 + 56 * n_seeds
+
+
+@functools.lru_cache(maxsize=None)
+def _minhash_bases(n_seeds: int) -> tuple:
+    """One md5 state per seed, primed with its ``"{seed}:"`` prefix
+    (copied per shingle); built once per worker."""
+    return tuple(md5(f"{s}:".encode()) for s in range(n_seeds))
 
 
 def _worker_cache(key, entry_bytes: int) -> tuple[dict, int]:
@@ -444,75 +456,36 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
     # code-point-order-preserving; top_bigram_frac = (cnt * 2.0) / n
     # in the same op order (a null-text doc reproduces the Catalyst
     # size(null) = -1 row: n_tokens -1, frac -0.0).
-    import pyarrow as pa
-
-    def kernel(batches):
-        for tbl in batches:
-            ids = tbl.column("doc_id").to_pylist()
-            texts = tbl.column("text").to_pylist()
-            out = {
-                "doc_id": [], "n_tokens": [], "dup_token_frac": [],
-                "top_bigram": [], "top_bigram_cnt": [],
-                "top_bigram_frac": [],
-            }
-            for doc_id, t in zip(ids, texts):
-                if t is None:
-                    out["doc_id"].append(doc_id)
-                    out["n_tokens"].append(-1)
-                    out["dup_token_frac"].append(0.0)
-                    out["top_bigram"].append(None)
-                    out["top_bigram_cnt"].append(0)
-                    out["top_bigram_frac"].append(0.0 * 2.0 / -1.0)
-                    continue
-                toks = t.split(" ")
-                n = len(toks)
-                n_dist = len(set(toks))
-                counts: dict = {}
-                for a, b in zip(toks, toks[1:]):
-                    bg = a + " " + b
-                    counts[bg] = counts.get(bg, 0) + 1
-                if counts:
-                    neg, bg = min(
-                        (-c, g) for g, c in counts.items()
-                    )
-                    cnt = -neg
-                else:
-                    bg, cnt = None, 0
-                out["doc_id"].append(doc_id)
-                out["n_tokens"].append(n)
-                out["dup_token_frac"].append(
-                    1.0 - float(n_dist) / float(n)
-                )
-                out["top_bigram"].append(bg)
-                out["top_bigram_cnt"].append(cnt)
-                out["top_bigram_frac"].append(
-                    (float(cnt) * 2.0) / float(n)
-                )
-            yield pa.record_batch({
-                "doc_id": pa.array(out["doc_id"], type=pa.int64()),
-                "n_tokens": pa.array(out["n_tokens"], type=pa.int64()),
-                "dup_token_frac": pa.array(
-                    out["dup_token_frac"], type=pa.float64()
-                ),
-                "top_bigram": pa.array(
-                    out["top_bigram"], type=pa.string()
-                ),
-                "top_bigram_cnt": pa.array(
-                    out["top_bigram_cnt"], type=pa.int64()
-                ),
-                "top_bigram_frac": pa.array(
-                    out["top_bigram_frac"], type=pa.float64()
-                ),
-            })
-
-    return ensure_scan_parallelism(
-        documents.select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
+    def signals(doc_id, t):
+        if t is None:
+            yield doc_id, -1, 0.0, None, 0, 0.0 * 2.0 / -1.0
+            return
+        toks = t.split(" ")
+        n = len(toks)
+        n_dist = len(set(toks))
+        counts: dict = {}
+        for a, b in zip(toks, toks[1:]):
+            bg = a + " " + b
+            counts[bg] = counts.get(bg, 0) + 1
+        if counts:
+            neg, bg = min((-c, g) for g, c in counts.items())
+            cnt = -neg
+        else:
+            bg, cnt = None, 0
+        yield (
+            doc_id, n, 1.0 - float(n_dist) / float(n), bg, cnt,
+            (float(cnt) * 2.0) / float(n),
         )
-    ).mapInArrow(
-        kernel,
+
+    return map_rows(
+        ensure_scan_parallelism(
+            documents.select(
+                F.col("doc_id").cast("long").alias("doc_id"), "text"
+            )
+        ),
         "doc_id long, n_tokens long, dup_token_frac double,"
         " top_bigram string, top_bigram_cnt long, top_bigram_frac double",
+        signals,
     )
 
 
@@ -655,41 +628,19 @@ def compression_ratio(documents: DataFrame) -> DataFrame:
     repetitive/boilerplate text compresses far below prose. No SQL
     analogue exists (DuckDB has no zlib), so this is a library op with
     pytest coverage rather than a driver-oracled query. Arrow-batched
-    mapInPandas; level 6 to match the usual pipeline setting."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    row map; level 6 to match the usual pipeline setting."""
+    import zlib
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("raw_bytes", T.LongType()),
-            T.StructField("compressed_bytes", T.LongType()),
-            T.StructField("ratio", T.DoubleType()),
-        ]
+    def ratio(doc_id, text):
+        raw = (text or "").encode("utf-8")
+        comp = len(zlib.compress(raw, 6))
+        yield doc_id, len(raw), comp, (comp / len(raw)) if raw else 1.0
+
+    return map_rows(
+        documents.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
+        "doc_id long, raw_bytes long, compressed_bytes long, ratio double",
+        ratio,
     )
-
-    def kernel(it):
-        import zlib
-
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                raw = (rec.text or "").encode("utf-8")
-                comp = len(zlib.compress(raw, 6))
-                rows.append(
-                    (
-                        int(rec.doc_id),
-                        len(raw),
-                        comp,
-                        (comp / len(raw)) if raw else 1.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "raw_bytes", "compressed_bytes", "ratio"],
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(kernel, schema)
 
 
 def kmv_distinct_sketch(documents: DataFrame, k: int = 64) -> DataFrame:
@@ -980,8 +931,6 @@ def _doc_shingles_arrow(
     ``" ".join`` is concat_ws; dict.fromkeys preserves the
     first-occurrence order of array_distinct; null text or < k tokens
     yields an empty array exactly like the guarded sequence()."""
-    import pyarrow as pa
-
     cols = [F.col("doc_id").cast("long").alias("doc_id")]
     schema = "doc_id long"
     if with_source:
@@ -990,36 +939,16 @@ def _doc_shingles_arrow(
     cols.append(F.col("text"))
     schema += ", shingles array<string>"
 
-    def kernel(batches):
-        for tbl in batches:
-            ids = tbl.column("doc_id").to_pylist()
-            texts = tbl.column("text").to_pylist()
-            srcs = (
-                tbl.column("source").to_pylist() if with_source else None
-            )
-            join = " ".join
-            out: list = []
-            for t in texts:
-                if t is None:
-                    out.append([])
-                    continue
-                toks = t.split(" ")
-                n = len(toks)
-                if n < k:
-                    out.append([])
-                    continue
-                out.append(list(dict.fromkeys(
-                    join(toks[j:j + k]) for j in range(n - k + 1)
-                )))
-            data = {"doc_id": pa.array(ids, type=pa.int64())}
-            if with_source:
-                data["source"] = pa.array(srcs, type=pa.string())
-            data["shingles"] = pa.array(out, type=pa.list_(pa.string()))
-            yield pa.record_batch(data)
+    def shingles(doc_id, *rest):
+        *source, t = rest
+        toks = [] if t is None else t.split(" ")
+        yield (doc_id, *source, list(dict.fromkeys(
+            " ".join(toks[j:j + k]) for j in range(len(toks) - k + 1)
+        )))
 
-    return ensure_scan_parallelism(
-        documents.select(*cols)
-    ).mapInArrow(kernel, schema)
+    return map_rows(
+        ensure_scan_parallelism(documents.select(*cols)), schema, shingles
+    )
 
 
 def ngram_jaccard_pairs(
@@ -1127,71 +1056,56 @@ def _minhash_bands_arrow(
 
     Raises ValueError unless ``n_bands`` divides ``n_seeds``: a
     remainder seed would otherwise fall outside every band."""
-    import pyarrow as pa
-
     if n_bands < 1 or n_seeds % n_bands != 0:
         raise ValueError("n_bands must divide n_seeds")
     r = n_seeds // n_bands
 
-    def kernel(batches):
-        from hashlib import md5
-
-        bases = [md5(f"{s}:".encode()) for s in range(n_seeds)]
+    def bands(doc_id, t):
+        if t is None:
+            return
+        toks = t.split(" ")
+        n = len(toks)
+        if n < k:
+            return
+        bases = _minhash_bases(n_seeds)
         cache, cap = _worker_cache(
             ("minhash", n_seeds), _minhash_entry_bytes(n_seeds)
         )
-        for tbl in batches:
-            ids = tbl.column("doc_id").to_pylist()
-            texts = tbl.column("text").to_pylist()
-            out_ids: list = []
-            out_bands: list = []
-            join = " ".join
-            for doc_id, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = t.split(" ")
-                n = len(toks)
-                if n < k:
-                    continue
-                # compare raw digests: hex encoding is byte-order-
-                # preserving, so the min digest IS the min hex string
-                mins: list = [None] * n_seeds
-                for j in range(n - k + 1):
-                    sh = join(toks[j:j + k])
-                    digs = cache.get(sh)
-                    if digs is None:
-                        if len(cache) >= cap:
-                            cache.clear()
-                        b = sh.encode("utf-8")
-                        digs = []
-                        for s in range(n_seeds):
-                            d = bases[s].copy()
-                            d.update(b)
-                            digs.append(d.digest())
-                        cache[sh] = digs
-                    for s in range(n_seeds):
-                        h = digs[s]
-                        if mins[s] is None or h < mins[s]:
-                            mins[s] = h
-                out_ids.append(doc_id)
-                hexes = [m.hex() for m in mins]
-                out_bands.append([
-                    md5("".join(hexes[b * r:(b + 1) * r]).encode())
-                    .hexdigest()
-                    for b in range(n_bands)
-                ])
-            yield pa.record_batch({
-                "doc_id": pa.array(out_ids, type=pa.int64()),
-                "bands": pa.array(
-                    out_bands, type=pa.list_(pa.string())
-                ),
-            })
+        # compare raw digests: hex encoding is byte-order-preserving,
+        # so the min digest IS the min hex string
+        mins: list = [None] * n_seeds
+        for j in range(n - k + 1):
+            sh = " ".join(toks[j:j + k])
+            digs = cache.get(sh)
+            if digs is None:
+                if len(cache) >= cap:
+                    cache.clear()
+                raw = sh.encode("utf-8")
+                digs = []
+                for base in bases:
+                    d = base.copy()
+                    d.update(raw)
+                    digs.append(d.digest())
+                cache[sh] = digs
+            for s in range(n_seeds):
+                h = digs[s]
+                if mins[s] is None or h < mins[s]:
+                    mins[s] = h
+        hexes = [m.hex() for m in mins]
+        yield doc_id, [
+            md5("".join(hexes[b * r:(b + 1) * r]).encode()).hexdigest()
+            for b in range(n_bands)
+        ]
 
-    return ensure_scan_parallelism(
-        documents.select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
-    ).mapInArrow(kernel, "doc_id long, bands array<string>")
+    return map_rows(
+        ensure_scan_parallelism(
+            documents.select(
+                F.col("doc_id").cast("long").alias("doc_id"), "text"
+            )
+        ),
+        "doc_id long, bands array<string>",
+        bands,
+    )
 
 
 def minhash_bands(
@@ -1294,59 +1208,37 @@ def dsir_weights(
         mapInArrow pass (guide §4.2 + §2.3 map-side pre-aggregation):
         the former Catalyst shape exploded every unigram/bigram
         occurrence and paid an md5 + base-16 conv per row; the kernel
-        hashes each distinct gram once per batch (C-speed md5, Zipf
+        hashes each distinct gram once per worker (C-speed md5, Zipf
         cache) and emits per-(doc, bucket) counts, so every downstream
         aggregate sums ``c`` instead of counting occurrence rows —
         identical integers, far fewer rows through the exchanges."""
-        import pyarrow as pa
 
-        def kernel(batches):
-            from hashlib import md5
-
-            pre = f"{salt}:".encode()
+        def bucket_counts(doc_id, t):
+            if t is None:
+                return
             cache, cap = _worker_cache(("dsir", salt, B), _INT_ENTRY_BYTES)
-
-            def bucket_of(g: str):
+            toks = t.split(" ")
+            counts: dict = {}
+            for g in toks + [a + " " + b for a, b in zip(toks, toks[1:])]:
                 b = cache.get(g)
                 if b is None:
                     if len(cache) >= cap:
                         cache.clear()
-                    h = md5(pre + g.encode("utf-8")).hexdigest()
-                    b = int(h[:8], 16) % B
-                    cache[g] = b
-                return b
+                    h = md5(f"{salt}:{g}".encode("utf-8")).hexdigest()
+                    b = cache[g] = int(h[:8], 16) % B
+                counts[b] = counts.get(b, 0) + 1
+            for b, c in counts.items():
+                yield doc_id, b, c
 
-            for tbl in batches:
-                ids = tbl.column("doc_id").to_pylist()
-                texts = tbl.column("text").to_pylist()
-                out_id: list = []
-                out_b: list = []
-                out_c: list = []
-                for doc_id, t in zip(ids, texts):
-                    if t is None:
-                        continue
-                    toks = t.split(" ")
-                    counts: dict = {}
-                    for g in toks:
-                        b = bucket_of(g)
-                        counts[b] = counts.get(b, 0) + 1
-                    for a, b2 in zip(toks, toks[1:]):
-                        b = bucket_of(a + " " + b2)
-                        counts[b] = counts.get(b, 0) + 1
-                    out_id.extend([doc_id] * len(counts))
-                    out_b.extend(counts.keys())
-                    out_c.extend(counts.values())
-                yield pa.record_batch({
-                    "doc_id": pa.array(out_id, type=pa.int64()),
-                    "bucket": pa.array(out_b, type=pa.int64()),
-                    "c": pa.array(out_c, type=pa.int64()),
-                })
-
-        return ensure_scan_parallelism(
-            df.select(
-                F.col("doc_id").cast("long").alias("doc_id"), "text"
-            )
-        ).mapInArrow(kernel, "doc_id long, bucket long, c long")
+        return map_rows(
+            ensure_scan_parallelism(
+                df.select(
+                    F.col("doc_id").cast("long").alias("doc_id"), "text"
+                )
+            ),
+            "doc_id long, bucket long, c long",
+            bucket_counts,
+        )
 
     raw_feats = feats(raw)
     raw_cnt = raw_feats.groupBy("bucket").agg(

@@ -12,7 +12,7 @@ input_hint specifies:
   around ~50 KB (matching the pages.zip range), 20% of rows on one
   hot domain to exercise skew salting.
 
-Generation is distributed (spark.range -> mapInArrow) so the corpus
+Generation is distributed (spark.range -> row map) so the corpus
 scales with the cluster rather than the driver.
 """
 
@@ -21,12 +21,10 @@ from __future__ import annotations
 import datetime as _dt
 import random
 import zipfile
-from collections.abc import Iterator
 from pathlib import Path
 
-import pyarrow as pa
-
 from dce_spark.spark.schema import PAGES_SCHEMA
+from dce_spark.spark.udf import map_rows
 
 SEED = 42
 REFERENCE_HTML = Path("/root/reference/html")
@@ -182,23 +180,12 @@ def build_pages_df(spark, n_synthetic: int, include_fixtures: bool = True,
             partitions = max(par, 4)
     parts = partitions
 
-    def _gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            rows = [synth_page(i, seed) for i in ids]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "url": [r["url"] for r in rows],
-                    "warc_ts": [r["warc_ts"] for r in rows],
-                    "html": [r["html"] for r in rows],
-                    "text": [r["text"] for r in rows],
-                    "lang": [r["lang"] for r in rows],
-                }
-            )
+    def _gen(i):
+        r = synth_page(i, seed)
+        yield r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]
 
-    synth = (
-        spark.range(0, n_synthetic, numPartitions=parts)
-        .mapInArrow(_gen, PAGES_SCHEMA)
+    synth = map_rows(
+        spark.range(0, n_synthetic, numPartitions=parts), PAGES_SCHEMA, _gen
     )
     if not include_fixtures:
         return synth

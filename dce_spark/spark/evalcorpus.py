@@ -30,12 +30,10 @@ from __future__ import annotations
 
 import datetime as _dt
 import random
-from collections.abc import Iterator
-
-import pyarrow as pa
 
 from dce_spark.spark.corpus import _WORDS, _sentence
 from dce_spark.spark.schema import PAGES_SCHEMA
+from dce_spark.spark.udf import map_rows
 
 _TS = _dt.datetime(2025, 6, 1, 12, 0, 0)
 EVAL_SEED = 20250601
@@ -374,24 +372,8 @@ def build_eval_pages_df(spark, n: int = 144):
     """The eval pages as a pages-schema DataFrame (gold column dropped;
     gold lives in the committed eval_gold parquet)."""
 
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = [eval_page(int(i)) for i in batch.column("id").to_pylist()]
-            for r in rows:
-                r.pop("gold_text")
-            yield pa.RecordBatch.from_pylist(
-                rows, schema=pa.schema(
-                    [
-                        ("url", pa.string()),
-                        ("warc_ts", pa.timestamp("us")),
-                        ("html", pa.binary()),
-                        ("text", pa.string()),
-                        ("lang", pa.string()),
-                    ]
-                )
-            )
+    def gen(i):
+        r = eval_page(i)
+        yield r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]
 
-    return (
-        spark.range(0, n, 1, 4)
-        .mapInArrow(gen, PAGES_SCHEMA)
-    )
+    return map_rows(spark.range(0, n, 1, 4), PAGES_SCHEMA, gen)

@@ -1,9 +1,9 @@
 """CleanEval-style evaluation job (reference examples/ce_score.rs).
 
 Spark shape: broadcast equi-join of extracted pages with the gold table
-on stem, then a grouped-map scoring pass (word-LCS is a per-pair DP, the
-one genuinely non-SQL step — Arrow-batched via applyInPandas), then a
-native avg() aggregation. Mirrors:
+on stem, then a per-pair row map (word-LCS is a per-pair DP, the one
+genuinely non-SQL step — Arrow-batched, no shuffle), then a native
+avg() aggregation. Mirrors:
 
 * gold cleanup: drop URL line, strip <h>/<l>/<p> markup, join lines
   (ce_score.rs:48-71);
@@ -12,16 +12,18 @@ native avg() aggregation. Mirrors:
 * word-LCS scaled to ~chars by mean word length (ce_score.rs:73-113);
 * precision = lcs/len(extracted), recall = lcs/len(gold), F1, plus
   Sørensen–Dice bigram similarity (ce_score.rs:150-156);
-* NaN rows dropped before the means (ce_score.rs:185-205).
+* NaN rows dropped before the means (ce_score.rs:185-205); score_pairs
+  itself emits NULL, not NaN, for an undefined score.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+
+from dce_spark.spark.udf import map_rows
 
 _PUNCT_RE = re.compile(r"[^\w\s']")
 _WS_RE = re.compile(r"\s+")
@@ -143,34 +145,30 @@ SCORE_SCHEMA = T.StructType(
 
 
 def score_pairs(extracted: DataFrame, gold: DataFrame) -> DataFrame:
-    """(stem, extracted_text) x (stem, gold_text) -> per-pair scores."""
+    """(stem, extracted_text) x (stem, gold_text) -> per-pair scores.
+
+    A score whose denominator is zero (empty normalized text) is NULL:
+    the pair still counts as a row, and avg() skips the NULL."""
     pairs = extracted.join(F.broadcast(gold), "stem", "inner").select(
         "stem", "extracted_text", "gold_text"
     )
 
-    def _score(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            ext = clean_and_normalize_text(row["extracted_text"] or "")
-            gld = clean_and_normalize_text(clean_gold_text(row["gold_text"] or ""))
-            lcs = word_lcs_chars(gld, ext)
-            # denominators are UTF-8 byte lengths (ce_score.rs:153-154
-            # divides by String::len())
-            ext_len = len(ext.encode("utf-8"))
-            gld_len = len(gld.encode("utf-8"))
-            precision = lcs / ext_len if ext_len else float("nan")
-            recall = lcs / gld_len if gld_len else float("nan")
-            denom = precision + recall
-            f1 = 2.0 * precision * recall / denom if denom else float("nan")
-            out.append(
-                (row["stem"], precision, recall, f1, sorensen_dice(ext, gld))
-            )
-        return pd.DataFrame(
-            out, columns=["stem", "precision", "recall", "f1", "dice"]
-        )
+    def _score(stem, extracted_text, gold_text):
+        ext = clean_and_normalize_text(extracted_text or "")
+        gld = clean_and_normalize_text(clean_gold_text(gold_text or ""))
+        lcs = word_lcs_chars(gld, ext)
+        # denominators are UTF-8 byte lengths (ce_score.rs:153-154
+        # divides by String::len())
+        ext_len = len(ext.encode("utf-8"))
+        gld_len = len(gld.encode("utf-8"))
+        precision = lcs / ext_len if ext_len else None
+        recall = lcs / gld_len if gld_len else None
+        f1 = None
+        if precision is not None and recall is not None and precision + recall:
+            f1 = 2.0 * precision * recall / (precision + recall)
+        yield stem, precision, recall, f1, sorensen_dice(ext, gld)
 
-    # hash-partition pairs across workers; each group is one Arrow batch
-    return pairs.groupBy("stem").applyInPandas(_score, SCORE_SCHEMA)
+    return map_rows(pairs, SCORE_SCHEMA, _score)
 
 
 def mean_scores(scores: DataFrame) -> DataFrame:

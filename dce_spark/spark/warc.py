@@ -8,32 +8,31 @@ plain ``.warc`` both work.
 
 Memory discipline (the 100 TB read):
 
-* **Streaming decompression** — gz archives are decoded through
-  ``gzip.GzipFile`` over the raw buffer (concatenated members read
-  transparently), so the several-GB *decompressed* form of a ~1 GB
-  Common-Crawl archive is never materialized; at any instant the task
-  holds the compressed bytes (the binaryFile row), gzip's window, and
-  ONE record payload.
-* **Bounded row batches** — the kernel flushes accumulated rows to an
-  Arrow batch every ``flush_bytes`` of payload (default 64 MB) instead
-  of accumulating an entire archive's records into one Python list, so
-  peak kernel memory is compressed-row + flush budget, independent of
-  archive size.
+* **Range-chunked input** — the scan lists (path, length) only and
+  each task owns one byte range of one archive, streamed through a
+  file handle: at any instant a task holds one read block, gzip's
+  window and ONE record payload, never the archive (see
+  ``read_warc``).
+* **Bounded row batches** — records go through the shared row-map
+  scaffold (``udf.map_rows``), which flushes an Arrow batch at 2048
+  rows or 48 MB of url + payload bytes, so peak kernel memory is
+  independent of archive size.
 
-Distributed shape: Spark's binaryFile source lists/reads the archives
-(one row per file — WARC's gzip-member framing is not block-splittable,
-so parallelism comes from the many-files layout Common Crawl already
-has: ~1 GB per archive, tens of thousands of archives per crawl), and a
-mapInPandas kernel parses records. Knobs that matter at 100 TB:
+Distributed shape: Spark's binaryFile source lists the archives
+(path and length only), the listing is exploded into byte ranges, and
+a ``mapInArrow`` row map parses the records of each range. WARC's
+gzip-member framing is found by scanning for verified member starts,
+so a many-member ``.warc.gz`` splits across tasks; a single-stream
+``.gz`` or plain ``.warc`` is read whole by the task owning offset 0.
+Knobs that matter at 100 TB:
 
-* file count >= cluster cores (the crawl layout satisfies this);
-* binaryFile caps individual files at 2 GB (Spark's byte-array row
-  limit) — standard crawl archives are ~1 GB compressed, under the cap;
-  re-shard anything bigger upstream;
-* files-per-task packing is governed by
-  ``spark.sql.files.maxPartitionBytes`` / ``openCostInBytes`` — leave
-  maxPartitionBytes at/below the archive size so each task owns one
-  archive and the flush budget is the only per-task buffer.
+* file count x ranges >= cluster cores (the crawl layout, ~1 GB per
+  archive and tens of thousands of archives per crawl, satisfies
+  this);
+* only local paths and ``file:`` URIs are read (a shared mount on a
+  cluster); other schemes raise ValueError on the driver.
+
+``read_wet`` reads ``conversion`` records through the same path.
 """
 
 from __future__ import annotations
@@ -48,7 +47,7 @@ __all__ = ["iter_warc_records", "read_warc", "wet_record_bytes",
 
 _CRLF = b"\r\n"
 
-DEFAULT_FLUSH_BYTES = 64 << 20
+_CHUNK_BYTES = 64 << 20  # byte range per read task
 
 
 def _read_headers(stream) -> dict[bytes, bytes] | None:
@@ -214,29 +213,6 @@ def iter_warc_records(raw, record_types=(b"response",)) -> Iterator[dict]:
         return
 
 
-def _record_batches(
-    content, flush_bytes: int = DEFAULT_FLUSH_BYTES
-) -> Iterator[list[tuple]]:
-    """Parse one archive into row batches of bounded payload size.
-
-    Yields lists of (url, warc_ts, html, None, None) tuples; a batch is
-    flushed as soon as its accumulated html bytes reach ``flush_bytes``,
-    so the caller's peak buffer is O(flush_bytes + one record), not
-    O(archive). Split out from the Spark kernel so the bound is unit-
-    testable without an executor.
-    """
-    rows: list[tuple] = []
-    pending = 0
-    for r in iter_warc_records(content):
-        rows.append((r["url"], r["warc_ts"], r["html"], None, None))
-        pending += len(r["html"])
-        if pending >= flush_bytes:
-            yield rows
-            rows, pending = [], 0
-    if rows:
-        yield rows
-
-
 _GZ_MAGIC = b"\x1f\x8b\x08"
 
 
@@ -365,41 +341,37 @@ def _local_path(path: str) -> str:
     if u.scheme == "":
         return path
     raise ValueError(
-        f"read_warc reads local paths only, not {u.scheme!r} URIs"
+        f"WARC readers read local paths only, not {u.scheme!r} URIs"
     )
 
 
-def read_warc(
-    spark, path: str, flush_bytes: int = DEFAULT_FLUSH_BYTES,
-    chunk_bytes: int = 64 << 20,
-):
-    """WARC archive(s) -> pages DataFrame (url, warc_ts, html, text,
-    lang) via a RANGE-CHUNKED scan + Arrow-batched streaming record
-    parsing.
+def _range_records(path: str, start: int, end: int, record_types):
+    """Records of ``record_types`` owned by the byte range
+    [start, end) of one archive (see ``read_warc``)."""
+    with open(_local_path(path), "rb") as f:
+        if f.read(len(_GZ_MAGIC)) != _GZ_MAGIC:
+            # plain .warc (or foreign compression): not splittable —
+            # the offset-0 range streams the whole file, others own
+            # nothing
+            if start != 0:
+                return
+            f.seek(0)
+            stream = f
+        else:
+            first = (
+                0 if start == 0
+                else _first_member_at_or_after(f, start, end)
+            )
+            if first is None:
+                return
+            stream = io.BufferedReader(_MemberRangeStream(f, first, end))
+        yield from iter_warc_records(stream, record_types)
 
-    Peak task memory is bounded by the flush budget + fixed streaming
-    buffers, independent of archive size: the scan lists (path, length)
-    only — never the file contents — and each task owns the byte range
-    [start, start + chunk_bytes) of one archive. Common-Crawl
-    ``.warc.gz`` archives are one gzip member per record, so a task
-    scans for the first VERIFIED member boundary in its range (magic
-    bytes + zlib header + decompressed ``WARC/`` prefix — false
-    positives are rejected) and streams members whose start lies in
-    the range; a single-stream ``.gz`` or plain ``.warc`` file cannot
-    be split safely, so the range at offset 0 streams the whole file
-    (still through a file handle, never a whole-file buffer) and the
-    other ranges find no owned boundary and emit nothing. Only local
-    paths and ``file:`` URIs are read: any other scheme raises
-    ValueError on the driver before the listing runs.
 
-    ``flush_bytes`` bounds the parser's in-flight row buffer per task
-    (see module doc); the downstream extraction kernel re-chunks by its
-    own byte budget, so the two bounds compose.
-    """
-    import pandas as pd
+def _range_plan(spark, path: str, chunk_bytes: int):
+    """(path, start, end) rows: each archive cut into byte ranges of
+    ``chunk_bytes``, spread over the cluster's cores."""
     from pyspark.sql import functions as F
-
-    from dce_spark.spark.schema import PAGES_SCHEMA
 
     _local_path(path)  # fail on the driver, not inside a task
     meta = spark.read.format("binaryFile").load(path).select(
@@ -426,41 +398,44 @@ def read_warc(
     # count is explicit — AQE would otherwise coalesce the few-KB plan
     # rows into one partition, serializing the (heavy, kernel-side)
     # range reads it cannot see.
-    chunks = chunks.repartition(
+    return chunks.repartition(
         spark.sparkContext.defaultParallelism,
         F.col("path"), F.col("start"),
     )
-    cols = ["url", "warc_ts", "html", "text", "lang"]
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for rec in pdf.itertuples(index=False):
-                start, end = int(rec.start), int(rec.end)
-                with open(_local_path(rec.path), "rb") as f:
-                    head = f.read(len(_GZ_MAGIC))
-                    is_gz_member = head == _GZ_MAGIC
-                    if not is_gz_member:
-                        # plain .warc (or foreign compression): not
-                        # splittable — the offset-0 range streams the
-                        # whole file, others own nothing
-                        if start != 0:
-                            continue
-                        f.seek(0)
-                        stream = f
-                    else:
-                        first = (
-                            0 if start == 0
-                            else _first_member_at_or_after(f, start, end)
-                        )
-                        if first is None:
-                            continue
-                        stream = io.BufferedReader(
-                            _MemberRangeStream(f, first, end)
-                        )
-                    for rows in _record_batches(stream, flush_bytes):
-                        yield pd.DataFrame(rows, columns=cols)
 
-    return chunks.mapInPandas(kernel, PAGES_SCHEMA)
+def read_warc(spark, path: str, chunk_bytes: int = _CHUNK_BYTES):
+    """WARC archive(s) -> pages DataFrame (url, warc_ts, html, text,
+    lang) via a RANGE-CHUNKED scan + Arrow-batched streaming record
+    parsing.
+
+    Peak task memory is bounded by the row-map scaffold's output budget
+    + fixed streaming buffers, independent of archive size: the scan
+    lists (path, length) only — never the file contents — and each
+    task owns the byte range [start, start + chunk_bytes) of one
+    archive. Common-Crawl ``.warc.gz`` archives are one gzip member
+    per record, so a task scans for the first VERIFIED member boundary
+    in its range (magic bytes + zlib header + decompressed ``WARC/``
+    prefix — false positives are rejected) and streams members whose
+    start lies in the range; a single-stream ``.gz`` or plain
+    ``.warc`` file cannot be split safely, so the range at offset 0
+    streams the whole file (still through a file handle, never a
+    whole-file buffer) and the other ranges find no owned boundary and
+    emit nothing. Only local paths and ``file:`` URIs are read: any
+    other scheme raises ValueError on the driver before the listing
+    runs. ``warc_ts`` is the record's WARC-Date as a UTC instant,
+    whatever the session time zone.
+    """
+    from dce_spark.spark.schema import PAGES_SCHEMA
+    from dce_spark.spark.udf import map_rows
+
+    def records(path, start, end):
+        for r in _range_records(path, start, end, (b"response",)):
+            yield r["url"], r["warc_ts"], r["html"], None, None
+
+    return map_rows(
+        _range_plan(spark, path, chunk_bytes), PAGES_SCHEMA, records
+    )
 
 
 # ---------------------------------------------------------------------
@@ -557,37 +532,23 @@ def write_wet_shards(
     )
 
 
-def read_wet(spark, path: str, flush_bytes: int = DEFAULT_FLUSH_BYTES):
+def read_wet(spark, path: str):
     """WET archive(s) -> (url, warc_ts, text) DataFrame — the reader
     side of ``write_wet_shards`` and of Common Crawl's published
-    ``.warc.wet.gz``. Same binaryFile + bounded-batch shape as
-    read_warc; ``conversion`` payloads are bare text (no HTTP header
-    strip)."""
-    import pandas as pd
+    ``.warc.wet.gz``. Same range-chunked path as read_warc, keeping
+    ``conversion`` records; their payloads are bare text (no HTTP
+    header strip)."""
+    from dce_spark.spark.udf import map_rows
 
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-    cols = ["url", "warc_ts", "text"]
+    def records(path, start, end):
+        for r in _range_records(path, start, end, (b"conversion",)):
+            yield (
+                r["url"], r["warc_ts"],
+                r["html"].decode("utf-8", errors="replace"),
+            )
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for rec in pdf.itertuples(index=False):
-                rows: list[tuple] = []
-                pending = 0
-                for r in iter_warc_records(
-                    io.BytesIO(bytes(rec.content)),
-                    record_types=(b"conversion",),
-                ):
-                    text = r["html"].decode("utf-8", errors="replace")
-                    rows.append((r["url"], r["warc_ts"], text))
-                    pending += len(r["html"])
-                    if pending >= flush_bytes:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows, pending = [], 0
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(
-        kernel, "url string, warc_ts timestamp, text string"
+    return map_rows(
+        _range_plan(spark, path, _CHUNK_BYTES),
+        "url string, warc_ts timestamp, text string",
+        records,
     )

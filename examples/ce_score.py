@@ -10,7 +10,7 @@ data/GoldStandard + data/finalrun-input layout), extracts with the CETD
 engine, scores word-LCS precision/recall/F1 + Sørensen–Dice, prints the
 means and throughput. Distributed shape: two file-listing scans on the
 driver, then extraction + scoring run as Spark jobs (broadcast stem
-join -> applyInPandas DP -> native means).
+join -> row-map word-LCS DP -> native means).
 """
 
 from __future__ import annotations

@@ -58,6 +58,21 @@ def test_score_pairs_perfect_extraction(spark):
     assert s.dice == pytest.approx(1.0)
 
 
+
+def test_undefined_scores_are_null(spark):
+    """Empty normalized text makes precision/recall undefined: NULL,
+    not NaN, so the eval query counts the pair and avg() skips it."""
+    gold = spark.createDataFrame(
+        [("a", "http://x\nsome gold words"), ("b", "http://x\n<p></p>")],
+        ["stem", "gold_text"],
+    )
+    extracted = spark.createDataFrame(
+        [("a", "!!!"), ("b", "some words")], ["stem", "extracted_text"]
+    )
+    s = {r.stem: r for r in score_pairs(extracted, gold).collect()}
+    assert (s["a"].precision, s["a"].recall, s["a"].f1) == (None, 0.0, None)
+    assert (s["b"].precision, s["b"].recall, s["b"].f1) == (0.0, None, None)
+
 def test_mean_scores_filters_nan(spark):
     rows = [
         ("a", 0.9, 0.8, 0.85, 0.9),

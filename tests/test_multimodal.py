@@ -95,6 +95,59 @@ def test_sample_frames_uniform(media):
         assert len(bytes(r.pixels)) == r.height * r.width * 3
 
 
+
+def _videos(spark):
+    from dce_spark.functions.multimodal import MEDIA_SCHEMA
+
+    rows = [
+        (i, "video", f"clip {i}".encode(), "video/mp4", None, None, 1000)
+        for i in (1, 2, 3)
+    ]
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+
+
+def test_sample_frames_zero_frame_video_yields_no_frames(spark):
+    """A backend may decode a video to zero frames: that media_id gets
+    no frames (index t-1 = -1 would otherwise kill the task)."""
+    import numpy as np
+
+    from dce_spark.functions.multimodal import (
+        FakeDecodeBackend,
+        sample_frames,
+    )
+
+    class EmptyClip(FakeDecodeBackend):
+        def decode_video(self, payload):
+            if payload == b"clip 2":
+                return np.zeros((0, 16, 16, 3), dtype=np.uint8)
+            return super().decode_video(payload)
+
+    rows = sample_frames(_videos(spark), 4, backend=EmptyClip()).collect()
+    assert sorted((r.media_id, r.frame_idx) for r in rows) == [
+        (m, i) for m in (1, 3) for i in range(4)
+    ]
+
+
+def test_sample_frames_backend_error_yields_no_frames(spark):
+    """Any decode exception (not only NotImplementedError) costs that
+    media_id its frames, never the task."""
+    from dce_spark.functions.multimodal import (
+        FakeDecodeBackend,
+        sample_frames,
+    )
+
+    class Corrupt(FakeDecodeBackend):
+        def decode_video(self, payload):
+            if payload == b"clip 3":
+                raise ValueError("corrupt stream")
+            return super().decode_video(payload)
+
+    rows = sample_frames(_videos(spark), 2, backend=Corrupt()).collect()
+    assert sorted((r.media_id, r.frame_idx) for r in rows) == [
+        (m, i) for m in (1, 2) for i in range(2)
+    ]
+
+
 def _png(w, h):
     return (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
             + w.to_bytes(4, "big") + h.to_bytes(4, "big") + b"\x08\x02")

@@ -1,6 +1,13 @@
-"""extract_batches output chunking (no Spark needed)."""
+"""Row-map scaffold and extract_batches output chunking (no Spark
+needed), plus a guard that keeps the scaffold the only per-row path."""
+
+import ast
+from pathlib import Path
 
 import pyarrow as pa
+import pytest
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from dce_spark.core.api import extract_page
 from dce_spark.spark import udf
@@ -15,14 +22,138 @@ _PAGE = (
     + b"</article></body></html>"
 )
 
+_OUT = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False),
+        T.StructField("s", T.StringType()),
+        T.StructField("b", T.BinaryType()),
+        T.StructField("n", T.DoubleType()),
+    ]
+)
+
+
+def _input(n: int, per_batch: int) -> list[pa.RecordBatch]:
+    ids = list(range(n))
+    return [
+        pa.RecordBatch.from_pydict({"id": ids[i:i + per_batch]})
+        for i in range(0, n, per_batch)
+    ]
+
+
+def _rows(batches) -> list[tuple]:
+    out = []
+    for b in batches:
+        assert b.num_rows > 0  # never an empty batch
+        assert b.schema.equals(to_arrow_schema(_OUT))
+        out.extend(zip(*(c.to_pylist() for c in b.columns)))
+    return out
+
+
+def _fan(i):
+    """0, 1 or 2 rows per input row, str/binary sizes varying with i."""
+    for j in range(i % 3):
+        yield i, "s" * (i % 7), b"b" * j, float(i)
+
+
+def test_map_batches_unbounded_union_and_fanout():
+    out = _rows(udf.map_batches(iter(_input(100, 7)), _OUT, _fan))
+    assert out == [r for i in range(100) for r in _fan(i)]
+    # 0 and n rows per input row: each i contributes i % 3 rows
+    assert len(out) == sum(i % 3 for i in range(100))
+
+
+def test_map_batches_flushes_on_row_cap(monkeypatch):
+    monkeypatch.setattr(udf, "_OUT_BUDGET_ROWS", 10)
+    batches = list(udf.map_batches(iter(_input(100, 7)), _OUT, _fan))
+    assert len(batches) > 5
+    assert all(b.num_rows <= 10 for b in batches)
+    assert _rows(batches) == [r for i in range(100) for r in _fan(i)]
+
+
+def test_map_batches_flushes_on_byte_budget(monkeypatch):
+    budget = 40
+    monkeypatch.setattr(udf, "_OUT_BUDGET_BYTES", budget)
+    batches = list(udf.map_batches(iter(_input(100, 7)), _OUT, _fan))
+    assert len(batches) > 5
+    row_max = max(len(r[1]) + len(r[2]) for i in range(100) for r in _fan(i))
+    for b in batches:
+        rows = _rows([b])
+        sized = sum(len(r[1]) + len(r[2]) for r in rows)
+        # budget plus one row: the row that crossed it closes the batch
+        assert sized <= budget + row_max
+        assert sum(len(r[1]) + len(r[2]) for r in rows[:-1]) < budget
+    assert _rows(batches) == [r for i in range(100) for r in _fan(i)]
+
+
+def test_map_batches_nulls_and_empty_input():
+    def nulls(i):
+        yield i, None, None, None
+
+    out = _rows(udf.map_batches(iter(_input(5, 2)), _OUT, nulls))
+    assert out == [(i, None, None, None) for i in range(5)]
+    assert list(udf.map_batches(iter([]), _OUT, nulls)) == []
+    # input nulls reach fn as None
+    seen = []
+    batch = pa.RecordBatch.from_pydict({"id": [1, None, 3]})
+    list(udf.map_batches(iter([batch]), _OUT, lambda i: seen.append(i) or ()))
+    assert seen == [1, None, 3]
+
+
+def test_map_batches_propagates_exceptions():
+    def boom(i):
+        raise KeyError(i)
+
+    with pytest.raises(KeyError):
+        list(udf.map_batches(iter(_input(3, 3)), _OUT, boom))
+
 
 def test_output_budget_counts_markdown(monkeypatch):
     rec = extract_page(_PAGE, mode="all")
     assert rec["extracted_md"]
-    # one page stays under the budget unless its markdown is counted
-    without_md = len(_PAGE) + len(rec["extracted_text"]) + len(rec["article_text"])
+    # one page stays under the budget unless its markdown is counted;
+    # the budget counts the str/binary OUTPUT values
+    without_md = sum(
+        len(v) for v in ("u1", rec["extracted_text"], rec["article_text"],
+                         rec["status"], rec["primary_script"])
+        if v is not None
+    )
     monkeypatch.setattr(udf, "_OUT_BUDGET_BYTES", without_md + 1)
     batch = pa.RecordBatch.from_pydict({"url": ["u1", "u2"], "html": [_PAGE, _PAGE]})
     out = list(udf.extract_batches(iter([batch]), mode="all"))
     assert [b.num_rows for b in out] == [1, 1]
     assert all(b.column("extracted_md")[0].as_py() == rec["extracted_md"] for b in out)
+
+
+# Kernels that do NumPy work over a whole batch or group, where a
+# per-row scaffold would be slower, plus the scaffold itself and the
+# extraction entry point (kept by name for tracing).
+_DIRECT_KERNELS = {
+    ("spark/udf.py", "map_rows"),
+    ("spark/udf.py", "attach_extraction"),
+    ("functions/textops.py", "simhash64"),
+    ("functions/simsearch.py", "_assign_arrow"),
+    ("functions/simsearch.py", "_update_partials_arrow"),
+    ("functions/simsearch.py", "embedding_dedup"),
+    ("functions/simsearch.py", "semdedup"),
+}
+
+
+def test_row_kernels_go_through_the_scaffold():
+    pkg = Path(udf.__file__).resolve().parent.parent
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)):
+                    continue
+                name = node.func.attr
+                owner = getattr(top, "name", None)
+                if name in ("mapInPandas", "applyInPandas") or (
+                    name in ("mapInArrow", "applyInArrow")
+                    and (rel, owner) not in _DIRECT_KERNELS
+                ):
+                    bad.append(f"{rel}:{node.lineno} {owner}: .{name}(")
+    assert bad == []

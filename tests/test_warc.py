@@ -167,28 +167,6 @@ def test_gzip_truncated_member_keeps_earlier_members():
     assert [r["url"] for r in recs] == ["https://w.test/0", "https://w.test/1"]
 
 
-def test_record_batches_bounded():
-    # one archive, many records, tiny flush budget -> multiple batches,
-    # each bounded by budget + one record, union byte-identical
-    from dce_spark.spark.warc import _record_batches
-
-    n, body = 40, HTML1 * 20  # ~1.2 KB per record
-    raw = b"".join(make_record(f"https://w.test/{i}", body) for i in range(n))
-    budget = 4 * len(body)
-    batches = list(_record_batches(raw, flush_bytes=budget))
-    assert len(batches) > 5  # genuinely chunked
-    for rows in batches:
-        payload = sum(len(r[2]) for r in rows)
-        assert payload <= budget + len(body)  # bound: budget + 1 record
-    flat = [r for rows in batches for r in rows]
-    unbounded = [
-        (r["url"], r["warc_ts"], r["html"], None, None)
-        for r in iter_warc_records(raw)
-    ]
-    assert flat == unbounded
-    assert len(flat) == n
-
-
 def test_truncated_archive_is_total():
     raw = make_warc()
     for cut in (10, len(raw) // 2, len(raw) - 3):
@@ -223,14 +201,64 @@ def test_read_warc_into_extraction(spark, tmp_path):
     (tmp_path / "a.warc").write_bytes(make_warc())
     (tmp_path / "b.warc.gz").write_bytes(gzip.compress(
         make_record("https://w.test/gz", HTML1)))
-    # tiny flush budget: exercises the multi-batch kernel path end-to-end
-    pages = read_warc(spark, str(tmp_path), flush_bytes=16)
+    pages = read_warc(spark, str(tmp_path))
     out = {r.url: r for r in extract_pages(pages).collect()}
     assert set(out) == {"https://w.test/1", "https://w.test/2",
                         "https://w.test/gz"}
     assert all(r.status == "ok" for r in out.values())
     assert "First page body text" in out["https://w.test/1"].extracted_text
 
+
+
+@pytest.mark.spark
+def test_read_warc_many_records_into_extraction(spark, tmp_path):
+    """One archive with more records than one output batch holds
+    (2048 rows): every record comes through the multi-batch path and
+    extracts."""
+    from pyspark.sql import functions as F
+
+    from dce_spark.spark.pipeline import extract_pages
+    from dce_spark.spark.warc import read_warc
+
+    n = 2500
+    (tmp_path / "many.warc.gz").write_bytes(b"".join(
+        gzip.compress(make_record(
+            f"https://m.test/{i}",
+            b"<html><body><p>Page %d body text.</p></body></html>" % i))
+        for i in range(n)
+    ))
+    out = extract_pages(read_warc(spark, str(tmp_path))).agg(
+        F.count("*").alias("n"),
+        F.countDistinct("url").alias("urls"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
+    ).collect()[0]
+    assert (out.n, out.urls, out.ok) == (n, n, n)
+
+
+@pytest.mark.spark
+def test_warc_ts_is_utc_in_any_session_time_zone(spark, tmp_path):
+    """WARC-Date 2025-06-01T12:00:00Z is the same instant whatever the
+    session time zone, for both readers."""
+    from pyspark.sql import functions as F
+
+    from dce_spark.spark.warc import read_warc, read_wet
+
+    (tmp_path / "r.warc").write_bytes(make_record("https://z.test/1", HTML1))
+    wet = tmp_path / "wet"
+    wet.mkdir()
+    (wet / "s.warc.wet").write_bytes(
+        make_record("https://z.test/1", b"text", rtype="conversion"))
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        for tz in ("America/Los_Angeles", "UTC"):
+            spark.conf.set(key, tz)
+            for df in (read_warc(spark, str(tmp_path / "r.warc")),
+                       read_wet(spark, str(wet))):
+                got = df.select(F.unix_timestamp("warc_ts")).collect()
+                assert [r[0] for r in got] == [1748779200], tz
+    finally:
+        spark.conf.set(key, old)
 
 @pytest.mark.spark
 def test_warc_to_curated_chunks_end_to_end(spark, tmp_path):
@@ -367,6 +395,9 @@ def test_wet_round_trip_shards(spark, tmp_path):
     back = {(r.url, r.text) for r in read_wet(spark, out).collect()}
     want = {(u, t) for u, _, t in rows if t is not None}
     assert back == want
+    # local-only, like the writer: a remote scheme fails on the driver
+    with pytest.raises(ValueError, match="s3a"):
+        read_wet(spark, "s3a://b/wet/")
 
 
 def test_wet_truncated_archive_total(tmp_path):
