@@ -6,6 +6,7 @@ Physical plan (the job's ONLY shuffle is the explicit salting exchange):
     Scan parquet/Iceberg [url, html]          (column-pruned, pushed down)
       -> Exchange hashpartitioning(xxhash64(url), P)   (skew defeat)
       -> PythonMapInArrow extract_batches              (the CETD map)
+      -> CollectMetrics per-bucket manifest counters   (observe)
       -> Write bucket=k partitions + manifest commit   (resume unit)
 
 Scale notes (10^12-row framing):
@@ -22,7 +23,7 @@ Scale notes (10^12-row framing):
   per url at bucket granularity. On Iceberg this maps 1:1 to snapshot
   commits + an anti-join on the manifest table.
 * Lineage: per-bucket url/byte/ok/failed counters live in the manifest
-  table, computed as a native groupBy over the extracted output.
+  table; the write job observes them, so no job re-reads the output.
 """
 
 from __future__ import annotations
@@ -30,12 +31,14 @@ from __future__ import annotations
 import datetime as _dt
 import re
 import time
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from dce_spark.spark.schema import EXTRACTED_SCHEMA, MANIFEST_SCHEMA
+from dce_spark.spark.schema import MANIFEST_SCHEMA
 from dce_spark.spark.udf import attach_extraction
 
 __all__ = ["salt_partitions", "extract_pages", "run_pipeline", "read_manifest"]
@@ -48,21 +51,9 @@ def _is_missing_table(exc: Exception) -> bool:
     with condition TABLE_OR_VIEW_NOT_FOUND; both are captured-side
     AnalysisExceptions in PySpark, so match the error condition first
     and the class names in the message as the fallback."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:  # pragma: no cover
-        AnalysisException = ()
     if isinstance(exc, AnalysisException):
-        cond = ""
-        for meth in ("getCondition", "getErrorClass"):
-            try:
-                cond = getattr(exc, meth)() or ""
-                break
-            except Exception:
-                continue
-        if cond in ("TABLE_OR_VIEW_NOT_FOUND", "NO_SUCH_TABLE") or (
-            cond.startswith("TABLE_OR_VIEW_NOT_FOUND")
-        ):
+        cond = exc.getCondition() or ""
+        if cond == "NO_SUCH_TABLE" or cond.startswith("TABLE_OR_VIEW_NOT_FOUND"):
             return True
     msg = str(exc)
     return "NoSuchTable" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg
@@ -84,24 +75,56 @@ def extract_pages(df: DataFrame, mode: str = "both",
 
 
 def _manifest_dir(output_path: str) -> str:
-    return str(Path(output_path) / "_manifest")
+    return output_path.rstrip("/") + "/_manifest"
 
 
 def _data_dir(output_path: str) -> str:
-    return str(Path(output_path) / "data")
+    return output_path.rstrip("/") + "/data"
+
+
+def _manifest_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Manifest rows via Arrow on the driver: no Python task, one file."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(MANIFEST_SCHEMA))
+    return spark.createDataFrame(table, MANIFEST_SCHEMA).coalesce(1)
 
 
 def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
-    mpath = _manifest_dir(output_path)
+    """The committed manifest; empty while no commit has written one.
+    Only a missing path means that: any other failure (unknown URI
+    scheme, unreachable store) raises."""
     try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(mpath)
-    except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(
+            _manifest_dir(output_path)
+        )
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return _manifest_frame(spark, [])
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
     mf = read_manifest(spark, output_path)
     return {r.bucket for r in mf.select("bucket").distinct().collect()}
+
+
+def _observe_counters(df: DataFrame, chunk: list[int]):
+    """The chunk's manifest counters as metrics of the write job itself,
+    one struct per bucket. Spark merges them from successful task
+    attempts only, so a retried task is counted once."""
+    ok = F.col("status") == "ok"
+
+    def counters(b: int):
+        mine = F.col("bucket") == b
+        return F.struct(
+            F.count(F.when(mine, 1)).alias("url_count"),
+            F.coalesce(F.sum(F.when(mine, F.col("bytes_in"))), F.lit(0))
+            .alias("bytes_in"),
+            F.count(F.when(mine & ok, 1)).alias("pages_ok"),
+            F.count(F.when(mine & ~ok, 1)).alias("pages_failed"),
+        ).alias(str(b))
+
+    obs = Observation()
+    return df.observe(obs, *map(counters, chunk)), obs
 
 
 def run_pipeline(
@@ -124,8 +147,11 @@ def run_pipeline(
 
     Input rows are assigned to ``buckets`` deterministic url-hash
     buckets; each commit processes ``buckets_per_commit`` of them,
-    writes their output partitions, then appends manifest rows (the
-    commit point). ``max_commits`` exists for kill-and-rerun tests.
+    writes their output partitions, then appends one manifest row per
+    bucket (the commit point), its counters observed by the data write
+    job. Only a missing manifest path means "nothing committed"; any
+    other failure to read it raises before the first extraction.
+    ``max_commits`` exists for kill-and-rerun tests.
 
     ``sink="table"`` writes through the DataFrameWriterV2 path
     (``writeTo(output_path).overwritePartitions()`` with a
@@ -133,9 +159,10 @@ def run_pipeline(
     is then a catalog table name and ``table_provider`` the table
     format. ``sink="iceberg"`` is that same path with the iceberg
     provider pinned; in environments without the iceberg-spark runtime
-    jar the identical code path is exercised against the session
-    catalog with ``table_provider="parquet"`` (see
-    tests/test_pipeline_resume.py). ``manifest_path`` (REQUIRED for
+    jar the identical code path is exercised against an in-memory V2
+    catalog (tools/memcatalog). The session catalog's V1 tables take
+    the first-contact CTAS but reject ``overwritePartitions``.
+    ``manifest_path`` (REQUIRED for
     table sinks — a table name is not a filesystem path) locates the
     lineage manifests; the parquet sink defaults it to
     ``<output_path>/_manifest``.
@@ -144,15 +171,10 @@ def run_pipeline(
     if sink == "iceberg":
         table_provider = "iceberg"
     if table_sink and manifest_path is None:
-        # Pure-argument validation BEFORE any Spark job runs (the
-        # pre-bucketed input checks below scan metadata/samples —
-        # minutes at crawl scale). output_path is a catalog table NAME
-        # here, not a filesystem path; defaulting the manifest root to
-        # it would drop lineage manifests in a cwd-relative directory
-        # ("catalog.db.tbl/_manifest"), making resume silently depend
-        # on the driver's working directory — a rerun from another cwd
-        # re-extracts everything, a rerun from the same cwd against
-        # different input skips everything.
+        # Checked before any Spark job runs. output_path is a catalog
+        # table NAME here: a manifest root derived from it would be a
+        # cwd-relative directory ("catalog.db.tbl/_manifest"), making
+        # resume depend on the driver's working directory.
         raise ValueError(
             "sink='table'/'iceberg' needs an explicit manifest_path "
             "(a filesystem or object-store URI for the lineage "
@@ -278,19 +300,15 @@ def run_pipeline(
             num_partitions=parallelism,
             salt_factor=salt_factor,
         ).withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int"))
+        extracted, counters = _observe_counters(extracted, chunk)
 
         # Dynamic partition overwrite: rewriting a bucket is idempotent,
         # so a crash between data write and manifest append cannot
         # duplicate urls on rerun (the bucket is simply rewritten).
         if table_sink:
-            # Catalog-table mapping of the same commit protocol: the
-            # table is partitioned by bucket and each chunk lands as
-            # one snapshot (overwritePartitions == dynamic overwrite of
-            # exactly the chunk's buckets); resume reads the manifest
-            # table exactly as in the parquet path. With
-            # table_provider="iceberg" this needs the iceberg-spark
-            # runtime jar; the code path itself is exercised in tests
-            # against the session catalog with a parquet-provider table.
+            # Same protocol on a table partitioned by bucket: each chunk
+            # lands as one snapshot (overwritePartitions == dynamic
+            # overwrite of exactly the chunk's buckets).
             try:
                 extracted.writeTo(output_path).overwritePartitions()
             except Exception as exc:
@@ -316,42 +334,15 @@ def run_pipeline(
             )
 
         wall_ms = int((time.time() - t0) * 1000)
-        try:
-            if table_sink:
-                committed = spark.table(output_path)
-            else:
-                committed = spark.read.parquet(_data_dir(output_path))
-            out = committed.filter(F.col("bucket").isin(chunk))
-        except Exception:
-            # nothing written yet (an entirely-empty first chunk)
-            out = spark.createDataFrame([], EXTRACTED_SCHEMA).withColumn(
-                "bucket", F.lit(0).cast("int")
-            )
-        agg = out.groupBy("bucket").agg(
-            F.count("*").alias("url_count"),
-            F.sum("bytes_in").alias("bytes_in"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias(
-                "pages_ok"
-            ),
-            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias(
-                "pages_failed"
-            ),
-        )
-        # A bucket with zero input rows still needs a manifest row, or
-        # resume would reprocess it forever: left-join the chunk list.
-        chunk_df = spark.createDataFrame(
-            [(int(b),) for b in chunk], "bucket int"
-        )
-        manifest_rows = (
-            chunk_df.join(agg, "bucket", "left")
-            .na.fill(
-                {"url_count": 0, "bytes_in": 0, "pages_ok": 0, "pages_failed": 0}
-            )
-            .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-            .withColumn("committed_at", F.lit(_dt.datetime.now()))
-            .select(*[f.name for f in MANIFEST_SCHEMA.fields])
-        )
-        manifest_rows.write.mode("append").parquet(
+        # The commit point: a row per bucket, also one without input
+        # rows, or resume would reprocess it forever.
+        seen = counters.get
+        now = _dt.datetime.now(_dt.timezone.utc)
+        rows = [
+            dict(bucket=b, **seen[str(b)].asDict(), wall_ms=wall_ms, committed_at=now)
+            for b in chunk
+        ]
+        _manifest_frame(spark, rows).write.mode("append").parquet(
             _manifest_dir(manifest_root)
         )
         commits += 1

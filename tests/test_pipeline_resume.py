@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from dce_spark.spark.corpus import build_pages_df
 from dce_spark.spark.pipeline import (
+    completed_buckets,
     read_extracted,
     read_manifest,
     run_pipeline,
@@ -316,3 +317,238 @@ def test_is_missing_table_classifier():
     assert not _is_missing_table(
         AnalysisException("[INCOMPATIBLE_DATA_FOR_TABLE] bad schema")
     )
+
+
+def _manifest_and_data_counters(spark, manifest_root, committed, buckets):
+    """Per-bucket (url_count, bytes_in, pages_ok, pages_failed) from the
+    manifest, and the same counters from an independent groupBy over
+    the committed rows (zeros for a bucket without rows)."""
+    got = {
+        r.bucket: (r.url_count, r.bytes_in, r.pages_ok, r.pages_failed)
+        for r in read_manifest(spark, manifest_root).collect()
+    }
+    want = {b: (0, 0, 0, 0) for b in range(buckets)}
+    ok = F.col("status") == "ok"
+    for r in committed.groupBy("bucket").agg(
+        F.count("*"),
+        F.sum("bytes_in"),
+        F.sum(ok.cast("long")),
+        F.sum((~ok).cast("long")),
+    ).collect():
+        want[r[0]] = tuple(r[1:])
+    return got, want
+
+
+@pytest.fixture(scope="module")
+def mixed_pages_path(spark, tmp_path_factory):
+    """A few synthetic pages plus an empty and a NULL html row."""
+    from dce_spark.spark.schema import PAGES_SCHEMA
+
+    p = str(tmp_path_factory.mktemp("mixed") / "pages")
+    bad = spark.createDataFrame(
+        [("https://bad.test/empty", None, b"", None, None),
+         ("https://bad.test/null", None, None, None, None)],
+        PAGES_SCHEMA,
+    )
+    build_pages_df(spark, n_synthetic=12, include_fixtures=False).unionByName(
+        bad
+    ).write.parquet(p)
+    return p
+
+
+@pytest.mark.parametrize("sink", ["parquet", "table"])
+def test_manifest_matches_committed_rows(spark, mixed_pages_path, sink,
+                                         tmp_path, monkeypatch):
+    """The counters the write job observes equal a groupBy over what it
+    committed; with far more buckets than rows, empty buckets get a zero
+    row. No input makes extract_page fail, so the kernel marks the two
+    bad.test rows failed. The session catalog's V1 tables take the CTAS
+    but not overwritePartitions, so the table sink commits everything in
+    one chunk here (tools/memcatalog/driver.py checks the same parity
+    across a CTAS and an overwritePartitions commit)."""
+    import pyarrow.compute as pc
+
+    from dce_spark.spark import udf
+
+    real = udf.extract_batches
+
+    def with_failures(batches, mode="both"):
+        for b in real(batches, mode=mode):
+            bad = pc.starts_with(b.column("url"), "https://bad.test/")
+            i = b.schema.get_field_index("status")
+            status = pc.if_else(bad, "error:Injected", b.column("status"))
+            yield b.set_column(i, b.schema.field(i), status)
+
+    monkeypatch.setattr(udf, "extract_batches", with_failures)
+    buckets = 32
+    root = str(tmp_path / "out")
+    if sink == "parquet":
+        run_pipeline(spark, mixed_pages_path, root, buckets=buckets,
+                     buckets_per_commit=16)
+        got, want = _manifest_and_data_counters(
+            spark, root, spark.read.parquet(root + "/data"), buckets
+        )
+    else:
+        db = f"dce_parity_{tmp_path.name}".replace("-", "_")
+        spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / 'wh'}'")
+        try:
+            run_pipeline(spark, mixed_pages_path, f"{db}.extracted",
+                         buckets=buckets, buckets_per_commit=buckets,
+                         sink="table", table_provider="parquet",
+                         manifest_path=root)
+            got, want = _manifest_and_data_counters(
+                spark, root, spark.table(f"{db}.extracted"), buckets
+            )
+        finally:
+            spark.sql(f"DROP DATABASE {db} CASCADE")
+    assert got == want
+    total = spark.read.parquet(mixed_pages_path).count()
+    assert sum(v[0] for v in got.values()) == total
+    assert sum(v[3] for v in got.values()) == 2
+    assert any(v == (0, 0, 0, 0) for v in got.values())
+
+
+def test_bad_manifest_path_raises_before_extraction(spark, pages_path):
+    """Only a missing manifest path means "nothing committed yet"; an
+    unusable manifest_path fails on the driver before the first chunk
+    is extracted, so no table is created."""
+    name = "dce_bad_manifest_probe"
+    try:
+        with pytest.raises(Exception, match="nosuchfs"):
+            run_pipeline(spark, pages_path, name, buckets=4,
+                         buckets_per_commit=4, sink="table",
+                         table_provider="parquet",
+                         manifest_path="nosuchfs://m")
+        assert not spark.catalog.tableExists(name)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_output_dirs_keep_uri_authority():
+    from dce_spark.spark.pipeline import _data_dir, _manifest_dir
+
+    assert _manifest_dir("s3a://bkt/out/") == "s3a://bkt/out/_manifest"
+    assert _data_dir("s3a://bkt/out") == "s3a://bkt/out/data"
+
+
+def test_commit_runs_no_bookkeeping_job(spark, pages_path, tmp_path):
+    """Jobs per commit on parquet input: the salting exchange, the data
+    write (which also yields the manifest counters) and the manifest
+    write. A re-read of the output or a Python-task bookkeeping job
+    raises the count."""
+    sc = spark.sparkContext
+
+    def jobs(name, **kw):
+        sc.setJobGroup(name, name)
+        try:
+            run_pipeline(spark, pages_path, str(tmp_path / name), buckets=4,
+                         buckets_per_commit=2, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    group = f"commit-jobs-{tmp_path.name}"
+    two = jobs(group + "-2")
+    one = jobs(group + "-1", max_commits=1)
+    assert two - one == 3, (one, two)
+
+    # nothing committed yet: the resume check runs no job at all
+    sc.setJobGroup(group + "-0", "resume check")
+    try:
+        assert completed_buckets(spark, str(tmp_path / "none")) == set()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group + "-0") == []
+
+
+def test_committed_at_is_utc_in_any_session_time_zone(spark, pages_path,
+                                                      tmp_path):
+    import time
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/Los_Angeles")
+        t0 = time.time()
+        run_pipeline(spark, pages_path, str(tmp_path / "out"), buckets=4,
+                     buckets_per_commit=2)
+        t1 = time.time()
+        got = [
+            r[0]
+            for r in read_manifest(spark, str(tmp_path / "out"))
+            .select(F.col("committed_at").cast("double"))
+            .collect()
+        ]
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == 4
+    assert all(t0 <= v <= t1 for v in got), (t0, got, t1)
+
+
+_RETRY_DRIVER = r"""
+import os, sys
+
+repo, pages, out, flag = sys.argv[1:5]
+sys.path.insert(0, repo)
+os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
+from pyspark.sql import SparkSession, functions as F
+
+spark = (
+    SparkSession.builder.master("local[2,2]")  # 2 attempts per task
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "4")
+    .getOrCreate()
+)
+from dce_spark.spark import udf
+from dce_spark.spark.pipeline import read_manifest, run_pipeline
+
+real = udf.extract_batches
+
+
+def fail_once(batches, mode="both"):
+    # the first attempt-0 task to emit rows dies right after emitting
+    # them, so its partial counters reached the observed aggregate
+    from pyspark import TaskContext
+
+    for batch in real(batches, mode=mode):
+        yield batch
+        if TaskContext.get().attemptNumber() == 0:
+            try:
+                os.close(os.open(flag, os.O_CREAT | os.O_EXCL))
+            except FileExistsError:
+                continue
+            raise RuntimeError("injected write-task failure")
+
+
+udf.extract_batches = fail_once
+run_pipeline(spark, pages, out, buckets=4, buckets_per_commit=4)
+assert os.path.exists(flag), "no task failed"
+data = spark.read.parquet(out + "/data")
+want = {r.bucket: r[1] for r in data.groupBy("bucket").count().collect()}
+got = {r.bucket: r.url_count for r in read_manifest(spark, out).collect()}
+total = spark.read.parquet(pages).count()
+assert data.count() == total == sum(got.values()), (data.count(), total, got)
+assert got == want, (got, want)
+spark.stop()
+print("RETRY_OK")
+"""
+
+
+def test_retried_write_task_is_counted_once(pages_path, tmp_path):
+    """A write task that fails after emitting its rows and succeeds on
+    retry adds its rows to the manifest once. Runs in a subprocess
+    because task retries need a local[N,F] master."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=str(root))
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_DRIVER, str(root), pages_path,
+         str(tmp_path / "out"), str(tmp_path / "failed_once")],
+        capture_output=True, text=True, timeout=420, cwd=str(root), env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "RETRY_OK" in r.stdout

@@ -21,6 +21,7 @@ jar, workdir = sys.argv[1], sys.argv[2]
 os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
 from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 spark = (
     SparkSession.builder.master("local[4]")
@@ -70,6 +71,22 @@ survived = {
     r.url for r in after.filter("bucket in (0, 1)").select("url").collect()
 }
 assert survived == first_urls
+
+# the counters observed by the CTAS and the overwritePartitions write
+# jobs equal a groupBy over what the table holds
+ok = F.col("status") == "ok"
+want = {
+    r[0]: tuple(r[1:])
+    for r in after.groupBy("bucket").agg(
+        F.count("*"), F.sum("bytes_in"), F.sum(ok.cast("long")),
+        F.sum((~ok).cast("long")),
+    ).collect()
+}
+got = {
+    r.bucket: (r.url_count, r.bytes_in, r.pages_ok, r.pages_failed)
+    for r in read_manifest(spark, mdir).collect()
+}
+assert got == want, (got, want)
 
 # re-extract one committed bucket pair on a fresh manifest dir: dynamic
 # overwrite rewrites those partitions idempotently (no url duplication)
