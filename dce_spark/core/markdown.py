@@ -16,11 +16,16 @@ Semantics mirrored:
   editor bookmarks (utils.rs:290-369). Text nodes are NOT content-
   filtered here (matching filtered_inner_html).
 
-The reference serializes pruned HTML and feeds the htmd converter
-(htmd::HtmlToMarkdown::new(), markdown.rs:119-126); this implementation
-follows the same dataflow — filtered_inner_html string, reparsed and
-converted by the vendored htmd port (dce_spark.core.htmdport), then
-Unicode-trimmed — so the output tracks htmd's default rule table.
+The reference serializes the pruned container and has htmd parse that
+string again (markdown.rs:117-126). This implementation converts the
+pruned container straight from the node table the page was parsed
+into (htmdport.convert_subtree builds the tree that reparse would
+give), and serializes and reparses (filtered_inner_html ->
+htmdport.convert_to_markdown) only a container holding a shape whose
+reparse differs: table-family, select/option, rawtext, svg/math and
+the other cases htmdport._reparse_mask and _build_tree name. Both
+routes feed the vendored htmd port and Unicode-trim its output, so
+the markdown tracks htmd's default rule table either way.
 """
 
 from __future__ import annotations
@@ -52,16 +57,27 @@ def _is_editor_artifact_span(tag: str, attrs) -> bool:
     return attrs is not None and "data-mce-type" in attrs
 
 
-def render_markdown(doc: Document, container_idx: int) -> str:
-    """Markdown of the container's inner content — the reference's
-    exact dataflow (src/markdown.rs:117-126): serialize the pruned
-    inner HTML, hand the STRING to the converter (which reparses it,
-    like htmd's html5ever parse does — fragment-reparse quirks and
-    all), trim the result (Rust str::trim = Unicode White_Space)."""
-    from dce_spark.core.htmdport import convert_to_markdown
+def _pruned(tag: str, attrs) -> bool:
+    """The subtrees filtered_inner_html drops (src/utils.rs:290-342)."""
+    return (
+        should_skip_element(tag, attrs)
+        or _is_editor_artifact_span(tag, attrs)
+        or _has_data_uri_media(tag, attrs)
+    )
 
-    html = filtered_inner_html(doc, container_idx)
-    return convert_to_markdown(html).strip(RUST_WHITESPACE)
+
+def render_markdown(doc: Document, container_idx: int) -> str:
+    """Markdown of the container's pruned inner content, as the
+    reference's dataflow gives it (src/markdown.rs:117-126: serialize,
+    reparse and convert, then trim with Rust str::trim = Unicode
+    White_Space). Converted from ``doc`` directly; serialized and
+    reparsed only when the reparse would build a different tree."""
+    from dce_spark.core.htmdport import convert_subtree, convert_to_markdown
+
+    md = convert_subtree(doc, container_idx, _pruned)
+    if md is None:
+        md = convert_to_markdown(filtered_inner_html(doc, container_idx))
+    return md.strip(RUST_WHITESPACE)
 
 
 def extract_content_as_markdown(dtree: DensityTree) -> str:
@@ -139,11 +155,7 @@ def filtered_inner_html(doc: Document, dom_idx: int = 0) -> str:
             continue
         tag = tags[i]
         a = attrs[i]
-        if (
-            should_skip_element(tag, a)
-            or _is_editor_artifact_span(tag, a)
-            or _has_data_uri_media(tag, a)
-        ):
+        if _pruned(tag, a):
             i = sub_end[i]  # prune the whole subtree
             continue
         out.append("<" + tag)

@@ -153,16 +153,16 @@ def run_pipeline(
     other failure to read it raises before the first extraction.
     ``max_commits`` exists for kill-and-rerun tests.
 
-    ``sink="table"`` writes through the DataFrameWriterV2 path
-    (``writeTo(output_path).overwritePartitions()`` with a
-    ``partitionedBy(bucket)`` CTAS on first contact) — ``output_path``
-    is then a catalog table name and ``table_provider`` the table
-    format. ``sink="iceberg"`` is that same path with the iceberg
-    provider pinned; in environments without the iceberg-spark runtime
-    jar the identical code path is exercised against an in-memory V2
-    catalog (tools/memcatalog). The session catalog's V1 tables take
-    the first-contact CTAS but reject ``overwritePartitions``.
-    ``manifest_path`` (REQUIRED for
+    ``sink="table"`` writes each chunk with
+    ``write.insertInto(output_path, overwrite=True)`` under dynamic
+    partition overwrite, after a ``writeTo(...).partitionedBy(bucket)``
+    CTAS on first contact — ``output_path`` is then a catalog table
+    name and ``table_provider`` the table format. The same calls serve
+    V2 catalogs and the session catalog's V1 tables.
+    ``sink="iceberg"`` is that same path with the iceberg provider
+    pinned; in environments without the iceberg-spark runtime jar the
+    identical code path is exercised against an in-memory V2 catalog
+    (tools/memcatalog). ``manifest_path`` (REQUIRED for
     table sinks — a table name is not a filesystem path) locates the
     lineage manifests; the parquet sink defaults it to
     ``<output_path>/_manifest``.
@@ -306,11 +306,14 @@ def run_pipeline(
         # so a crash between data write and manifest append cannot
         # duplicate urls on rerun (the bucket is simply rewritten).
         if table_sink:
-            # Same protocol on a table partitioned by bucket: each chunk
-            # lands as one snapshot (overwritePartitions == dynamic
-            # overwrite of exactly the chunk's buckets).
+            # Same protocol on a table partitioned by bucket: an
+            # overwriting insertInto under dynamic partition overwrite
+            # replaces exactly the chunk's buckets, as one snapshot on a
+            # V2 catalog (OverwritePartitionsDynamic) and as a partition
+            # rewrite on a V1 session-catalog table. Columns go by
+            # position, in the order the first-contact CTAS fixed.
             try:
-                extracted.writeTo(output_path).overwritePartitions()
+                extracted.write.insertInto(output_path, overwrite=True)
             except Exception as exc:
                 if not _is_missing_table(exc):
                     # a write fault on an EXISTING table (executor

@@ -83,12 +83,14 @@ def test_salting_spreads_hot_domain(spark):
 
 def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
                                       monkeypatch):
-    """Contract test for sink='iceberg' with a stub writeTo (no iceberg
+    """Contract test for sink='iceberg' with stub writers (no iceberg
     runtime in this sandbox): verifies the commit sequence — first chunk
     creates the table partitioned by bucket via using('iceberg'), later
-    chunks land as overwritePartitions snapshots, the manifest gates
+    chunks land as overwriting insertInto snapshots, the manifest gates
     visibility, and resume skips committed buckets — by persisting the
     stubbed table to parquet so spark.table round-trips."""
+    from pyspark.sql.readwriter import DataFrameWriter as _DFW
+
     try:  # pyspark>=4: the session produces classic.DataFrame instances
         from pyspark.sql.classic.dataframe import DataFrame as _DF
     except ImportError:  # pragma: no cover
@@ -124,18 +126,20 @@ def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
                 table_dir
             )
 
-        def overwritePartitions(self):
-            if self._table not in tables:
-                raise RuntimeError("NoSuchTableException (stub)")
-            calls.append(f"overwritePartitions:{self._table}")
-            self._df.write.mode("overwrite").partitionBy("bucket").parquet(
-                table_dir
-            )
+    def insert_into(self, table, overwrite=None):
+        if table not in tables:
+            raise RuntimeError("NoSuchTableException (stub)")
+        assert overwrite is True
+        calls.append(f"insertInto:{table}")
+        self._df.write.mode("overwrite").partitionBy("bucket").parquet(
+            table_dir
+        )
 
     monkeypatch.setattr(
         _DF, "writeTo",
         lambda self, table: StubWriter(self, table), raising=True,
     )
+    monkeypatch.setattr(_DFW, "insertInto", insert_into, raising=True)
     real_table = type(spark).table
     monkeypatch.setattr(
         type(spark), "table",
@@ -160,7 +164,7 @@ def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
     )
     assert r2["resumed_from"] == 2 and r2["remaining"] == 0
     # second chunk appended via a snapshot overwrite, not a re-create
-    assert f"overwritePartitions:{out}" in calls
+    assert f"insertInto:{out}" in calls
     assert calls.count(f"create:{out}") == 1
 
     mf = read_manifest(spark, out)
@@ -207,7 +211,8 @@ def test_iceberg_branch_executes_v2_catalog(tmp_path_factory):
     V2 TableCatalog (tools/memcatalog, built against the public
     connector API) receives the actual
     writeTo(...).using('iceberg').partitionedBy(bucket).create() CTAS
-    and writeTo(...).overwritePartitions() snapshot commits, including
+    and the write.insertInto(overwrite=True) dynamic-overwrite snapshot
+    commits, including
     kill-and-resume and idempotent partition rewrite. Runs in a
     subprocess because the catalog jar must be on the driver classpath
     at JVM launch."""
@@ -260,8 +265,10 @@ def test_table_sink_surfaces_real_write_faults(spark, pages_path,
                                                tmp_path_factory,
                                                monkeypatch):
     """A failure that is NOT 'table does not exist' must re-raise from
-    overwritePartitions, never be retried as CTAS (which would die on
+    the chunk write, never be retried as CTAS (which would die on
     TableAlreadyExists and bury the root cause)."""
+    from pyspark.sql.readwriter import DataFrameWriter as _DFW
+
     try:
         from pyspark.sql.classic.dataframe import DataFrame as _DF
     except ImportError:  # pragma: no cover
@@ -269,12 +276,12 @@ def test_table_sink_surfaces_real_write_faults(spark, pages_path,
 
     created = []
 
+    def faulty_insert(self, table, overwrite=None):
+        raise RuntimeError("executor lost mid-write")
+
     class FaultyWriter:
         def __init__(self, df, table):
             pass
-
-        def overwritePartitions(self):
-            raise RuntimeError("executor lost mid-write")
 
         def using(self, fmt):
             created.append("using")
@@ -290,6 +297,7 @@ def test_table_sink_surfaces_real_write_faults(spark, pages_path,
         _DF, "writeTo",
         lambda self, table: FaultyWriter(self, table), raising=True,
     )
+    monkeypatch.setattr(_DFW, "insertInto", faulty_insert, raising=True)
     out = str(tmp_path_factory.mktemp("fault") / "meta")
     with pytest.raises(RuntimeError, match="executor lost"):
         run_pipeline(spark, pages_path, out, buckets=4,
@@ -362,10 +370,10 @@ def test_manifest_matches_committed_rows(spark, mixed_pages_path, sink,
     """The counters the write job observes equal a groupBy over what it
     committed; with far more buckets than rows, empty buckets get a zero
     row. No input makes extract_page fail, so the kernel marks the two
-    bad.test rows failed. The session catalog's V1 tables take the CTAS
-    but not overwritePartitions, so the table sink commits everything in
-    one chunk here (tools/memcatalog/driver.py checks the same parity
-    across a CTAS and an overwritePartitions commit)."""
+    bad.test rows failed. The table sink commits everything in one chunk
+    here; test_table_sink_commits_every_chunk_on_session_catalog and
+    tools/memcatalog/driver.py check the same parity across a CTAS and
+    an insertInto commit."""
     import pyarrow.compute as pc
 
     from dce_spark.spark import udf
@@ -406,6 +414,41 @@ def test_manifest_matches_committed_rows(spark, mixed_pages_path, sink,
     assert sum(v[0] for v in got.values()) == total
     assert sum(v[3] for v in got.values()) == 2
     assert any(v == (0, 0, 0, 0) for v in got.values())
+
+
+def test_table_sink_commits_every_chunk_on_session_catalog(
+        spark, mixed_pages_path, tmp_path):
+    """A V1 session-catalog table takes the first chunk's CTAS and every
+    later chunk's dynamic partition overwrite: two commits land every
+    row, the manifest equals a groupBy over the table, and rewriting
+    committed buckets on a fresh manifest duplicates nothing."""
+    buckets = 4
+    db = f"dce_v1_{tmp_path.name}".replace("-", "_")
+    spark.sql(f"CREATE DATABASE {db} LOCATION '{tmp_path / 'wh'}'")
+    tbl = f"{db}.extracted"
+    root = str(tmp_path / "manifests")
+    try:
+        r = run_pipeline(spark, mixed_pages_path, tbl, buckets=buckets,
+                         buckets_per_commit=2, sink="table",
+                         table_provider="parquet", manifest_path=root)
+        assert r["committed"] == 2 and r["remaining"] == 0, r
+        total = spark.read.parquet(mixed_pages_path).count()
+        table = spark.table(tbl)
+        assert table.count() == total
+        got, want = _manifest_and_data_counters(spark, root, table, buckets)
+        assert got == want
+        assert sum(v[0] for v in got.values()) == total
+
+        r = run_pipeline(spark, mixed_pages_path, tbl, buckets=buckets,
+                         buckets_per_commit=2, max_commits=1, sink="table",
+                         table_provider="parquet",
+                         manifest_path=str(tmp_path / "manifests2"))
+        assert r["committed"] == 1, r
+        table = spark.table(tbl)
+        assert table.count() == total
+        assert table.select("url").distinct().count() == total
+    finally:
+        spark.sql(f"DROP DATABASE {db} CASCADE")
 
 
 def test_bad_manifest_path_raises_before_extraction(spark, pages_path):

@@ -1,7 +1,8 @@
 """Subprocess driver: exercises run_pipeline's sink="iceberg" branch —
-the REAL DataFrameWriterV2 calls (writeTo().overwritePartitions() and
-the .using(...).partitionedBy(bucket).create() CTAS) — against the
-in-memory V2 catalog (memcatalog.jar), including kill-and-resume.
+the REAL writer calls (the .using(...).partitionedBy(bucket).create()
+CTAS, then write.insertInto(overwrite=True) under dynamic partition
+overwrite) — against the in-memory V2 catalog (memcatalog.jar),
+including kill-and-resume.
 
 Run by tests/test_pipeline_resume.py::test_iceberg_branch_executes_v2_catalog
 in a fresh process because the catalog jar must be on the driver
@@ -58,7 +59,7 @@ assert got_buckets == {0, 1}, got_buckets
 first_urls = {r.url for r in mid.select("url").collect()}
 assert 0 < len(first_urls) < total_in
 
-# resume: remaining chunk lands via overwritePartitions on the
+# resume: remaining chunk lands via the overwriting insertInto on the
 # EXISTING table; committed buckets survive untouched
 r2 = run_pipeline(
     spark, pages_path, tbl, buckets=4, buckets_per_commit=2,
@@ -72,7 +73,7 @@ survived = {
 }
 assert survived == first_urls
 
-# the counters observed by the CTAS and the overwritePartitions write
+# the counters observed by the CTAS and the insertInto write
 # jobs equal a groupBy over what the table holds
 ok = F.col("status") == "ok"
 want = {
