@@ -15,8 +15,6 @@ re-architected for Spark:
 - ``dce_spark.functions`` — large-scale training-data ops (dedup families,
                             similarity search, text analysis) as native
                             DataFrame transformations.
-- ``dce_spark.streaming`` — Structured Streaming wrapper of the same
-                            extraction batch function.
 
 Importing it installs ``_importcache``: unchanged zips are not re-read per task.
 """

@@ -47,8 +47,6 @@ _JS_API_MARKERS = (
 )
 _AD_SCRIPT_MARKERS = ("yacontextcb", "adfox", "xboost", "cartsettings")
 
-_PUNCT_CHARS = frozenset("{}[]();=<>:/\\\"'")
-
 _LONG_ENCODED_RUN = _regex.compile(r"[A-Za-z0-9+/_\-=]{96}")
 
 # f64 images of the reference's f32 threshold literals, so `ratio > THR`
@@ -72,11 +70,6 @@ def punctuation_ratio(text: str) -> float:
         return 0.0
     punct = total - len(text.translate(_PUNCT_DELETE))
     return float(_np.float32(punct) / _np.float32(total))
-
-
-def count_substrings(haystack: str, needle: str) -> int:
-    """Non-overlapping substring count (reference src/utils.rs:188-190)."""
-    return haystack.count(needle)
 
 
 def has_long_encoded_token(text: str) -> bool:

@@ -22,6 +22,7 @@ Scale notes:
 from __future__ import annotations
 
 import functools
+import re
 from hashlib import md5
 
 from pyspark.sql import DataFrame, functions as F
@@ -122,6 +123,16 @@ _BLOOM_BITS_PER_WORD = 63  # bits 0..62 only: bit 63 is the BIGINT
 # cross-engine parity for the packed filter
 
 
+def _filter_broadcasts(spark, n_bits: int) -> bool:
+    """Whether the packed filter's size bound, ceil(n_bits/63) rows of
+    24 bytes (Spark's size estimate for a row of two longs), fits under
+    ``spark.sql.autoBroadcastJoinThreshold`` ("10485760b", "10MB", "-1")."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").lower()
+    n, unit = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", raw.strip()).groups()
+    limit = int(n) << 10 * "_kmgtp".index(unit or "_")
+    return -(-n_bits // _BLOOM_BITS_PER_WORD) * 24 <= limit
+
+
 def _bloom_positions(text, n_hashes: int, n_bits: int):
     """Array of n_hashes deterministic bit positions for one text:
     seeded md5 -> 60-bit int -> pmod n_bits. Same construction as the
@@ -182,26 +193,28 @@ def bloom_filter_words(
 def bloom_dedup(
     new_docs: DataFrame, seen_docs: DataFrame, n_hashes: int = 5,
     n_bits: int = 1 << 20, id_col: str = "doc_id",
-    text_col: str = "text", broadcast_filter: bool = True,
+    text_col: str = "text",
 ) -> DataFrame:
     """Incremental corpus dedup: flag docs in ``new_docs`` whose text
     is (probably) already in ``seen_docs`` — the new-crawl-batch vs
     historical-corpus membership pass. An exact anti-join dedup against
     a 100 TB historical corpus shuffles BOTH sides on every ingest;
     here the history collapses once into the packed filter table
-    (bloom_filter_words) and each batch probes it with a broadcast
-    join on the word key — the history is never re-shuffled.
+    (bloom_filter_words) and each batch probes it with a join on the
+    word key — the history is never re-shuffled. The filter broadcasts
+    when its size bound from ``n_bits`` fits under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``; otherwise the probe is a
+    shuffled join on the same key.
 
     Asymmetric error, the right direction for dedup: might-contain has
     NO false negatives (every true duplicate is flagged), and false
     positives (a novel doc flagged seen, rate ~(1-e^(-kn/m))^k) only
     cost a few novel docs. Size ``n_bits`` ~10 bits/doc for ~1% FP at
-    k=5; past ~10^10 bits set ``broadcast_filter=False`` and the probe
-    becomes a shuffled join on the same key.
+    k=5.
 
     Returns (id_col, probably_seen) — total over new_docs."""
     flt = bloom_filter_words(seen_docs, n_hashes, n_bits, text_col)
-    if broadcast_filter:
+    if _filter_broadcasts(new_docs.sparkSession, n_bits):
         flt = F.broadcast(flt)
     probes = new_docs.select(
         F.col(id_col).cast("long").alias(id_col),
@@ -367,8 +380,8 @@ def lang_id(documents: DataFrame) -> DataFrame:
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 # Gopher gate thresholds (Rae et al. 2021, §A1.1) — module constants so
-# gopher_quality, filter_funnel and the streaming quality gate all read
-# the SAME numbers; tune here, not at one call site
+# gopher_quality and filter_funnel both read the SAME numbers; tune
+# here, not at one call site
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
 GOPHER_MIN_MEAN_WORD_LEN = 3.0
@@ -379,9 +392,8 @@ GOPHER_MIN_STOP_HITS = 2
 
 def _gopher_signal_cols(col: str = "text"):
     """The four Gopher §A1.1 signal columns over `col` — shared by
-    gopher_quality (per-doc signals), filter_funnel (per-source
-    telemetry) and the streaming quality gate so the rules cannot
-    diverge."""
+    gopher_quality (per-doc signals) and filter_funnel (per-source
+    telemetry) so the rules cannot diverge."""
     toks = tokens_col(col)
     n_words = F.size(toks).cast("long")
     sum_len = F.aggregate(
@@ -1285,7 +1297,7 @@ def minhash_incremental_dedup(
     n_seeds: int = 8, n_bands: int = 2, k: int = 3,
 ) -> DataFrame:
     """Cross-crawl incremental near-dup gate — the MinHash analogue of
-    the historical Bloom gate (streaming/stream.py): a NEW crawl batch
+    bloom_dedup's historical Bloom probe: a NEW crawl batch
     is deduped against an already-signed history WITHOUT recomputing
     history signatures. ``stored_bands`` is the persisted
     minhash_band_table output for the historical corpus ((doc_id, band)

@@ -35,8 +35,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 # deliberately NOT here: despite its referral use on some sites, it
 # widely names real resources (git refs, pagination cursors, API
 # version selectors) — stripping it would merge distinct documents,
-# and with streaming canonical dedup that is permanent data loss, not
-# a mis-count
+# and a dedup on the canonical URL would then drop real pages, not
+# just mis-count them
 _TRACKING_PREFIXES = ("utm_", "fbclid=", "gclid=", "msclkid=")
 
 _HEAD_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?]*"

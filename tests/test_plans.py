@@ -320,6 +320,19 @@ def test_bloom_dedup_broadcast_probe(spark):
     assert "Python" not in plan
     assert "partial_min" in plan  # map-side combine of the k probes
 
+    # doc_bloom_dedup's filter (n_bits = 2^16) has at most
+    # ceil(2^16/63) rows of 24 bytes; one byte under that bound the
+    # probe falls back to a shuffled join
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(-(-(1 << 16) // 63) * 24 - 1))
+    try:
+        plan = _plan(e.queries()["doc_bloom_dedup"](spark, SF))
+    finally:
+        spark.conf.set(key, prev)
+    assert "SortMergeJoin" in plan
+    assert "BroadcastHashJoin" not in plan
+
 
 def test_url_robots_broadcast_rules(spark):
     import __spark_entry__ as e

@@ -146,12 +146,21 @@ def test_row_kernels_go_through_the_scaffold():
         tree = ast.parse(path.read_text())
         for top in tree.body:
             for node in ast.walk(top):
+                owner = getattr(top, "name", None)
+                # no pandas in the library: every kernel speaks Arrow
+                if isinstance(node, (ast.Import, ast.ImportFrom)):
+                    mods = ([a.name for a in node.names]
+                            if isinstance(node, ast.Import)
+                            else [node.module or ""])
+                    bad += [f"{rel}:{node.lineno} {owner}: import {m}"
+                            for m in mods if m.split(".")[0] == "pandas"]
+                    continue
                 if not (isinstance(node, ast.Call)
                         and isinstance(node.func, ast.Attribute)):
                     continue
                 name = node.func.attr
-                owner = getattr(top, "name", None)
-                if name in ("mapInPandas", "applyInPandas") or (
+                if name in ("mapInPandas", "applyInPandas",
+                            "applyInPandasWithState") or (
                     name in ("mapInArrow", "applyInArrow")
                     and (rel, owner) not in _DIRECT_KERNELS
                 ):
