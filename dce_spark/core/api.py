@@ -10,6 +10,15 @@ from dce_spark.core.textnorm import detect_primary_script
 
 __all__ = ["extract_content", "extract_article", "extract_page", "decode_html"]
 
+MODES = ("content", "article", "both", "all")
+
+
+def check_mode(mode: str) -> None:
+    """Refuse an unknown extraction mode before any row is read: a
+    misspelt mode would otherwise extract nothing and report `ok`."""
+    if mode not in MODES:
+        raise ValueError(f"unknown mode: {mode!r}; expected one of {MODES}")
+
 
 def decode_html(raw: bytes | str) -> str:
     """UTF-8 lossy decode (the reference's evaluation path uses
@@ -37,7 +46,9 @@ def extract_article(html: bytes | str) -> str:
 
 def extract_page(html: bytes | str, mode: str = "both") -> dict[str, Any]:
     """Full per-row record for the Spark pipeline: both extraction modes,
-    spans, node count and script detection, never raising per row."""
+    spans, node count and script detection, never raising per row (an
+    unknown `mode` is a caller error and raises)."""
+    check_mode(mode)
     try:
         text = decode_html(html)
         dtree = DensityTree.from_html(text)

@@ -61,49 +61,62 @@ def _seq_gram_block(X, s, e):
     return Gb, nsq
 
 
+def _neighbor_masks(X, threshold: float):
+    """Blocked neighbor masks over one group's vectors: yields
+    ``(s, e, mask)`` per block of up to 2048 rows, where
+    ``mask[r, j]`` says vector j is a neighbor of vector s + r —
+    cosine >= threshold or NaN (a zero-norm vector; NaN cosines compare
+    as neighbors, matching Spark/DuckDB NaN-is-largest ordering), and
+    never the vector itself. Cosines come from ``_seq_gram_block``, so
+    the decisions are bit-identical to the Catalyst fold."""
+    import numpy as np
+
+    n = len(X)
+    bs = 2048
+    for s in range(0, n, bs):
+        e = min(s + bs, n)
+        Gb, nsq = _seq_gram_block(X, s, e)
+        norms = np.sqrt(nsq)
+        denom = norms[s:e, None] * norms[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            C = Gb / denom
+        mask = (C >= threshold) | np.isnan(C)
+        rows = np.arange(s, e)
+        mask[rows - s, rows] = False  # self is not a neighbor
+        yield s, e, mask
+
+
 def _far_neighbor_kernel(threshold: float, dim: int):
     """Grouped-map Arrow kernel for the SemDeDup ``centroid_far``
     keeper: for one pairing group, each vector's (cs, id)-minimal
     qualifying neighbor — min over neighbors b of the lexicographic
     struct (cs_b, b), where cs is the per-vector rounded centroid
-    similarity computed upstream (carried in as a column). Same
-    bit-exact Gram accumulation as ``_min_neighbor_kernel``."""
+    similarity computed upstream (carried in as a column). Neighbors
+    come from ``_neighbor_masks``, as in ``_min_neighbor_kernel``."""
     import numpy as np
     import pyarrow as pa
 
     int_max = np.iinfo(np.int64).max
 
     def fn(tbl):
-        n = tbl.num_rows
-        empty = pa.table({
-            "a": pa.array([], type=pa.int64()),
-            "s": pa.array([], type=pa.float64()),
-            "i": pa.array([], type=pa.int64()),
-        })
-        if n <= 1:
-            return empty
+        if tbl.num_rows <= 1:
+            return pa.table({
+                "a": pa.array([], type=pa.int64()),
+                "s": pa.array([], type=pa.float64()),
+                "i": pa.array([], type=pa.int64()),
+            })
         ids, X = _emb_matrix(tbl, dim)
         cs = (
             tbl.column("cs").combine_chunks()
             .to_numpy(zero_copy_only=False).astype(np.float64)
         )
+        # Spark's struct-min orders NaN cs LARGEST; cosine is in
+        # [-1, 1] or NaN (never +-inf: a zero norm makes 0/0), so
+        # +inf is a safe NaN-is-largest ordering sentinel
+        cs_key = np.where(np.isnan(cs), np.inf, cs)
         out_a, out_s, out_i = [], [], []
-        bs = 2048
-        for s0 in range(0, n, bs):
-            e0 = min(s0 + bs, n)
-            Gb, nsq = _seq_gram_block(X, s0, e0)
-            norms = np.sqrt(nsq)
-            denom = norms[s0:e0, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = Gb / denom
-            mask = (C >= threshold) | np.isnan(C)
-            rows = np.arange(s0, e0)
-            mask[rows - s0, rows] = False
+        for s0, e0, mask in _neighbor_masks(X, threshold):
             has = mask.any(axis=1)
-            # Spark's struct-min orders NaN cs LARGEST; cosine is in
-            # [-1, 1] or NaN (never +-inf: a zero norm makes 0/0), so
-            # +inf is a safe NaN-is-largest ordering sentinel
-            cs_key = np.where(np.isnan(cs), np.inf, cs)
             s_cand = np.where(mask, cs_key[None, :], np.inf)
             m_s = s_cand.min(axis=1)
             id_cand = np.where(
@@ -117,8 +130,6 @@ def _far_neighbor_kernel(threshold: float, dim: int):
             out_a.append(ids[s0:e0][has])
             out_s.append(m_s[has])
             out_i.append(m_i[has])
-        if not out_a:
-            return empty
         return pa.table({
             "a": pa.array(np.concatenate(out_a), type=pa.int64()),
             "s": pa.array(np.concatenate(out_s), type=pa.float64()),
@@ -134,45 +145,31 @@ def _min_neighbor_kernel(threshold: float, dim: int):
     qualifying neighbor emit nothing). Replaces the per-pair Catalyst
     ``cosine_similarity_col`` fold (3 array folds + a zip_with
     allocation per candidate pair — quadratic in bucket size) with one
-    NumPy Gram accumulation per bucket; bit-identical decisions (see
-    ``_seq_gram_block``; NaN cosines — zero-norm vectors — compare as
-    neighbors, matching Spark/DuckDB NaN-is-largest ordering)."""
+    NumPy Gram accumulation per bucket (``_neighbor_masks``), with
+    bit-identical decisions."""
     import numpy as np
     import pyarrow as pa
 
     int_max = np.iinfo(np.int64).max
 
     def fn(tbl):
-        n = tbl.num_rows
-        empty = pa.table({
-            "a": pa.array([], type=pa.int64()),
-            "nbr": pa.array([], type=pa.int64()),
-        })
-        if n <= 1:
-            return empty
+        if tbl.num_rows <= 1:
+            return pa.table({
+                "a": pa.array([], type=pa.int64()),
+                "nbr": pa.array([], type=pa.int64()),
+            })
         ids, X = _emb_matrix(tbl, dim)
-        out_a = []
-        out_nbr = []
-        bs = 2048
-        for s in range(0, n, bs):
-            e = min(s + bs, n)
-            Gb, nsq = _seq_gram_block(X, s, e)
-            norms = np.sqrt(nsq)
-            denom = norms[s:e, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                C = Gb / denom
-            mask = (C >= threshold) | np.isnan(C)
-            rows = np.arange(s, e)
-            mask[rows - s, rows] = False  # self is not a neighbor
+        out_a, out_nbr = [], []
+        for s, e, mask in _neighbor_masks(X, threshold):
             cand = np.where(mask, ids[None, :], int_max)
             nbr = cand.min(axis=1)
             has = mask.any(axis=1)
             out_a.append(ids[s:e][has])
             out_nbr.append(nbr[has])
-        a = np.concatenate(out_a) if out_a else np.array([], np.int64)
-        v = np.concatenate(out_nbr) if out_nbr else np.array([], np.int64)
-        return pa.table({"a": pa.array(a, type=pa.int64()),
-                         "nbr": pa.array(v, type=pa.int64())})
+        return pa.table({
+            "a": pa.array(np.concatenate(out_a), type=pa.int64()),
+            "nbr": pa.array(np.concatenate(out_nbr), type=pa.int64()),
+        })
 
     return fn
 

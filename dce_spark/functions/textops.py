@@ -662,45 +662,17 @@ def kmv_distinct_sketch(documents: DataFrame, k: int = 64) -> DataFrame:
     h uniform on [0,1), E[distinct] = (k-1)/h_(k). Unlike HLL(++) whose
     register layouts differ per engine, KMV over md5 (first 15 hex
     digits -> uniform in [0, 16^15)) is DETERMINISTIC and bit-identical
-    in ANSI SQL, so the estimate itself is oracle-checkable. Mergeable
-    (union of sketches = sketch of union) -> map-side partials apply;
-    the exact distinct rides along to show the estimation error.
+    in ANSI SQL, so the estimate itself is oracle-checkable. This is
+    :func:`kmv_sketch_only` joined with an exact distinct count that
+    rides along to show the estimation error.
     """
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
-    documents = ensure_scan_parallelism(documents)
-    m = float(16**15)
-    toks = documents.select(
-        "source", F.explode(tokens_col()).alias("tok")
-    ).withColumn(
-        "h",
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("double") / m,
-    )
-    distinct_h = toks.select("source", "h").distinct()
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("source").orderBy("h")
-    kth = (
-        distinct_h.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .groupBy("source")
-        .agg(F.max("h").alias("h_k"), F.count("*").alias("got"))
-    )
     exact = (
         documents.select("source", F.explode(tokens_col()).alias("tok"))
         .groupBy("source")
         .agg(F.countDistinct("tok").cast("long").alias("exact_distinct"))
     )
-    est = F.when(
-        F.col("got") < k, F.col("got").cast("double")  # fewer than k: exact
-    ).otherwise((F.lit(float(k - 1))) / F.col("h_k"))
-    return (
-        kth.join(exact, "source")
-        .select(
-            "source",
-            "exact_distinct",
-            F.round(est, 2).alias("kmv_estimate"),
-        )
+    return kmv_sketch_only(documents, k).join(exact, "source").select(
+        "source", "exact_distinct", "kmv_estimate"
     )
 
 
@@ -864,6 +836,9 @@ def kmv_minima(documents: DataFrame, k: int = 64) -> DataFrame:
     starving the sketch (<k survivors when distinct >= k) is nil; when
     distinct < 8k the threshold clamps to 1.0 and every hash survives.
     """
+    # input-split guard: parallelize the text-heavy work when
+    # the scan is a single unsplittable partition
+    documents = ensure_scan_parallelism(documents)
     m = float(16**15)
     toks = documents.select(
         "source", F.explode(tokens_col()).alias("tok")
@@ -904,7 +879,7 @@ def kmv_estimate_from_minima(minima_col, k: int = 64):
 
 def kmv_sketch_only(documents: DataFrame, k: int = 64) -> DataFrame:
     """Production KMV estimate: sketch only, NO exact countDistinct
-    rider (the rider in :func:`kmv_distinct_sketch` is an O(distinct)
+    rider (the rider :func:`kmv_distinct_sketch` adds is an O(distinct)
     full pass kept solely so the oracle query can show the estimation
     error; at 10^12 tokens it costs what the sketch exists to avoid).
     """

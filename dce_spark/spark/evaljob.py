@@ -84,40 +84,6 @@ def word_lcs_chars(s1: str, s2: str) -> int:
     return int(lcs_words * ((avg1 + avg2) / 2.0 + 1.0))
 
 
-def _word_lcs_chars_dp(s1: str, s2: str) -> int:
-    """Reference two-row DP (kept as the property-test witness for the
-    bit-parallel path above; not used on the hot path)."""
-    w1 = s1.split()
-    w2 = s2.split()
-    m, n = len(w1), len(w2)
-    if m == 0 or n == 0:
-        return 0
-    ids: dict[str, int] = {}
-    a1 = [ids.setdefault(w, len(ids)) for w in w1]
-    a2 = [ids.setdefault(w, len(ids)) for w in w2]
-    prev = [0] * (n + 1)
-    for i in range(m):
-        curr = [0] * (n + 1)
-        x = a1[i]
-        cj = 0
-        pj_1 = prev
-        for j in range(1, n + 1):
-            if a2[j - 1] == x:
-                cj = pj_1[j - 1] + 1
-            else:
-                up = pj_1[j]
-                if up > cj:
-                    cj = up
-            curr[j] = cj
-        prev = curr
-    lcs_words = int(prev[n])
-    if lcs_words == 0:
-        return 0
-    avg1 = sum(len(w.encode("utf-8")) for w in w1) / m
-    avg2 = sum(len(w.encode("utf-8")) for w in w2) / n
-    return int(lcs_words * ((avg1 + avg2) / 2.0 + 1.0))
-
-
 def sorensen_dice(a: str, b: str) -> float:
     """Bigram Sørensen–Dice (strsim semantics: over char bigrams of the
     whitespace-stripped? No — strsim uses all char bigrams as multiset)."""

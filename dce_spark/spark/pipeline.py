@@ -157,26 +157,24 @@ def run_pipeline(
     ``write.insertInto(output_path, overwrite=True)`` under dynamic
     partition overwrite, after a ``writeTo(...).partitionedBy(bucket)``
     CTAS on first contact — ``output_path`` is then a catalog table
-    name and ``table_provider`` the table format. The same calls serve
-    V2 catalogs and the session catalog's V1 tables.
-    ``sink="iceberg"`` is that same path with the iceberg provider
-    pinned; in environments without the iceberg-spark runtime jar the
-    identical code path is exercised against an in-memory V2 catalog
-    (tools/memcatalog). ``manifest_path`` (REQUIRED for
-    table sinks — a table name is not a filesystem path) locates the
-    lineage manifests; the parquet sink defaults it to
-    ``<output_path>/_manifest``.
+    name and ``table_provider`` the table format (iceberg by default).
+    The same calls serve V2 catalogs and the session catalog's V1
+    tables; in environments without the iceberg-spark runtime jar they
+    are exercised against an in-memory V2 catalog (tools/memcatalog).
+    ``manifest_path`` (REQUIRED for the table sink — a table name is
+    not a filesystem path) locates the lineage manifests; the parquet
+    sink defaults it to ``<output_path>/_manifest``.
     """
-    table_sink = sink in ("iceberg", "table")
-    if sink == "iceberg":
-        table_provider = "iceberg"
+    if sink not in ("parquet", "table"):
+        raise ValueError(f"unknown sink: {sink!r}")
+    table_sink = sink == "table"
     if table_sink and manifest_path is None:
         # Checked before any Spark job runs. output_path is a catalog
         # table NAME here: a manifest root derived from it would be a
         # cwd-relative directory ("catalog.db.tbl/_manifest"), making
         # resume depend on the driver's working directory.
         raise ValueError(
-            "sink='table'/'iceberg' needs an explicit manifest_path "
+            "sink='table' needs an explicit manifest_path "
             "(a filesystem or object-store URI for the lineage "
             "manifests); the catalog table name cannot serve as one"
         )

@@ -20,7 +20,7 @@ import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from dce_spark.core.api import extract_page
+from dce_spark.core.api import check_mode, extract_page
 from dce_spark.spark.schema import EXTRACTED_SCHEMA
 
 # Output flush threshold: keep Arrow IPC messages comfortably small.
@@ -118,6 +118,7 @@ def attach_extraction(df, mode: str = "both"):
     Column pruning: only url + html cross the Arrow boundary; Catalyst
     pushes the projection into the parquet scan.
     """
+    check_mode(mode)
     pruned = df.select("url", "html")
 
     def _kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -176,12 +176,44 @@ def test_eval_corpus_deterministic_and_independent():
     assert comment_pages >= 20
 
 
+def _word_lcs_chars_dp(s1: str, s2: str) -> int:
+    """Two-row word-LCS DP with ce_score.rs's char scaling: the witness
+    the bit-parallel `word_lcs_chars` is checked against."""
+    w1 = s1.split()
+    w2 = s2.split()
+    m, n = len(w1), len(w2)
+    if m == 0 or n == 0:
+        return 0
+    ids: dict[str, int] = {}
+    a1 = [ids.setdefault(w, len(ids)) for w in w1]
+    a2 = [ids.setdefault(w, len(ids)) for w in w2]
+    prev = [0] * (n + 1)
+    for i in range(m):
+        curr = [0] * (n + 1)
+        x = a1[i]
+        cj = 0
+        pj_1 = prev
+        for j in range(1, n + 1):
+            if a2[j - 1] == x:
+                cj = pj_1[j - 1] + 1
+            else:
+                up = pj_1[j]
+                if up > cj:
+                    cj = up
+            curr[j] = cj
+        prev = curr
+    lcs_words = int(prev[n])
+    if lcs_words == 0:
+        return 0
+    avg1 = sum(len(w.encode("utf-8")) for w in w1) / m
+    avg2 = sum(len(w.encode("utf-8")) for w in w2) / n
+    return int(lcs_words * ((avg1 + avg2) / 2.0 + 1.0))
+
+
 def test_bitparallel_lcs_equals_dp_property():
     """The bit-parallel word-LCS must be EXACTLY the DP on arbitrary
     inputs (including empties, repeats, full overlap, disjoint)."""
     import random
-
-    from dce_spark.spark.evaljob import _word_lcs_chars_dp
 
     rng = random.Random(99)
     vocab = [f"w{i}" for i in range(12)] + ["été", "日本", "a'b"]

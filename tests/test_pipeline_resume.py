@@ -83,12 +83,13 @@ def test_salting_spreads_hot_domain(spark):
 
 def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
                                       monkeypatch):
-    """Contract test for sink='iceberg' with stub writers (no iceberg
-    runtime in this sandbox): verifies the commit sequence — first chunk
-    creates the table partitioned by bucket via using('iceberg'), later
-    chunks land as overwriting insertInto snapshots, the manifest gates
-    visibility, and resume skips committed buckets — by persisting the
-    stubbed table to parquet so spark.table round-trips."""
+    """Contract test for sink='table' with the default iceberg provider
+    and stub writers (no iceberg runtime needed): verifies the
+    commit sequence — first chunk creates the table partitioned by
+    bucket via using('iceberg'), later chunks land as overwriting
+    insertInto snapshots, the manifest gates visibility, and resume
+    skips committed buckets — by persisting the stubbed table to
+    parquet so spark.table round-trips."""
     from pyspark.sql.readwriter import DataFrameWriter as _DFW
 
     try:  # pyspark>=4: the session produces classic.DataFrame instances
@@ -152,7 +153,7 @@ def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
     # run half the commits, "crash", then resume
     r1 = run_pipeline(
         spark, pages_path, out, buckets=4, buckets_per_commit=2,
-        max_commits=1, sink="iceberg", manifest_path=out,
+        max_commits=1, sink="table", manifest_path=out,
     )
     assert r1["committed"] == 1 and r1["remaining"] > 0
     # first chunk: overwrite attempt failed (no table), then create
@@ -160,7 +161,7 @@ def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
 
     r2 = run_pipeline(
         spark, pages_path, out, buckets=4, buckets_per_commit=2,
-        sink="iceberg", manifest_path=out,
+        sink="table", manifest_path=out,
     )
     assert r2["resumed_from"] == 2 and r2["remaining"] == 0
     # second chunk appended via a snapshot overwrite, not a re-create
@@ -207,7 +208,7 @@ def test_bucketed_input_rejects_multiple_bucket_count(spark,
 
 
 def test_iceberg_branch_executes_v2_catalog(tmp_path_factory):
-    """The sink='iceberg' branch executes UNMOCKED: an in-memory Spark
+    """The sink='table' branch executes UNMOCKED: an in-memory Spark
     V2 TableCatalog (tools/memcatalog, built against the public
     connector API) receives the actual
     writeTo(...).using('iceberg').partitionedBy(bucket).create() CTAS
@@ -258,7 +259,31 @@ def test_table_sink_requires_manifest_path(spark, pages_path):
     # manifest root to it would pin resume to the driver's cwd
     with pytest.raises(ValueError, match="manifest_path"):
         run_pipeline(spark, pages_path, "cat.db.extracted",
-                     sink="iceberg")
+                     sink="table")
+
+
+def test_unknown_mode_or_sink_fails_at_plan_time(spark, pages_path,
+                                                 tmp_path_factory):
+    # a misspelt mode used to extract nothing and report status 'ok';
+    # a misspelt sink used to write parquet under the table's name
+    from dce_spark.core.api import extract_page
+    from dce_spark.spark.udf import attach_extraction
+
+    with pytest.raises(ValueError, match="unknown mode"):
+        extract_page(b"<p>text</p>", mode="contnet")
+    pages = spark.read.parquet(pages_path)
+    with pytest.raises(ValueError, match="unknown mode"):
+        attach_extraction(pages, mode="contnet")
+    out = tmp_path_factory.mktemp("typo") / "out"
+    sc = spark.sparkContext
+    sc.setJobGroup("sink-typo", "unknown sink")
+    try:
+        with pytest.raises(ValueError, match="unknown sink"):
+            run_pipeline(spark, pages_path, str(out), sink="tabel")
+        assert sc.statusTracker().getJobIdsForGroup("sink-typo") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not out.exists()
 
 
 def test_table_sink_surfaces_real_write_faults(spark, pages_path,
@@ -301,7 +326,7 @@ def test_table_sink_surfaces_real_write_faults(spark, pages_path,
     out = str(tmp_path_factory.mktemp("fault") / "meta")
     with pytest.raises(RuntimeError, match="executor lost"):
         run_pipeline(spark, pages_path, out, buckets=4,
-                     buckets_per_commit=4, sink="iceberg",
+                     buckets_per_commit=4, sink="table",
                      manifest_path=out)
     assert created == []  # no CTAS fallback on a non-missing-table fault
 

@@ -147,6 +147,17 @@ def test_row_kernels_go_through_the_scaffold():
         for top in tree.body:
             for node in ast.walk(top):
                 owner = getattr(top, "name", None)
+                # no test doubles or unimplemented stubs in the library
+                if isinstance(node, ast.ClassDef) and node.name.startswith(
+                    ("Fake", "Stub", "Mock", "Dummy")
+                ):
+                    bad.append(f"{rel}:{node.lineno} class {node.name}")
+                if isinstance(node, ast.Raise) and node.exc is not None:
+                    exc = node.exc.func if isinstance(
+                        node.exc, ast.Call) else node.exc
+                    if getattr(exc, "id", None) == "NotImplementedError":
+                        bad.append(f"{rel}:{node.lineno} {owner}: "
+                                   "raise NotImplementedError")
                 # no pandas in the library: every kernel speaks Arrow
                 if isinstance(node, (ast.Import, ast.ImportFrom)):
                     mods = ([a.name for a in node.names]

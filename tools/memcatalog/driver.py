@@ -1,8 +1,9 @@
-"""Subprocess driver: exercises run_pipeline's sink="iceberg" branch —
-the REAL writer calls (the .using(...).partitionedBy(bucket).create()
-CTAS, then write.insertInto(overwrite=True) under dynamic partition
-overwrite) — against the in-memory V2 catalog (memcatalog.jar),
-including kill-and-resume.
+"""Subprocess driver: exercises run_pipeline's sink="table" branch with
+the default iceberg provider — the REAL writer calls (the
+.using(...).partitionedBy(bucket).create() CTAS, then
+write.insertInto(overwrite=True) under dynamic partition overwrite) —
+against the in-memory V2 catalog (memcatalog.jar), including
+kill-and-resume.
 
 Run by tests/test_pipeline_resume.py::test_iceberg_branch_executes_v2_catalog
 in a fresh process because the catalog jar must be on the driver
@@ -50,7 +51,7 @@ mdir = str(Path(workdir) / "manifests")
 # partial run: 1 of 2 commits, then "crash"
 r1 = run_pipeline(
     spark, pages_path, tbl, buckets=4, buckets_per_commit=2,
-    max_commits=1, sink="iceberg", manifest_path=mdir,
+    max_commits=1, sink="table", manifest_path=mdir,
 )
 assert r1["committed"] == 1 and r1["remaining"] > 0, r1
 mid = spark.table(tbl)
@@ -63,7 +64,7 @@ assert 0 < len(first_urls) < total_in
 # EXISTING table; committed buckets survive untouched
 r2 = run_pipeline(
     spark, pages_path, tbl, buckets=4, buckets_per_commit=2,
-    sink="iceberg", manifest_path=mdir,
+    sink="table", manifest_path=mdir,
 )
 assert r2["resumed_from"] == 2 and r2["remaining"] == 0, r2
 after = spark.table(tbl)
@@ -93,7 +94,7 @@ assert got == want, (got, want)
 # overwrite rewrites those partitions idempotently (no url duplication)
 r3 = run_pipeline(
     spark, pages_path, tbl, buckets=4, buckets_per_commit=2,
-    max_commits=1, sink="iceberg",
+    max_commits=1, sink="table",
     manifest_path=str(Path(workdir) / "manifests2"),
 )
 assert r3["committed"] == 1, r3
