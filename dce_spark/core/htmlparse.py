@@ -1,9 +1,9 @@
 """HTML -> pre-order node-table parser.
 
-A pragmatic WHATWG-HTML5 tree builder on top of the stdlib tokenizer
-(``html.parser.HTMLParser``), producing the columnar per-document "node
-table" the CETD dataflow consumes: parallel arrays in pre-order document
-order (kind, tag, attrs, text, parent, subtree_end) rooted at ``<body>``.
+A pragmatic WHATWG-HTML5 tokenizer and tree builder producing the
+columnar per-document "node table" the CETD dataflow consumes: parallel
+arrays in pre-order document order (kind, tag, attrs, text, parent,
+subtree_end) rooted at ``<body>``.
 
 The reference implementation parses with html5ever (spec-compliant error
 recovery); no spec parser exists in this environment, so this module
@@ -28,17 +28,21 @@ body-subtree shape on real-world pages:
 * foreign content (svg/math) with HTML breakout tags and integration
   points;
 * input preprocessing: CRLF/CR -> LF, NUL stripped from character data;
+* end of input as the spec tokenizer has it: a tag cut by EOF is
+  dropped, an unterminated comment or ``<!``/``<?`` bogus comment runs
+  to EOF, and an unterminated rawtext/RCDATA element keeps the rest as
+  its text;
 * text-node coalescing (one text node per run, like html5ever).
 
 Parity is validated against the reference's own golden fixtures (node
-counts, densest-node identity, extraction output) in tests/.
+counts, densest-node identity, extraction output) and against html5lib
+in tests/.
 """
 
 from __future__ import annotations
 
 import html as _htmllib
 import re
-from html.parser import HTMLParser
 
 __all__ = ["parse_html", "Document", "KIND_ELEMENT", "KIND_TEXT"]
 
@@ -126,9 +130,18 @@ _MAX_DEPTH = 512
 # IDENTICAL entries, so N unique-attr <b id=i> tags grow the AFE to N and
 # every reconstruction reopens all of them — O(N^2) node creation on
 # crafted pages. Real pages keep a handful of open formatting elements;
-# beyond the cap the OLDEST non-marker entry is dropped (generalized
-# ark), bounding reconstruction work per token.
+# beyond the cap the OLDEST entry is dropped (generalized ark), bounding
+# reconstruction work per token. Scope markers (td, th, caption...) do
+# not count, so a table cell does not shrink the cap.
 _MAX_AFE = 64
+
+# Rawtext/RCDATA elements: html5ever (scripting on) treats these as
+# text-only content; the RCDATA pair has its character references decoded.
+_RAWTEXT_ELEMENTS = frozenset(
+    "script style xmp iframe noembed noframes noscript textarea "
+    "title".split()
+)
+_RCDATA = frozenset(("textarea", "title"))
 
 # Tags still pushed within a small guard band beyond the cap: dropping
 # the push for these would re-parent their (pruned/rawtext) payload into
@@ -166,24 +179,8 @@ class Document:
         return len(self.kind)
 
 
-class _TreeBuilder(HTMLParser):
-    # Rawtext/RCDATA elements: stdlib only knows script/style; html5ever
-    # (scripting on) additionally treats these as text-only content.
-    CDATA_CONTENT_ELEMENTS = (
-        "script",
-        "style",
-        "xmp",
-        "iframe",
-        "noembed",
-        "noframes",
-        "noscript",
-        "textarea",
-        "title",
-    )
-    _RCDATA = frozenset(("textarea", "title"))
-
+class _TreeBuilder:
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         # node storage: parallel build arrays, children adjacency
         self.n_tag: list = [None]  # None marks a text node
         self.n_attrs: list = [None]
@@ -298,15 +295,19 @@ class _TreeBuilder(HTMLParser):
                 return
 
     def _afe_push(self, entry: list) -> None:
-        """Append a formatting entry, enforcing the AFE size cap (drop
-        the oldest non-marker entry when full)."""
+        self.afe.append(entry)
+        self._afe_cap()
+
+    def _afe_cap(self) -> None:
+        """Enforce the AFE size cap: while more than _MAX_AFE formatting
+        entries are listed (scope markers do not count), drop the
+        oldest."""
         afe = self.afe
-        afe.append(entry)
-        if len(afe) > _MAX_AFE:
-            for i, e in enumerate(afe):
-                if e is not None:
-                    del afe[i]
-                    break
+        while len(afe) > _MAX_AFE:
+            live = [i for i, e in enumerate(afe) if e is not None]
+            if len(live) <= _MAX_AFE:
+                return
+            del afe[live[0]]
 
     # ---- adoption agency (spec 13.2.6.4.7) -------------------------------
 
@@ -449,16 +450,9 @@ class _TreeBuilder(HTMLParser):
             if fmt_pos < bookmark:
                 bookmark -= 1
             afe.insert(bookmark, [fmt_tag, fmt_attrs, new_fmt])
-            # Re-enforce the size cap: the delete+insert is net-zero per
-            # iteration, but the invariant must hold on every exit path,
-            # not just through _afe_push.
-            while len(afe) > _MAX_AFE:
-                for i, e in enumerate(afe):
-                    if e is not None:
-                        del afe[i]
-                        break
-                else:
-                    break
+            # The delete+insert is net-zero per iteration, but the cap
+            # must hold on every exit path, not just through _afe_push.
+            self._afe_cap()
             # Stack: fmt out, new_fmt immediately below the block.
             del stack[stack_pos]
             fb_pos -= 1
@@ -681,18 +675,13 @@ class _TreeBuilder(HTMLParser):
             data = data.replace("\x00", "")
         if not data:
             return
-        cdata = self.cdata_elem  # set by stdlib tokenizer while in rawtext
-        if cdata in self._RCDATA:
-            data = _htmllib.unescape(data)
         if not self.in_body:
             stripped = data.lstrip("\t\n\x0c\r ")
-            if not stripped or self.cdata_elem is not None:
-                if cdata == "title" and data:
-                    self.head_title.append(data)
-                return  # whitespace before body / head rawtext payload
+            if not stripped:
+                return  # whitespace before body
             self.in_body = True
             data = stripped
-        if self.afe and self.cdata_elem is None:
+        if self.afe:
             # spec: character tokens reconstruct formatting, except
             # whitespace pending inside a table context
             if not (
@@ -704,16 +693,17 @@ class _TreeBuilder(HTMLParser):
         self._insert_text(data)
 
     def handle_rawtext(self, tag: str, data: str) -> None:
-        """Fast-tokenizer path: raw content of a rawtext/RCDATA element.
-        Inserted under the (already-open) element; discarded pre-body
-        (except <title>, captured for document-level text walks)."""
+        """Raw content of a rawtext/RCDATA/plaintext element, up to its
+        end tag or EOF. Inserted under the (already-open) element;
+        discarded pre-body (except <title>, captured for document-level
+        text walks)."""
         if not self.in_body:
             if tag == "title" and data:
                 if "&" in data:
                     data = _htmllib.unescape(data)
                 self.head_title.append(data)
             return
-        if tag in self._RCDATA and "&" in data:
+        if tag in _RCDATA and "&" in data:
             data = _htmllib.unescape(data)
         if self._strip_nl:
             self._strip_nl = False
@@ -818,9 +808,6 @@ class _TreeBuilder(HTMLParser):
                 self.form_ptr = idx
             if tag in ("pre", "listing"):
                 self._strip_nl = True
-            if tag == "plaintext":
-                # Everything after <plaintext> is raw text.
-                self.set_cdata_mode("plaintext")
             return
 
         if tag in ("li", "dd", "dt"):
@@ -1107,15 +1094,14 @@ def _attrs_dict(attrs) -> dict:
     """
     if not attrs:
         return {}
-    if isinstance(attrs, tuple):
-        cached = _DICT_CACHE.get(attrs)
-        if cached is not None:
-            return cached
+    cached = _DICT_CACHE.get(attrs)
+    if cached is not None:
+        return cached
     d: dict = {}
     for name, value in attrs:
         if name not in d:
             d[name] = value if value is not None else ""
-    if isinstance(attrs, tuple) and len(_DICT_CACHE) < _ATTR_CACHE_MAX:
+    if len(_DICT_CACHE) < _ATTR_CACHE_MAX:
         _DICT_CACHE[attrs] = d
     return d
 
@@ -1132,13 +1118,11 @@ def _has_font_breakout_attr(attrs) -> bool:
 
 
 # ---------------------------------------------------------------------
-# Fast tokenizer: a single compiled-regex scan replacing the stdlib
-# HTMLParser state machine (which profiles at ~75% of extraction time).
-# Drives the same _TreeBuilder callbacks, so tree-construction semantics
-# are identical; the golden test suite runs against BOTH tokenizers.
+# Tokenizer: one compiled-regex scan per tag (a character-level state
+# machine profiles at ~75% of extraction time), with a spec-shaped
+# manual scan for the tags the regex rejects. It drives the
+# _TreeBuilder callbacks and decides everything that happens at EOF.
 # ---------------------------------------------------------------------
-
-_RAWTEXT_ELEMENTS = frozenset(_TreeBuilder.CDATA_CONTENT_ELEMENTS)
 
 _TAG_RE = re.compile(
     # Attrs region: a quote PAIRS (and may span '>') only in value
@@ -1181,15 +1165,14 @@ _RAWTEXT_END = {
 
 # Attribute-string parse cache: real pages repeat the same class/style
 # attribute strings thousands of times. Values are shared immutable
-# tuples; _attrs_dict builds a fresh dict per element (dicts are stored
-# on nodes and must not be shared).
+# tuples, which _attrs_dict in turn maps to shared read-only dicts.
 _ATTR_CACHE: dict = {}
 _ATTR_CACHE_MAX = 65536
 
 
-def _parse_attrs(s: str) -> list:
+def _parse_attrs(s: str) -> tuple:
     if not s or s.isspace():
-        return []
+        return ()
     cached = _ATTR_CACHE.get(s)
     if cached is not None:
         return cached
@@ -1282,179 +1265,101 @@ def _feed_fast(builder: _TreeBuilder, html: str) -> None:
             chunk = html[pos:lt]
             emit_text(chunk if "&" not in chunk else _htmllib.unescape(chunk))
         m = _TAG_RE.match(html, lt)
-        if m is None:
-            if html.startswith("</", lt) and html[lt + 2: lt + 3]:
-                nxt2 = html[lt + 2]
-                if not _ascii_alpha(nxt2):
-                    # spec end-tag-open with a non-alpha next char:
-                    # `</>` is a missing-end-tag-name (dropped) and
-                    # anything else (`</=>`, `</ x>`) is a BOGUS
-                    # COMMENT consumed through the next `>` — never
-                    # character data (stdlib html.parser agrees)
-                    gt = find(">", lt + 2)
-                    pos = n if gt < 0 else gt + 1
-                    continue
+        if m is not None:
+            pos = m.end()
+            name = m.group("name")
+            if name is None:
+                if m.group("comment"):
+                    # Spec comment-end handling: "<!-->" / "<!--->" are
+                    # abruptly-closed empty comments, and "--!>" also
+                    # closes a comment (incorrectly-closed-comment parse
+                    # error) — both matter only for WHERE the comment
+                    # ends, since comment data is dropped.
+                    if html.startswith(">", pos):
+                        pos += 1
+                    elif html.startswith("->", pos):
+                        pos += 2
+                    else:
+                        end = find("-->", pos)
+                        bang = find("--!>", pos)
+                        if bang >= 0 and (end < 0 or bang < end):
+                            pos = bang + 4
+                        else:
+                            pos = n if end < 0 else end + 3
+                elif m.group("decl") is not None:
+                    builder.handle_decl(m.group("decl")[1:])
+                # processing instruction / bogus comment: skipped
+                continue
+            is_end = m.group("end")
+            attrs_s = m.group("attrs")
+        else:
+            nxt = html[lt + 1: lt + 2]
+            if nxt in ("!", "?"):
+                # the regex takes every '<!'/'<?' with a '>' after it:
+                # this one is a bogus comment that runs to EOF
+                return
+            if nxt == "/" and html[lt + 2: lt + 3] and not _ascii_alpha(
+                html[lt + 2]
+            ):
+                # spec end-tag-open with a non-alpha next char: `</>` is
+                # a missing-end-tag-name (dropped) and anything else
+                # (`</=>`, `</ x>`) is a BOGUS COMMENT consumed through
+                # the next `>` (or to EOF) — never character data
+                gt = find(">", lt + 2)
+                pos = n if gt < 0 else gt + 1
+                continue
             scan = _scan_tag_slow(html, lt)
             if scan is None:
                 # '<' that does not open a tag is character data
                 emit_text("<")
                 pos = lt + 1
                 continue
-            pos, is_end, raw_name, attrs_s, hit_eof = scan
+            pos, is_end, name, attrs_s, hit_eof = scan
             if hit_eof:
-                # Residual EOF-in-tag safety net. The common trailing
-                # fragment is already dropped spec-identically by
-                # _strip_eof_tag_fragment; this branch is reachable
-                # only when a quoted attribute VALUE swallows the last
-                # '>' of the document (`<a href="foo > bar` + EOF) —
-                # the spec drops everything from the '<', but the
-                # stdlib fallback tokenizer flushes it as character
-                # data and the dual-tokenizer parity invariant (both
-                # build identical trees) wins: we keep a superstring
-                # of the spec text, never less.
-                emit_text("<")
-                pos = lt + 1
-                continue
-            tag = raw_name if raw_name.islower() else raw_name.lower()
-            if is_end:
-                h_end(tag)
-                continue
-            self_closing = attrs_s.endswith("/")
-            attrs = _parse_attrs(
-                attrs_s[:-1] if self_closing else attrs_s
-            )
-            if self_closing:
-                h_se(tag, attrs)
-            else:
-                h_start(tag, attrs)
-            if tag == "plaintext" and builder.in_body:
-                h_raw("plaintext", html[pos:])
+                # spec eof-in-tag: the unfinished tag emits nothing (an
+                # unterminated quoted value swallows the rest, like
+                # html5lib and html5ever)
                 return
-            if (
-                not self_closing
-                and tag in _RAWTEXT_ELEMENTS
-                and not builder._cur_foreign()
-            ):
-                endm = _RAWTEXT_END[tag].search(html, pos)
-                if endm is None:
-                    h_raw(tag, html[pos:])
-                    h_end(tag)
-                    return
-                h_raw(tag, html[pos:endm.start()])
-                h_end(tag)
-                gt = find(">", endm.end())
-                pos = n if gt < 0 else gt + 1
+        tag = name if name.islower() else name.lower()
+        if is_end:
+            h_end(tag)
             continue
-        pos = m.end()
-        name = m.group("name")
-        if name is not None:
-            tag = name if name.islower() else name.lower()
-            if m.group("end"):
+        self_closing = attrs_s.endswith("/")
+        attrs = _parse_attrs(attrs_s[:-1] if self_closing else attrs_s)
+        if self_closing:
+            h_se(tag, attrs)
+        else:
+            h_start(tag, attrs)
+        if tag == "plaintext" and builder.in_body:
+            h_raw("plaintext", html[pos:])
+            return
+        if (
+            not self_closing
+            and tag in _RAWTEXT_ELEMENTS
+            and not builder._cur_foreign()
+        ):
+            endm = _RAWTEXT_END[tag].search(html, pos)
+            if endm is None:
+                h_raw(tag, html[pos:])
                 h_end(tag)
-                continue
-            attrs_s = m.group("attrs")
-            self_closing = attrs_s.endswith("/")
-            attrs = _parse_attrs(attrs_s[:-1] if self_closing else attrs_s)
-            if self_closing:
-                h_se(tag, attrs)
-            else:
-                h_start(tag, attrs)
-            if tag == "plaintext" and builder.in_body:
-                h_raw("plaintext", html[pos:])
                 return
-            if (
-                not self_closing
-                and tag in _RAWTEXT_ELEMENTS
-                and not builder._cur_foreign()
-            ):
-                endm = _RAWTEXT_END[tag].search(html, pos)
-                if endm is None:
-                    h_raw(tag, html[pos:])
-                    h_end(tag)
-                    return
-                h_raw(tag, html[pos : endm.start()])
-                h_end(tag)
-                gt = find(">", endm.end())
-                pos = n if gt < 0 else gt + 1
-            continue
-        if m.group("comment"):
-            # Spec comment-end handling: "<!-->" / "<!--->" are
-            # abruptly-closed empty comments, and "--!>" also closes a
-            # comment (incorrectly-closed-comment parse error) — both
-            # matter only for WHERE the comment ends, since comment
-            # data is dropped.
-            if html.startswith(">", pos):
-                pos += 1
-                continue
-            if html.startswith("->", pos):
-                pos += 2
-                continue
-            end = find("-->", pos)
-            bang = find("--!>", pos)
-            if bang >= 0 and (end < 0 or bang < end):
-                pos = bang + 4
-            else:
-                pos = n if end < 0 else end + 3
-            continue
-        decl = m.group("decl")
-        if decl is not None:
-            builder.handle_decl(decl[1:])
-            continue
-        # processing instruction / bogus comment: skipped
+            h_raw(tag, html[pos:endm.start()])
+            h_end(tag)
+            gt = find(">", endm.end())
+            pos = n if gt < 0 else gt + 1
 
 
 def _ascii_alpha(ch: str) -> bool:
     return "a" <= ch <= "z" or "A" <= ch <= "Z"
 
 
-def _strip_eof_tag_fragment(html: str) -> str:
-    """Drop a trailing unterminated tag fragment (`...<a href="/x` at
-    EOF with no closing `>`), the commonest crawl truncation. The spec
-    tokenizer DROPS a tag hit by EOF (eof-in-tag: emit nothing), as do
-    html5lib and html5ever (the reference's parser, html/src/tokenizer
-    studied for parity); flushing it as text both leaks markup into
-    extracted content and breaks differential parity. One shared
-    pre-pass keeps the two tokenizers (fast scan / stdlib fallback)
-    byte-identical without per-tokenizer EOF surgery. Only a genuine
-    tag-open start truncates (`<x`, `</x`, `<!`, `<?`); a lone `<`,
-    `</` or `< p` tail stays — the spec emits those as character
-    data."""
-    start = html.rfind(">") + 1
-    # the `>`-free tail can chain raw `<`s (`...<sp<`, `...</s<li`):
-    # the FIRST tag-opening `<` swallows the rest into its tag name,
-    # so truncation happens there, not at the last `<`
-    i = html.find("<", start)
-    while i >= 0:
-        nxt = html[i + 1: i + 2]
-        if _ascii_alpha(nxt) or nxt in ("!", "?"):
-            return html[:i]
-        if nxt == "/" and html[i + 2: i + 3]:
-            # `</x...` EOF drops the tag; `</junk...` EOF is a bogus
-            # comment consumed to end-of-file (comment, never text) —
-            # either way the fragment yields no character data. Only a
-            # bare trailing `</` stays (spec emits it as text).
-            return html[:i]
-        i = html.find("<", i + 1)
-    return html
-
-
-def parse_html(html: str, tokenizer: str = "fast") -> Document:
+def parse_html(html: str) -> Document:
     """Parse an HTML string into the pre-order body node table."""
     # Input-stream preprocessing per spec: normalize newlines.
     if "\r" in html:
         html = html.replace("\r\n", "\n").replace("\r", "\n")
-    html = _strip_eof_tag_fragment(html)
     builder = _TreeBuilder()
-    try:
-        if tokenizer == "fast":
-            _feed_fast(builder, html)
-        else:
-            builder.feed(html)
-            builder.close()
-    except Exception:
-        # Total function: never raise on malformed markup; keep whatever
-        # tree was built so far (the reference is similarly total).
-        pass
+    _feed_fast(builder, html)
 
     # Linearize to pre-order arrays rooted at body (node 0).
     n_tag = builder.n_tag

@@ -54,11 +54,6 @@ def count_graphemes(text: str) -> int:
     return len(_GRAPHEME.findall(text))
 
 
-def count_code_points(text: str) -> int:
-    """Unicode code point count (reference src/unicode.rs:47-49)."""
-    return len(text)
-
-
 def nfc(text: str) -> str:
     if text.isascii():
         return text

@@ -635,26 +635,6 @@ def char_entropy(documents: DataFrame) -> DataFrame:
     )
 
 
-def compression_ratio(documents: DataFrame) -> DataFrame:
-    """zlib compressibility quality signal (CCNet-style): highly
-    repetitive/boilerplate text compresses far below prose. No SQL
-    analogue exists (DuckDB has no zlib), so this is a library op with
-    pytest coverage rather than a driver-oracled query. Arrow-batched
-    row map; level 6 to match the usual pipeline setting."""
-    import zlib
-
-    def ratio(doc_id, text):
-        raw = (text or "").encode("utf-8")
-        comp = len(zlib.compress(raw, 6))
-        yield doc_id, len(raw), comp, (comp / len(raw)) if raw else 1.0
-
-    return map_rows(
-        documents.select(F.col("doc_id").cast("long").alias("doc_id"), "text"),
-        "doc_id long, raw_bytes long, compressed_bytes long, ratio double",
-        ratio,
-    )
-
-
 def kmv_distinct_sketch(documents: DataFrame, k: int = 64) -> DataFrame:
     """K-minimum-values distinct-token estimator per source.
 
@@ -2375,48 +2355,6 @@ def chunk_documents(
         F.col("c.chunk").alias("chunk_text"),
         F.col("c.n_tok").alias("n_tokens"),
     )
-
-
-def exact_k_sample(
-    documents: DataFrame, n: int, id_col: str = "doc_id",
-    salt: str = "ek1",
-) -> DataFrame:
-    """EXACT-size deterministic sample: the n documents with the
-    smallest md5(salt:id) draw — the eval-set / holdout carve-out
-    where "about 10%" (rate-based deterministic_sample) isn't
-    acceptable and the set must be stable across engines, runs, and
-    partitionings.
-
-    Scale shape: orderBy(draw).limit(n) plans as TakeOrderedAndProject
-    — per-partition top-n heaps merged at the driver, NO global sort
-    shuffle; memory is O(n) per task. Ties are impossible (md5 of
-    distinct ids), so the selection is total-order-deterministic."""
-    draw = F.md5(
-        F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))
-    )
-    return (
-        documents.withColumn("_draw", draw)
-        .orderBy("_draw")
-        .limit(n)
-        .drop("_draw")
-    )
-
-
-def merge_bloom_filters(*filters: DataFrame) -> DataFrame:
-    """OR-fold packed Bloom tables (bloom_filter_words outputs built
-    with the SAME n_hashes/n_bits) into one: union + one bit_or
-    aggregate on the word key. This is how the historical filter
-    accumulates across crawls WITHOUT ever re-scanning old corpora —
-    crawl N's filter merges with the batch-N+1 filter in
-    O(filter size), and might-contain over the merge behaves exactly
-    as if built from the concatenated corpora (bitwise OR is the
-    Bloom union)."""
-    if not filters:
-        raise ValueError("need at least one filter")
-    out = filters[0]
-    for f in filters[1:]:
-        out = out.unionByName(f)
-    return out.groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
 def boilerplate_lines(

@@ -90,16 +90,15 @@ def _manifest_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
 
 def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
     """The committed manifest; empty while no commit has written one.
-    Only a missing path means that: any other failure (unknown URI
-    scheme, unreachable store) raises."""
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(
-            _manifest_dir(output_path)
-        )
-    except AnalysisException as exc:
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
+    Only a missing path means that, and it is checked through the
+    Hadoop FileSystem, so a fresh output runs no failing read (whose
+    listener failure Spark would log as an ERROR). Any other failure
+    (unknown URI scheme, unreachable store) raises."""
+    path = _manifest_dir(output_path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return _manifest_frame(spark, [])
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:

@@ -407,7 +407,7 @@ def test_mutated_real_pages_never_lose_text():
     text on our side: noscript is rawtext for us (scripting-enabled,
     as in html5ever/the reference; html5lib parses scripting-disabled)
     and numeric charrefs resolving to C0 controls are sanitized by the
-    shared stdlib unescape (html5lib keeps the raw control char)."""
+    stdlib html.unescape (html5lib keeps the raw control char)."""
     sys = __import__("sys")
     from pathlib import Path as _P
 
@@ -453,18 +453,42 @@ def test_mutated_real_pages_never_lose_text():
     assert checked >= 50
 
 
-def test_eof_fragment_prepass_spec_parity():
-    """Trailing unterminated tag fragments drop exactly like the spec
-    (html5lib parity), including chained raw `<`s and bogus end-tag
-    tails; a lone `<`, `</` or `< x` tail stays character data."""
+def test_eof_spec_parity():
+    """End of input follows the spec (html5lib parity): a tag cut by
+    EOF drops, including chained raw `<`s, bogus end-tag tails and a
+    quoted value that swallows the last `>`; a lone `<`, `</` or `< x`
+    tail stays character data; EOF inside RCDATA or plaintext keeps
+    the `<y` tail as text; an unterminated value swallows the rest of
+    the page."""
     for frag in ("x <a", "x <a href=\"/y", "x <sp<", "x </s<li",
-                 "x </\x7fp", "x <meta dat", "x <!doctyp", "x <?p"):
+                 "x </\x7fp", "x <meta dat", "x <!doctyp", "x <?p",
+                 "x <a href=\"foo > bar", "x <div title=\"a>b>c"):
         assert text_seq(ours_canon("<body>" + frag)) == \
             text_seq(h5_canon("<body>" + frag)), frag
         assert text_seq(ours_canon("<body>" + frag)) == ["x"], frag
     for keep in ("x <", "x </", "x < p"):
         assert text_seq(ours_canon("<body>" + keep)) == \
             text_seq(h5_canon("<body>" + keep)), keep
+    for html, want in (
+        ("<title>A < B and x<y", ["A < B and x<y"]),
+        ("<plaintext>z <y", ["z <y"]),
+        ('<p>a<a href="x >\n<p>more</p>', ["a"]),
+    ):
+        html = "<body>" + html
+        assert ours_canon(html) == h5_canon(html), html
+        assert text_seq(ours_canon(html)) == want, html
+
+
+@pytest.mark.parametrize("tag", ["a", "nobr"])
+def test_afe_cap_ignores_scope_markers(tag):
+    """The active-formatting cap counts formatting entries only: inside
+    a table cell (whose marker sits on the list) an <a> or <nobr>
+    followed by 63 more formatting elements is still listed, so a
+    second one closes it and the two stay siblings, as in html5lib."""
+    many = "".join(f'<i id="{k}">' for k in range(63))
+    html = (f'<body><table><tr><td><div><{tag} href="1">x' + many
+            + f'<{tag} href="2">y')
+    assert ours_canon(html) == h5_canon(html)
 
 
 def test_bogus_end_tag_is_comment_not_text():

@@ -143,7 +143,7 @@ def test_routes_agree_on_pages_zip(pages, monkeypatch, capsys):
     _differential(list(pages.values()), monkeypatch, capsys, "pages.zip")
 
 
-_CAPPED = "".join(f'<i id="{k}">' for k in range(63))
+_CAPPED = "".join(f'<i id="{k}">' for k in range(64))
 
 # (shape, html, tag of the converted root or None for body, markdown)
 REPARSED = [

@@ -1,5 +1,7 @@
 """HTML5-lite tree builder behavior tests."""
 
+import pytest
+
 from dce_spark.core.htmlparse import KIND_ELEMENT, KIND_TEXT, parse_html
 
 
@@ -270,18 +272,17 @@ def test_noahs_ark_caps_identical_entries():
 def test_adoption_agency_b_p():
     # the spec's own worked example (13.2.10.2): <b>1<p>2</b>3</p>
     # -> body{ b{1}, p{ b{2}, 3 } }; "3" is NOT bold
-    for tok in ("fast", "stdlib"):
-        doc = parse_html("<body><b>1<p>2</b>3</p>", tokenizer=tok)
-        bs = [i for i in range(len(doc)) if doc.tag[i] == "b"]
-        p = next(i for i in range(len(doc)) if doc.tag[i] == "p")
-        assert len(bs) == 2
-        assert doc.parent[bs[0]] == 0 and doc.parent[bs[1]] == p
-        t2 = next(i for i in range(len(doc))
-                  if doc.kind[i] == KIND_TEXT and doc.text[i] == "2")
-        t3 = next(i for i in range(len(doc))
-                  if doc.kind[i] == KIND_TEXT and doc.text[i] == "3")
-        assert doc.parent[t2] == bs[1]
-        assert doc.parent[t3] == p  # clone was popped by outer-loop pass 2
+    doc = parse_html("<body><b>1<p>2</b>3</p>")
+    bs = [i for i in range(len(doc)) if doc.tag[i] == "b"]
+    p = next(i for i in range(len(doc)) if doc.tag[i] == "p")
+    assert len(bs) == 2
+    assert doc.parent[bs[0]] == 0 and doc.parent[bs[1]] == p
+    t2 = next(i for i in range(len(doc))
+              if doc.kind[i] == KIND_TEXT and doc.text[i] == "2")
+    t3 = next(i for i in range(len(doc))
+              if doc.kind[i] == KIND_TEXT and doc.text[i] == "3")
+    assert doc.parent[t2] == bs[1]
+    assert doc.parent[t3] == p  # clone was popped by outer-loop pass 2
 
 
 def test_adoption_agency_a_div_chain():
@@ -329,12 +330,11 @@ def test_adoption_agency_inner_loop_drops_non_formatting():
 
 
 def test_title_text_captured():
-    for tok in ("fast", "stdlib"):
-        doc = parse_html(
-            "<html><head><title>My &amp; Title</title></head>"
-            "<body><p>x</p></body></html>", tokenizer=tok)
-        assert doc.head_text == ("My & Title",)
-        assert "title" not in tags(doc)  # still not a body node
+    doc = parse_html(
+        "<html><head><title>My &amp; Title</title></head>"
+        "<body><p>x</p></body></html>")
+    assert doc.head_text == ("My & Title",)
+    assert "title" not in tags(doc)  # still not a body node
 
 
 def test_subtree_end_invariants():
@@ -473,16 +473,27 @@ def test_malformed_attr_equals_runs_parse_linear_time():
         assert texts == ["hello"]
 
 
-def test_eof_tag_fragment_strip_rcdata_divergence_pinned():
-    """Accepted tradeoff, pinned: _strip_eof_tag_fragment drops a
-    '<'+alpha tail after the document's last '>', even when that tail
-    is RCDATA content of an unterminated element — the spec (and
-    html5lib) would keep '<y' as character data of the open <title>.
-    The pre-pass guards the common truncated-page case (a page cut
-    mid-tag) and only ever loses bytes at EOF of an already-truncated
-    document; full RCDATA-state tracking in a pre-tokenizer pass would
-    re-implement half the tokenizer for that tail. Documented loss:
-    the fragment after the last '<' is dropped."""
+def test_eof_inside_rcdata_keeps_text():
+    """EOF inside an unterminated RCDATA element ends its text, not a
+    tag: the spec (and html5lib) keep '<y' as character data of the
+    open <title>, so nothing after the last '>' is lost."""
     doc = parse_html("<p>keep</p><title>A < B and x<y")
     texts = [doc.text[i] for i in range(len(doc)) if doc.kind[i] == 1]
-    assert texts == ["keep", "A < B and x"]
+    assert texts == ["keep", "A < B and x<y"]
+
+
+def test_builder_fault_becomes_error_status(monkeypatch):
+    """A fault inside the tree builder is not swallowed: parse_html
+    raises, and extract_page reports it as the row status instead of
+    `ok` on a partial tree."""
+    from dce_spark.core import htmlparse
+    from dce_spark.core.api import extract_page
+
+    def fault(self, tag):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(htmlparse._TreeBuilder, "handle_endtag", fault)
+    html = "<body><p>kept</p><div>x</div>"
+    with pytest.raises(RuntimeError):
+        parse_html(html)
+    assert extract_page(html)["status"] == "error:RuntimeError"

@@ -620,3 +620,47 @@ def test_retried_write_task_is_counted_once(pages_path, tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert "RETRY_OK" in r.stdout
+
+
+_TWO_FRESH_RUNS = r"""
+import sys
+
+repo, pages, out = sys.argv[1:4]
+sys.path.insert(0, repo)
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "4")
+    .getOrCreate()
+)
+from dce_spark.spark.pipeline import run_pipeline
+
+for k in range(2):
+    run_pipeline(spark, pages, f"{out}{k}", buckets=2, buckets_per_commit=2)
+spark.stop()
+"""
+
+
+def test_fresh_output_logs_no_listener_error(pages_path, tmp_path):
+    """Two run_pipeline calls on fresh output paths in one session: the
+    manifest probe checks existence through the Hadoop FileSystem and
+    runs no failing read, so Spark's observation listener (registered
+    by the first commit) logs no ERROR pointing at a non-failure."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    env = dict(os.environ, PYTHONPATH=str(root))
+    env.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
+    r = subprocess.run(
+        [sys.executable, "-c", _TWO_FRESH_RUNS, str(root), pages_path,
+         str(tmp_path / "out")],
+        capture_output=True, text=True, timeout=420, cwd=str(root), env=env,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "Listener threw an exception" not in r.stderr
+    assert "PATH_NOT_FOUND" not in r.stderr

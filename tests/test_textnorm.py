@@ -2,7 +2,6 @@
 
 from dce_spark.core.textnorm import (
     RUST_WHITESPACE,
-    count_code_points,
     count_graphemes,
     detect_primary_script,
     join_text_fragments,
@@ -21,14 +20,6 @@ def test_count_graphemes():
     assert count_graphemes("Hello, 世界!") == 10
     # CRLF is a single extended grapheme cluster
     assert count_graphemes("a\r\nb") == 3
-
-
-def test_count_code_points():
-    # src/unicode.rs:166-172
-    assert count_code_points("hello") == 5
-    assert count_code_points("café") == 4
-    assert count_code_points("こんにちは") == 5
-    assert count_code_points("\U0001F469‍\U0001F4BB") == 3
 
 
 def test_normalize_text():

@@ -479,7 +479,7 @@ def test_pack_shards_budget_and_order(spark):
         assert shards == [0, 0, 0, 1, 1]
 
 
-def test_char_entropy_and_compression_quality_signals(spark):
+def test_char_entropy_quality_signal(spark):
     prose = ("the quick brown fox jumps over the lazy dog and keeps "
              "running through the quiet evening fields") * 3
     repeat = "aaaa bbbb " * 30
@@ -494,11 +494,6 @@ def test_char_entropy_and_compression_quality_signals(spark):
            for r in textops.char_entropy(docs).collect()}
     assert ent[1] > ent[2]  # prose carries more entropy than repetition
     assert ent[3] == 0.0
-    comp = {r.doc_id: r for r in textops.compression_ratio(docs).collect()}
-    assert comp[1].ratio > comp[2].ratio  # repetition compresses harder
-    assert comp[3].ratio == 1.0 and comp[3].raw_bytes == 0
-    import zlib
-    assert comp[1].compressed_bytes == len(zlib.compress(prose.encode(), 6))
 
 
 def test_decontaminate_flags_overlap(spark):
@@ -1457,30 +1452,6 @@ def test_span_dedup_within_doc_repeat(spark):
     assert r.text_dedup == "Aa aa | Bb bb | Cc cc | tail end"
 
 
-def test_exact_k_sample_deterministic_topn(spark):
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(300)], ["doc_id", "text"]
-    )
-    a = sorted(r.doc_id for r in textops.exact_k_sample(docs, 25).collect())
-    assert len(a) == 25
-    # identical under repartitioning and re-evaluation
-    b = sorted(r.doc_id for r in textops.exact_k_sample(
-        docs.repartition(17), 25).collect())
-    assert a == b
-    # growing k extends, never reshuffles, the selection (prefix
-    # property of a fixed total order)
-    c = sorted(r.doc_id for r in textops.exact_k_sample(docs, 40).collect())
-    assert set(a) <= set(c)
-    # different salt = different (deterministic) set
-    d = sorted(r.doc_id for r in textops.exact_k_sample(
-        docs, 25, salt="other").collect())
-    assert d != a
-    # the plan is a top-n, not a global sort
-    plan = textops.exact_k_sample(docs, 25)._jdf.queryExecution()\
-        .executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_dup_ngram_fraction_matches_python_replica_random(spark):
     import random
 
@@ -1562,24 +1533,6 @@ def test_span_dedup_matches_python_replica_random(spark):
                    spark.createDataFrame(docs, ["doc_id", "text"]),
                    n=3).collect()}
         assert out == expected, trial
-
-
-def test_merge_bloom_filters_equals_union_build(spark):
-    a = spark.createDataFrame(
-        [(i, f"alpha doc {i}") for i in range(40)], ["doc_id", "text"])
-    b = spark.createDataFrame(
-        [(100 + i, f"beta doc {i}") for i in range(40)],
-        ["doc_id", "text"])
-    n_bits = 1 << 12
-    merged = {r.word: r.bits for r in textops.merge_bloom_filters(
-        textops.bloom_filter_words(a, n_bits=n_bits),
-        textops.bloom_filter_words(b, n_bits=n_bits),
-    ).collect()}
-    direct = {r.word: r.bits for r in textops.bloom_filter_words(
-        a.unionByName(b), n_bits=n_bits).collect()}
-    assert merged == direct
-    with pytest.raises(ValueError):
-        textops.merge_bloom_filters()
 
 
 def test_minhash_dedup_best_keeps_best_copy(spark):

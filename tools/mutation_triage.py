@@ -40,12 +40,13 @@ _C0 = str.maketrans("", "", "".join(
 def lost_by_us(html: str):
     """Content-projection text html5lib keeps and we drop (script/
     style/etc payloads excluded — extraction never reads them, and a
-    mutated rawtext boundary makes the two tokenizers legitimately
-    disagree about where the payload ends). Two adjudicated classes
-    are normalized out, mirroring the pinned retention test:
-    unbalanced <template> (spec keeps the tail in the out-of-body
-    contents fragment; html5lib leaks it back) and C0-control
-    charrefs (sanitized by the shared stdlib unescape)."""
+    mutated rawtext boundary makes our parser and html5lib
+    legitimately disagree about where the payload ends). Two
+    adjudicated classes are normalized out, mirroring the pinned
+    retention test: unbalanced <template> (spec keeps the tail in the
+    out-of-body contents fragment; html5lib leaks it back) and
+    C0-control charrefs (sanitized by the stdlib html.unescape our
+    tokenizer decodes with)."""
     if len(_re.findall(r"<template[\s>]", html, _re.I)) > len(
         _re.findall(r"</template", html, _re.I)
     ):
