@@ -60,10 +60,10 @@ _GOLDEN_DIR = str(Path(__file__).resolve().parent / "testdata")
 
 def _extract_corpus(spark: SparkSession, n_synthetic: int, mode: str) -> DataFrame:
     from dce_spark.spark.corpus import build_pages_df
-    from dce_spark.spark.pipeline import extract_pages
+    from dce_spark.spark.udf import attach_extraction
 
     pages = build_pages_df(spark, n_synthetic=n_synthetic, include_fixtures=True)
-    return extract_pages(pages, mode=mode, num_partitions=4, salt_factor=2)
+    return attach_extraction(pages, mode=mode)
 
 
 def _len_md5(col: str, len_alias: str, md5_alias: str) -> list:
@@ -148,7 +148,7 @@ def _q_cetd_eval_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dce_spark.spark.corpus import build_pages_df
     from dce_spark.spark.evalcorpus import build_eval_pages_df
     from dce_spark.spark.evaljob import score_pairs
-    from dce_spark.spark.pipeline import extract_pages
+    from dce_spark.spark.udf import attach_extraction
 
     # fixtures + synthetic snapshot pairs (regression value) UNION the
     # 144-page realistic template corpus whose gold is INDEPENDENT of
@@ -156,7 +156,7 @@ def _q_cetd_eval_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = build_pages_df(spark, n_synthetic=24, include_fixtures=True)
     pages = pages.unionByName(build_eval_pages_df(spark, n=144))
     extracted = (
-        extract_pages(pages, mode="content", num_partitions=4)
+        attach_extraction(pages, mode="content")
         .select(F.col("url").alias("stem"), "extracted_text")
         # score CleanEval-sized documents (the reference's corpus is a
         # few KB per file); word-LCS is O(m*n) per pair by design

@@ -9,7 +9,7 @@ re-architected for Spark:
                             (parse -> density tree -> selection -> text),
                             zero Spark dependencies; this is the hot path
                             that runs inside Arrow-batched UDFs.
-- ``dce_spark.spark``     — DataFrame pipeline: scan, salted repartition,
+- ``dce_spark.spark``     — DataFrame pipeline: scan, bucket rebalance,
                             mapInArrow extraction, manifest/resume sink,
                             CleanEval-style scoring job, synthetic corpus.
 - ``dce_spark.functions`` — large-scale training-data ops (dedup families,

@@ -1,2 +1,2 @@
-"""Spark-side pipeline: scan -> salted exchange -> Arrow-batched
+"""Spark-side pipeline: scan -> bucket rebalance -> Arrow-batched
 extraction -> committed write with lineage manifests."""

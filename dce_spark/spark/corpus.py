@@ -10,7 +10,7 @@ input_hint specifies:
   test HTML (contentless, hidden variants, malformed, unicode);
 * Scaled rows — seeded synthetic article pages, sizes log-normal
   around ~50 KB (matching the pages.zip range), 20% of rows on one
-  hot domain to exercise skew salting.
+  hot domain, which the url-hash buckets must spread.
 
 Generation is distributed (spark.range -> row map) so the corpus
 scales with the cluster rather than the driver.

@@ -1,21 +1,21 @@
-"""End-to-end extraction pipeline: scan -> salted exchange -> Arrow map
+"""End-to-end extraction pipeline: scan -> bucket rebalance -> Arrow map
 -> bucket-committed write with lineage manifests + resume.
 
-Physical plan (the job's ONLY shuffle is the explicit salting exchange):
+Physical plan (the job's ONLY shuffle is the bucket rebalance):
 
     Scan parquet/Iceberg [url, html]          (column-pruned, pushed down)
-      -> Exchange hashpartitioning(xxhash64(url), P)   (skew defeat)
+      -> Exchange REBALANCE(bucket)                    (one bucket per task)
       -> PythonMapInArrow extract_batches              (the CETD map)
       -> CollectMetrics per-bucket manifest counters   (observe)
       -> Write bucket=k partitions + manifest commit   (resume unit)
 
 Scale notes (10^12-row framing):
 
-* Skew: Common-Crawl inputs cluster by host and by page size. AQE only
-  re-plans joins, not cost-per-row skew in a map stage, so the pipeline
-  repartitions explicitly on xxhash64(url) — uniformly spreading hot
-  domains; the salt factor multiplies partition count so a straggler
-  page delays ~1/(P*salt) of the work.
+* Skew: Common-Crawl inputs cluster by host and by page size. A bucket
+  is a uniform xxhash64(url) slice, so host skew cannot concentrate in
+  one; page-size skew shows up as bytes, which AQE splits each
+  rebalanced bucket by, so a straggler page delays one slice of one
+  bucket and a write task writes one file.
 * Resumability: output is committed per url-hash *bucket* (pmod of
   xxhash64). A bucket is visible only after its manifest row is
   written; rerun processes only buckets missing from the manifest and
@@ -41,7 +41,9 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from dce_spark.spark.schema import MANIFEST_SCHEMA
 from dce_spark.spark.udf import attach_extraction
 
-__all__ = ["salt_partitions", "extract_pages", "run_pipeline", "read_manifest"]
+__all__ = ["run_pipeline", "read_manifest"]
+
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
 def _is_missing_table(exc: Exception) -> bool:
@@ -57,21 +59,6 @@ def _is_missing_table(exc: Exception) -> bool:
             return True
     msg = str(exc)
     return "NoSuchTable" in msg or "TABLE_OR_VIEW_NOT_FOUND" in msg
-
-
-def salt_partitions(df: DataFrame, num_partitions: int, salt_factor: int = 4) -> DataFrame:
-    """Explicit skew-defeating exchange: hash-repartition on xxhash64(url)
-    into num_partitions * salt_factor slices."""
-    return df.repartition(num_partitions * salt_factor, F.xxhash64("url"))
-
-
-def extract_pages(df: DataFrame, mode: str = "both",
-                  num_partitions: int | None = None,
-                  salt_factor: int = 4) -> DataFrame:
-    """pages -> extracted rows; the one-shuffle one-map logical plan."""
-    if num_partitions is not None:
-        df = salt_partitions(df, num_partitions, salt_factor)
-    return attach_extraction(df, mode=mode)
 
 
 def _manifest_dir(output_path: str) -> str:
@@ -134,8 +121,6 @@ def run_pipeline(
     buckets: int = 16,
     buckets_per_commit: int = 4,
     mode: str = "both",
-    num_partitions: int | None = None,
-    salt_factor: int = 4,
     max_commits: int | None = None,
     sink: str = "parquet",
     table_provider: str = "iceberg",
@@ -151,6 +136,11 @@ def run_pipeline(
     job. Only a missing manifest path means "nothing committed"; any
     other failure to read it raises before the first extraction.
     ``max_commits`` exists for kill-and-rerun tests.
+
+    Input that is not pre-bucketed goes through one ``REBALANCE(bucket)``
+    exchange per commit. AQE splits each bucket into slices of the
+    advisory partition size, set from the input's bytes during the run
+    and then restored, so a write task writes one file per bucket held.
 
     ``sink="table"`` writes each chunk with
     ``write.insertInto(output_path, overwrite=True)`` under dynamic
@@ -181,7 +171,7 @@ def run_pipeline(
     if input_format == "warc":
         # straight-from-crawl ingestion: .warc(.gz) archives through
         # the streaming record reader; no bucket column exists, so the
-        # runtime url-hash salting path below applies
+        # bucket rebalance below applies
         from dce_spark.spark.warc import read_warc
 
         pages = read_warc(spark, input_path)
@@ -263,89 +253,92 @@ def run_pipeline(
                 "pass the bucket count it was partitioned with"
             )
         pages = pages.withColumn("bucket", F.col("bucket").cast("int"))
-        pre_bucketed = True
+        bucket_bytes = None  # scan splits hold one bucket each: no exchange
     else:
         pages = pages.withColumn(
             "bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
         )
-        pre_bucketed = False
+        # input bytes from driver-side Hadoop content summaries, no job
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(input_path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        bucket_bytes = sum(
+            fs.getContentSummary(f.getPath()).getLength() for f in fs.globStatus(jpath)
+        ) / buckets
 
     manifest_root = manifest_path if manifest_path is not None else output_path
     done = completed_buckets(spark, manifest_root)
     todo = [b for b in range(buckets) if b not in done]
     commits = 0
-    # A pre-bucketed input is already url-hash-spread (write-time
-    # salting), so the runtime salting exchange would re-shuffle every
-    # html byte per commit for nothing: scan parallelism comes from
-    # row-group splits. An explicit num_partitions still forces it.
-    if num_partitions is not None:
-        parallelism = num_partitions
-    elif pre_bucketed:
-        parallelism = None
-    else:
-        parallelism = spark.sparkContext.defaultParallelism
+    # Rebalance slices: about 4 per core over the commit's share of the
+    # input's bytes, at most Spark's 64 MB default.
+    slices = 4 * spark.sparkContext.defaultParallelism
+    caller_advisory = spark.conf.get(_ADVISORY)
 
-    for lo in range(0, len(todo), buckets_per_commit):
-        if max_commits is not None and commits >= max_commits:
-            break
-        chunk = todo[lo : lo + buckets_per_commit]
-        t0 = time.time()
-        subset = pages.filter(F.col("bucket").isin(chunk))
-        extracted = extract_pages(
-            subset.select("url", "html"),
-            mode=mode,
-            num_partitions=parallelism,
-            salt_factor=salt_factor,
-        ).withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int"))
-        extracted, counters = _observe_counters(extracted, chunk)
-
-        # Dynamic partition overwrite: rewriting a bucket is idempotent,
-        # so a crash between data write and manifest append cannot
-        # duplicate urls on rerun (the bucket is simply rewritten).
-        if table_sink:
-            # Same protocol on a table partitioned by bucket: an
-            # overwriting insertInto under dynamic partition overwrite
-            # replaces exactly the chunk's buckets, as one snapshot on a
-            # V2 catalog (OverwritePartitionsDynamic) and as a partition
-            # rewrite on a V1 session-catalog table. Columns go by
-            # position, in the order the first-contact CTAS fixed.
-            try:
-                extracted.write.insertInto(output_path, overwrite=True)
-            except Exception as exc:
-                if not _is_missing_table(exc):
-                    # a write fault on an EXISTING table (executor
-                    # loss, schema drift, capability error) must
-                    # surface as itself — falling through to CTAS
-                    # would die on TableAlreadyExists and bury the
-                    # root cause
-                    raise
-                # first contact: CTAS partitioned by bucket
-                (
-                    extracted.writeTo(output_path)
-                    .using(table_provider)
-                    .partitionedBy(F.col("bucket"))
-                    .create()
-                )
-        else:
-            (
-                extracted.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(_data_dir(output_path))
+    try:
+        for lo in range(0, len(todo), buckets_per_commit):
+            if max_commits is not None and commits >= max_commits:
+                break
+            chunk = todo[lo : lo + buckets_per_commit]
+            t0 = time.time()
+            subset = pages.filter(F.col("bucket").isin(chunk)).select("url", "html", "bucket")
+            if bucket_bytes is not None:
+                subset = subset.hint("rebalance", "bucket")
+                size = min(64 << 20, int(bucket_bytes * len(chunk) / slices))
+                spark.conf.set(_ADVISORY, str(max(1, size)))
+            extracted = attach_extraction(subset, mode=mode).withColumn(
+                "bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
             )
+            extracted, counters = _observe_counters(extracted, chunk)
 
-        wall_ms = int((time.time() - t0) * 1000)
-        # The commit point: a row per bucket, also one without input
-        # rows, or resume would reprocess it forever.
-        seen = counters.get
-        now = _dt.datetime.now(_dt.timezone.utc)
-        rows = [
-            dict(bucket=b, **seen[str(b)].asDict(), wall_ms=wall_ms, committed_at=now)
-            for b in chunk
-        ]
-        _manifest_frame(spark, rows).write.mode("append").parquet(
-            _manifest_dir(manifest_root)
-        )
-        commits += 1
+            # Dynamic partition overwrite: rewriting a bucket is idempotent,
+            # so a crash between data write and manifest append cannot
+            # duplicate urls on rerun (the bucket is simply rewritten).
+            if table_sink:
+                # Same protocol on a table partitioned by bucket: an
+                # overwriting insertInto under dynamic partition overwrite
+                # replaces exactly the chunk's buckets, as one snapshot on a
+                # V2 catalog (OverwritePartitionsDynamic) and as a partition
+                # rewrite on a V1 session-catalog table. Columns go by
+                # position, in the order the first-contact CTAS fixed.
+                try:
+                    extracted.write.insertInto(output_path, overwrite=True)
+                except Exception as exc:
+                    if not _is_missing_table(exc):
+                        # a write fault on an EXISTING table (executor
+                        # loss, schema drift, capability error) must
+                        # surface as itself — falling through to CTAS
+                        # would die on TableAlreadyExists and bury the
+                        # root cause
+                        raise
+                    # first contact: CTAS partitioned by bucket
+                    (
+                        extracted.writeTo(output_path)
+                        .using(table_provider)
+                        .partitionedBy(F.col("bucket"))
+                        .create()
+                    )
+            else:
+                (
+                    extracted.write.mode("overwrite")
+                    .partitionBy("bucket")
+                    .parquet(_data_dir(output_path))
+                )
+
+            wall_ms = int((time.time() - t0) * 1000)
+            # The commit point: a row per bucket, also one without input
+            # rows, or resume would reprocess it forever.
+            seen = counters.get
+            now = _dt.datetime.now(_dt.timezone.utc)
+            rows = [
+                dict(bucket=b, **seen[str(b)].asDict(), wall_ms=wall_ms, committed_at=now)
+                for b in chunk
+            ]
+            _manifest_frame(spark, rows).write.mode("append").parquet(
+                _manifest_dir(manifest_root)
+            )
+            commits += 1
+    finally:
+        spark.conf.set(_ADVISORY, caller_advisory)
 
     return {
         "buckets": buckets,

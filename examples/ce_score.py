@@ -32,9 +32,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from dce_spark.spark.evaljob import mean_scores, score_pairs
-    from dce_spark.spark.pipeline import extract_pages
     from dce_spark.spark.schema import PAGES_SCHEMA
     from dce_spark.spark.session import get_spark
+    from dce_spark.spark.udf import attach_extraction
 
     pairs = []
     for txt in sorted(gold_dir.glob("*.txt")):
@@ -55,7 +55,7 @@ def main() -> None:
          for t, _ in pairs],
         ["stem", "gold_text"],
     )
-    extracted = extract_pages(pages, mode="content").select(
+    extracted = attach_extraction(pages, mode="content").select(
         F.col("url").alias("stem"), "extracted_text"
     )
     scores = score_pairs(extracted, gold)

@@ -4,7 +4,7 @@
     Common-Crawl-style .warc(.gz) archives
       -> read_warc            (streaming gz, chunked/Content-Encoding
                                decode, flush-budget batches)
-      -> extract_pages        (CETD main-content extraction,
+      -> attach_extraction    (CETD main-content extraction,
                                byte-parity with the Rust reference)
       -> documents table      (doc_id = xxhash64(url), source = host)
       -> curate_corpus        (URL hygiene incl. latest-snapshot ->
@@ -71,14 +71,14 @@ def main() -> int:
     from dce_spark.functions.curation import curate_corpus
     from dce_spark.functions.textops import chunk_documents
     from dce_spark.functions.urlops import url_host_col
-    from dce_spark.spark.pipeline import extract_pages
     from dce_spark.spark.session import get_spark
+    from dce_spark.spark.udf import attach_extraction
     from dce_spark.spark.warc import read_warc
 
     spark = get_spark(master="local[8]", shuffle_partitions=16)
 
     pages = read_warc(spark, str(warc_dir))
-    extracted = extract_pages(pages, mode="content")
+    extracted = attach_extraction(pages, mode="content")
     # the extraction schema is text-only; capture times ride back in
     # from the source frame (re-crawled urls keep their newest ts
     # AFTER the latest-snapshot stage below — dedupe here would

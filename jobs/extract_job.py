@@ -6,7 +6,7 @@ Usage:
       --input  /path/to/pages_parquet_or_iceberg \
       --output /path/to/extracted \
       [--buckets 256] [--buckets-per-commit 16] [--mode both]
-      [--salt-factor 4] [--max-commits N] [--input-format parquet|warc]
+      [--max-commits N] [--input-format parquet|warc]
 
 --input-format warc ingests Common-Crawl-style .warc(.gz) archives
 directly (streaming record reader, chunked/Content-Encoding decode)
@@ -14,7 +14,7 @@ through the same bucket-committed, resumable pipeline.
 
 Resumable: rerunning with the same --output continues from the last
 committed bucket manifest. On a cluster, package the library with
-  (cd /root/repo && zip -qr /tmp/dce_spark.zip dce_spark)
+  zip -qr dce_spark.zip dce_spark   (from the repository root)
 and pass it via --py-files.
 """
 
@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--buckets-per-commit", type=int, default=16)
     ap.add_argument("--mode", default="both",
                     choices=["content", "article", "both", "all"])
-    ap.add_argument("--salt-factor", type=int, default=4)
     ap.add_argument("--max-commits", type=int, default=None)
     ap.add_argument("--input-format", default="parquet",
                     choices=["parquet", "warc"],
@@ -54,7 +53,6 @@ def main() -> None:
         buckets=args.buckets,
         buckets_per_commit=args.buckets_per_commit,
         mode=args.mode,
-        salt_factor=args.salt_factor,
         max_commits=args.max_commits,
         input_format=args.input_format,
     )

@@ -1,5 +1,5 @@
 """Tier-3: pipeline semantics — resume-from-manifest, exactly-once per
-url, lineage counters, salting distribution."""
+url, lineage counters, bucket-clustered write layout."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,7 +10,6 @@ from dce_spark.spark.pipeline import (
     read_extracted,
     read_manifest,
     run_pipeline,
-    salt_partitions,
 )
 
 pytestmark = pytest.mark.spark
@@ -62,23 +61,50 @@ def test_manifest_lineage_counters(spark, pages_path, tmp_path_factory):
     assert all(r.wall_ms >= 0 for r in rows)
 
 
-def test_salting_spreads_hot_domain(spark):
-    # 40% of urls share one host; after the salted exchange no partition
-    # should hold a grossly disproportionate share of rows
-    rows = [(f"https://hot.example.com/{i}",) for i in range(200)] + [
-        (f"https://site-{i}.example.org/x",) for i in range(300)
+def test_commit_writes_a_file_per_bucket_slice(spark, tmp_path):
+    """Files per commit follow the bucket rebalance, not tasks x
+    buckets: on a corpus where 40% of urls share one host, each of two
+    commits runs at least one write task per core, and a task writes
+    at most two files (two buckets can hash into one rebalance
+    partition). The advisory size is the caller's again afterwards, and
+    a glob input path is sized like a directory."""
+    import random
+
+    rng = random.Random(7)
+    rows = [
+        (f"https://hot.example.com/{i}" if i < 200 else f"https://site-{i}.example.org/x",
+         b"<p>%s</p>" % b" ".join(b"%f" % rng.random() for _ in range(200)))
+        for i in range(500)
     ]
-    df = spark.createDataFrame(rows, ["url"])
-    parts = salt_partitions(df, num_partitions=4, salt_factor=2)
-    sizes = (
-        parts.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    counts = [r["count"] for r in sizes]
-    assert len(counts) == 8
-    assert max(counts) < 2.5 * (500 / 8)
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(rows, "url string, html binary").repartition(8).write.parquet(pages)
+    out = tmp_path / "out"
+    sc = spark.sparkContext
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
+
+    def write_tasks(name, **kw):
+        sc.setJobGroup(name, name)
+        try:
+            run_pipeline(spark, pages + "/*.parquet", str(out), buckets=8,
+                         buckets_per_commit=4, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        # a commit's jobs end with the data write and the manifest write
+        write_job = sorted(st.getJobIdsForGroup(name))[-2]
+        return st.getStageInfo(max(st.getJobInfo(write_job).stageIds)).numTasks
+
+    group = f"layout-{tmp_path.name}"
+    tasks = [write_tasks(group + "-1", max_commits=1), write_tasks(group + "-2")]
+    assert spark.conf.get(key) == before
+    files = [
+        sum(len(list((out / "data" / f"bucket={b}").glob("*.parquet"))) for b in chunk)
+        for chunk in (range(4), range(4, 8))
+    ]
+    cores = sc.defaultParallelism
+    assert all(t >= cores for t in tasks), (tasks, files)
+    assert all(f <= 2 * t for f, t in zip(files, tasks)), (tasks, files)
 
 
 def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
@@ -175,7 +201,7 @@ def test_iceberg_sink_commit_contract(spark, pages_path, tmp_path_factory,
 
 def test_bucketed_input_partition_pruning(spark, tmp_path_factory):
     """Pre-bucketed input: the stored bucket column is validated, the
-    per-commit filter prunes partitions, no salting re-shuffle runs,
+    per-commit filter prunes partitions, no exchange runs,
     and results equal the compute-bucket path."""
     from dce_spark.spark.corpus import write_bucketed_pages
 
@@ -500,7 +526,7 @@ def test_output_dirs_keep_uri_authority():
 
 
 def test_commit_runs_no_bookkeeping_job(spark, pages_path, tmp_path):
-    """Jobs per commit on parquet input: the salting exchange, the data
+    """Jobs per commit on parquet input: the bucket rebalance, the data
     write (which also yields the manifest counters) and the manifest
     write. A re-read of the output or a Python-task bookkeeping job
     raises the count."""

@@ -8,8 +8,8 @@ import pytest
 
 from dce_spark.core.api import extract_page
 from dce_spark.spark.corpus import fixture_rows
-from dce_spark.spark.pipeline import extract_pages
 from dce_spark.spark.schema import PAGES_SCHEMA
+from dce_spark.spark.udf import attach_extraction
 
 pytestmark = pytest.mark.spark
 
@@ -38,7 +38,7 @@ def extracted_rows(spark):
         }
     )
     df = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
-    out = extract_pages(df, num_partitions=4, salt_factor=2).collect()
+    out = attach_extraction(df).collect()
     return rows, out
 
 
@@ -76,7 +76,7 @@ def test_spans_align(extracted_rows):
 def test_markdown_mode_matches_core(spark):
     rows = fixture_rows(include_reference=True)[:12]
     df = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
-    out = extract_pages(df, mode="all", num_partitions=2).collect()
+    out = attach_extraction(df, mode="all").collect()
     by_url = {r["url"]: r["html"] for r in rows}
     for r in out:
         core = extract_page(by_url[r.url], mode="all")
@@ -90,7 +90,7 @@ def test_column_pruning_reaches_scan(spark, tmp_path):
     p = str(tmp_path / "pages")
     spark.createDataFrame(rows, schema=PAGES_SCHEMA).write.parquet(p)
     df = spark.read.parquet(p)
-    plan = extract_pages(df)._jdf.queryExecution().executedPlan().toString()
+    plan = attach_extraction(df)._jdf.queryExecution().executedPlan().toString()
     assert "ReadSchema" in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "html" in read_schema and "url" in read_schema

@@ -195,14 +195,14 @@ def test_read_warc_rejects_remote_scheme_on_driver(spark):
 
 @pytest.mark.spark
 def test_read_warc_into_extraction(spark, tmp_path):
-    from dce_spark.spark.pipeline import extract_pages
+    from dce_spark.spark.udf import attach_extraction
     from dce_spark.spark.warc import read_warc
 
     (tmp_path / "a.warc").write_bytes(make_warc())
     (tmp_path / "b.warc.gz").write_bytes(gzip.compress(
         make_record("https://w.test/gz", HTML1)))
     pages = read_warc(spark, str(tmp_path))
-    out = {r.url: r for r in extract_pages(pages).collect()}
+    out = {r.url: r for r in attach_extraction(pages).collect()}
     assert set(out) == {"https://w.test/1", "https://w.test/2",
                         "https://w.test/gz"}
     assert all(r.status == "ok" for r in out.values())
@@ -217,7 +217,7 @@ def test_read_warc_many_records_into_extraction(spark, tmp_path):
     extracts."""
     from pyspark.sql import functions as F
 
-    from dce_spark.spark.pipeline import extract_pages
+    from dce_spark.spark.udf import attach_extraction
     from dce_spark.spark.warc import read_warc
 
     n = 2500
@@ -227,7 +227,7 @@ def test_read_warc_many_records_into_extraction(spark, tmp_path):
             b"<html><body><p>Page %d body text.</p></body></html>" % i))
         for i in range(n)
     ))
-    out = extract_pages(read_warc(spark, str(tmp_path))).agg(
+    out = attach_extraction(read_warc(spark, str(tmp_path))).agg(
         F.count("*").alias("n"),
         F.countDistinct("url").alias("urls"),
         F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
@@ -270,7 +270,7 @@ def test_warc_to_curated_chunks_end_to_end(spark, tmp_path):
     from dce_spark.functions.curation import curate_corpus
     from dce_spark.functions.textops import chunk_documents
     from dce_spark.functions.urlops import url_host_col
-    from dce_spark.spark.pipeline import extract_pages
+    from dce_spark.spark.udf import attach_extraction
     from dce_spark.spark.warc import read_warc
 
     def page(i):
@@ -288,7 +288,7 @@ def test_warc_to_curated_chunks_end_to_end(spark, tmp_path):
     (tmp_path / "c.warc.gz").write_bytes(raw)
 
     pages = read_warc(spark, str(tmp_path))
-    extracted = extract_pages(pages, mode="content")
+    extracted = attach_extraction(pages, mode="content")
     ts_map = pages.groupBy("url").agg(
         F.max(F.col("warc_ts").cast("long")).alias("ts"))
     docs = (
