@@ -1780,7 +1780,7 @@ def _lsh_bucket_sql_expr(
     col: str, n_planes: int = 6, dim: int = 64, table: int = 0
 ) -> str:
     """DuckDB expression computing the same deterministic integer-
-    hyperplane bucket as simsearch.lsh_bucket_col."""
+    hyperplane bucket as simsearch._lsh_codes."""
     from dce_spark.functions.simsearch import _hyperplane_weights
 
     planes = _hyperplane_weights(n_planes, dim, table)

@@ -6,7 +6,8 @@ Two candidate-generation paths:
   (deterministic left-to-right f64 summation — matters for oracle
   parity AND for reproducible thresholds across engines);
 * LSH-bucketed: deterministic integer hyperplanes (no RNG) bucket
-  vectors by sign pattern; candidates share a bucket, and the exact
+  vectors by sign pattern (codes from one NumPy Arrow row map,
+  ``_lsh_codes``); candidates share a bucket, and the exact
   within-bucket decisions run in a grouped Arrow kernel whose NumPy
   Gram accumulation reproduces the Catalyst fold bit-for-bit (see
   _seq_gram_block). At 10^12 scale the bucket grouping replaces the
@@ -404,36 +405,16 @@ def derive_lsh_params(n_candidates: int) -> tuple[int, int]:
 def _with_table_buckets(
     embeddings: DataFrame, n_planes: int, dim: int, n_tables: int
 ) -> DataFrame:
-    """(vec_id, embedding, tbl, bucket) — one row per (vector, table).
-    n_tables=1 keeps the original single-bucket projection (no explode)
-    so pinned-plane plans and oracles are byte-identical to round 2."""
+    """(vec_id, embedding, tbl, bucket) — one row per (vector, table),
+    the codes from ``_lsh_codes``."""
     from dce_spark.functions.textops import ensure_scan_parallelism
 
     embeddings = ensure_scan_parallelism(
         embeddings.select("vec_id", "embedding"), key="vec_id"
     )
-    vid = F.col("vec_id").cast("long").alias("vec_id")
-    if n_tables <= 1:
-        return embeddings.select(
-            vid,
-            "embedding",
-            F.lit(0).alias("tbl"),
-            lsh_bucket_col(F.col("embedding"), n_planes, dim).alias("bucket"),
-        )
-    tb = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                lsh_bucket_col(
-                    F.col("embedding"), n_planes, dim, table=t
-                ).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-    return embeddings.select(vid, "embedding", F.explode(tb).alias("_tb")).select(
-        "vec_id", "embedding", F.col("_tb.tbl").alias("tbl"),
-        F.col("_tb.bucket").alias("bucket"),
+    return _lsh_codes(
+        embeddings.select(F.col("vec_id").cast("long").alias("vec_id"), "embedding"),
+        n_planes, dim, range(max(n_tables, 1)),
     )
 
 
@@ -450,17 +431,53 @@ def _hyperplane_weights(n_planes: int, dim: int, table: int = 0):
     ]
 
 
-def lsh_bucket_col(emb_col, n_planes: int, dim: int, table: int = 0):
-    planes = _hyperplane_weights(n_planes, dim, table)
-    bits = []
-    for p in range(n_planes):
-        w = F.array(*[F.lit(float(x)) for x in planes[p]])
-        bits.append(F.when(_dot(emb_col, w) >= 0, F.lit(1)).otherwise(F.lit(0)))
-    # bigint bucket: plane counts up to 48 exceed int32
-    bucket = F.lit(0).cast("long")
-    for i, b in enumerate(bits):
-        bucket = bucket + (b.cast("long") * F.lit(1 << i).cast("long"))
-    return bucket
+def _lsh_codes(df: DataFrame, n_planes: int, dim: int, tables) -> DataFrame:
+    """``df`` with (tbl int, bucket long) appended, one row per (row,
+    table in ``tables``): the ``n_planes``-bit hyperplane code of
+    ``embedding``, sum of bit_p << p, bit_p = dot_p >= 0 or NaN (Spark
+    and DuckDB order NaN largest). One map-only Arrow kernel; dots
+    accumulate one dimension at a time in f64 as in ``_seq_gram_block``,
+    so every bit matches the left-to-right ``_dot`` fold. A NULL
+    embedding, a NULL element or a length other than ``dim`` gets code
+    0, as the fold's NULL sum does."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    W = np.asarray([_hyperplane_weights(n_planes, dim, t) for t in tables], np.float64)
+    tables = np.asarray(list(tables), dtype=np.int32)
+    shift, span = np.arange(n_planes), np.arange(dim)
+
+    def codes(emb):
+        off, vals = emb.offsets.to_numpy(), emb.values
+        ok = (np.diff(off) == dim) & emb.is_valid().to_numpy(zero_copy_only=False)
+        idx = off[:-1][ok, None] + span
+        full = vals.is_valid().to_numpy(zero_copy_only=False)[idx].all(1)
+        ok[ok] = full
+        X = vals.to_numpy(zero_copy_only=False)[idx[full]].astype(np.float64)
+        out = np.zeros((len(emb), len(tables)), dtype=np.int64)
+        with np.errstate(invalid="ignore"):  # 0 * inf, inf - inf: NaN
+            for i, w in enumerate(W):
+                acc = np.zeros((len(X), n_planes))
+                for d in range(dim):
+                    acc += X[:, d, None] * w[None, :, d]
+                out[ok, i] = (((acc >= 0) | np.isnan(acc)).astype(np.int64) << shift).sum(1)
+        return out
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows:
+                c = codes(b.column("embedding"))
+                if len(tables) > 1:
+                    b = b.take(pa.array(np.repeat(np.arange(b.num_rows), len(tables))))
+                yield b.append_column("tbl", pa.array(np.tile(tables, len(c)))).append_column(
+                    "bucket", pa.array(c.reshape(-1))
+                )
+
+    return df.mapInArrow(kernel, StructType(df.schema.fields + [
+        StructField("tbl", IntegerType(), False),
+        StructField("bucket", LongType(), False),
+    ]))
 
 
 def lsh_topk(
@@ -924,18 +941,10 @@ def semdedup(
                 ).alias("mask"),
             )
         )
-        # mask == 0 (the common case: cluster under the cap) short-
-        # circuits the sub-bucket hyperplane evaluation per row
-        withv = withv.join(info, "cluster", "left").withColumn(
-            "sub",
-            F.when(
-                F.coalesce("mask", F.lit(0)) == 0, F.lit(0).cast("long")
-            ).otherwise(
-                lsh_bucket_col(
-                    F.col("embedding"), sub_planes, dim, table=1
-                ).bitwiseAND(F.coalesce("mask", F.lit(0)))
-            ),
-        ).drop("mask")
+        withv = _lsh_codes(withv, sub_planes, dim, (1,)).join(info, "cluster", "left")
+        withv = withv.withColumn(
+            "sub", F.col("bucket").bitwiseAND(F.coalesce("mask", F.lit(0).cast("long")))
+        ).drop("tbl", "bucket", "mask")
         w = Window.partitionBy("cluster", "sub").orderBy("vec_id")
         withv = withv.withColumn(
             "chunk",

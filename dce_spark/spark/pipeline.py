@@ -44,6 +44,7 @@ from dce_spark.spark.udf import attach_extraction
 __all__ = ["run_pipeline", "read_manifest"]
 
 _ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+_OVERWRITE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def _is_missing_table(exc: Exception) -> bool:
@@ -140,7 +141,8 @@ def run_pipeline(
     Input that is not pre-bucketed goes through one ``REBALANCE(bucket)``
     exchange per commit. AQE splits each bucket into slices of the
     advisory partition size, set from the input's bytes during the run
-    and then restored, so a write task writes one file per bucket held.
+    (restored afterwards, with the partition overwrite mode), so a
+    write task writes one file per bucket held.
 
     ``sink="table"`` writes each chunk with
     ``write.insertInto(output_path, overwrite=True)`` under dynamic
@@ -167,7 +169,6 @@ def run_pipeline(
             "(a filesystem or object-store URI for the lineage "
             "manifests); the catalog table name cannot serve as one"
         )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     if input_format == "warc":
         # straight-from-crawl ingestion: .warc(.gz) archives through
         # the streaming record reader; no bucket column exists, so the
@@ -272,7 +273,8 @@ def run_pipeline(
     # Rebalance slices: about 4 per core over the commit's share of the
     # input's bytes, at most Spark's 64 MB default.
     slices = 4 * spark.sparkContext.defaultParallelism
-    caller_advisory = spark.conf.get(_ADVISORY)
+    caller_conf = {k: spark.conf.get(k) for k in (_ADVISORY, _OVERWRITE)}
+    spark.conf.set(_OVERWRITE, "dynamic")
 
     try:
         for lo in range(0, len(todo), buckets_per_commit):
@@ -338,7 +340,8 @@ def run_pipeline(
             )
             commits += 1
     finally:
-        spark.conf.set(_ADVISORY, caller_advisory)
+        for k, v in caller_conf.items():
+            spark.conf.set(k, v)
 
     return {
         "buckets": buckets,

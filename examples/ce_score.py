@@ -22,6 +22,12 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
+def _mean(x) -> str:
+    """A mean is NULL when no pair defines it (e.g. every gold file
+    normalizes to empty)."""
+    return "n/a" if x is None else f"{x:.4f}"
+
+
 def main() -> None:
     if len(sys.argv) < 3:
         print(__doc__)
@@ -62,10 +68,10 @@ def main() -> None:
     means = mean_scores(scores).collect()[0]
     wall = time.time() - t0
     print(f"Files scored: {means.files} / {len(pairs)}")
-    print(f"Average precision: {means.avg_precision:.4f}")
-    print(f"Average recall:    {means.avg_recall:.4f}")
-    print(f"Average F1 score:  {means.avg_f1:.4f}")
-    print(f"Average Dice:      {means.avg_dice:.4f}")
+    print(f"Average precision: {_mean(means.avg_precision)}")
+    print(f"Average recall:    {_mean(means.avg_recall)}")
+    print(f"Average F1 score:  {_mean(means.avg_f1)}")
+    print(f"Average Dice:      {_mean(means.avg_dice)}")
     print(f"Total time: {wall:.2f}s ({len(pairs) / wall:.1f} files/s)")
     spark.stop()
 

@@ -73,6 +73,32 @@ def test_undefined_scores_are_null(spark):
     assert (s["a"].precision, s["a"].recall, s["a"].f1) == (None, 0.0, None)
     assert (s["b"].precision, s["b"].recall, s["b"].f1) == (0.0, None, None)
 
+
+def test_ce_score_example_prints_undefined_mean(tmp_path):
+    """examples/ce_score.py on one pair whose gold file is a single
+    line: clean_gold_text drops it as CleanEval's URL line, no pair has
+    a defined recall, and the NULL mean prints as n/a."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    gold, html = tmp_path / "gold", tmp_path / "html"
+    gold.mkdir()
+    html.mkdir()
+    (gold / "a.txt").write_text("Hello world article text here.\n")
+    (html / "a.html").write_text(
+        "<html><body><p>Hello world article text here.</p></body></html>"
+    )
+    r = subprocess.run(
+        [sys.executable, "examples/ce_score.py", str(gold), str(html),
+         "local[1]"],
+        capture_output=True, text=True, cwd=repo, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-500:]
+    assert "Average recall:    n/a" in r.stdout
+
+
 def test_mean_scores_filters_nan(spark):
     rows = [
         ("a", 0.9, 0.8, 0.85, 0.9),

@@ -66,8 +66,9 @@ def test_commit_writes_a_file_per_bucket_slice(spark, tmp_path):
     buckets: on a corpus where 40% of urls share one host, each of two
     commits runs at least one write task per core, and a task writes
     at most two files (two buckets can hash into one rebalance
-    partition). The advisory size is the caller's again afterwards, and
-    a glob input path is sized like a directory."""
+    partition). The advisory size and the partition overwrite mode are
+    the caller's again afterwards, and a glob input path is sized like
+    a directory."""
     import random
 
     rng = random.Random(7)
@@ -80,8 +81,10 @@ def test_commit_writes_a_file_per_bucket_slice(spark, tmp_path):
     spark.createDataFrame(rows, "url string, html binary").repartition(8).write.parquet(pages)
     out = tmp_path / "out"
     sc = spark.sparkContext
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key)
+    keys = ("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            "spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set(keys[1], "STATIC")  # a caller value no earlier test left
+    before = [spark.conf.get(k) for k in keys]
 
     def write_tasks(name, **kw):
         sc.setJobGroup(name, name)
@@ -97,7 +100,7 @@ def test_commit_writes_a_file_per_bucket_slice(spark, tmp_path):
 
     group = f"layout-{tmp_path.name}"
     tasks = [write_tasks(group + "-1", max_commits=1), write_tasks(group + "-2")]
-    assert spark.conf.get(key) == before
+    assert [spark.conf.get(k) for k in keys] == before
     files = [
         sum(len(list((out / "data" / f"bucket={b}").glob("*.parquet"))) for b in chunk)
         for chunk in (range(4), range(4, 8))

@@ -103,6 +103,16 @@ def test_emb_dedup_no_crossjoin(spark):
     assert "Python" not in plan
 
 
+def test_lsh_codes_not_a_catalyst_fold(spark):
+    """Hyperplane codes come from the NumPy Arrow map, and neither
+    query computes a Catalyst cosine: no zip_with in either plan."""
+    import __spark_entry__ as e
+
+    for q in ("emb_semdedup", "emb_dedup"):
+        plan = _plan(e.queries()[q](spark, SF))
+        assert "zip_with" not in plan, q
+
+
 def test_events_last_max_partial_agg_no_window(spark):
     import __spark_entry__ as e
 

@@ -315,6 +315,86 @@ def test_lsh_multitable_recall_and_oracle_stability(spark):
     assert dd.count() == 2000
 
 
+def _lsh_bucket_fold(emb_col, n_planes: int, dim: int, table: int = 0):
+    """Per-plane Catalyst fold of the hyperplane code: the witness the
+    NumPy ``_lsh_codes`` kernel is checked against."""
+    from dce_spark.functions.simsearch import _dot, _hyperplane_weights
+
+    planes = _hyperplane_weights(n_planes, dim, table)
+    bucket = F.lit(0).cast("long")
+    for p in range(n_planes):
+        w = F.array(*[F.lit(float(x)) for x in planes[p]])
+        bit = F.when(_dot(emb_col, w) >= 0, F.lit(1)).otherwise(F.lit(0))
+        bucket = bucket + (bit.cast("long") * F.lit(1 << p).cast("long"))
+    return bucket
+
+
+@pytest.mark.parametrize("n_planes", [6, 16, 48])
+def test_lsh_codes_match_catalyst_fold(spark, n_planes):
+    """Hyperplane codes from the Arrow kernel equal the Catalyst fold
+    bit for bit, per table and through the one-row-per-table explode,
+    on seeded vectors (integer coordinates give exact-zero dots) and
+    on the rows the fold maps specially: a zero vector, -0.0, NaN,
+    +-inf (a zero weight times inf is NaN), and the NULL embedding,
+    NULL element and wrong-length rows whose code is 0."""
+    import numpy as np
+
+    from dce_spark.functions.simsearch import _lsh_codes
+
+    dim = 16
+    rng = np.random.RandomState(n_planes)
+    vecs = [rng.randn(dim).astype(np.float32).tolist() for _ in range(40)]
+    vecs += [rng.randint(-2, 3, dim).astype(float).tolist() for _ in range(40)]
+
+    def put(d, x, base=1.0):
+        v = [base] * dim
+        v[d] = x
+        return v
+
+    nan, inf = float("nan"), float("inf")
+    null_rows = [None, put(4, None), [1.0] * (dim - 1), [1.0] * (dim + 1)]
+    vecs += [
+        [0.0] * dim,
+        [-0.0] * dim,
+        put(3, -0.0, -1.0),
+        put(7, nan),
+        put(10, inf),  # w(0, 10, 0) == 0: plane 0's product is NaN
+        put(3, -inf),
+        put(2, inf, -1.0)[:5] + [-inf] + [0.5] * (dim - 6),  # inf - inf
+        # plane 0 of table 0 weighs (-9, 9, 8): left to right the -9
+        # rounds away and the dot is 0, where the exact sum is -9
+        [2.0**60, -1.0, 9 * 2.0**57] + [0.0] * (dim - 3),
+    ] + null_rows
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    tables = (0, 1, 3)
+    want = {
+        (r.vec_id, t): r[f"t{t}"]
+        for r in df.select(
+            "vec_id",
+            *[
+                _lsh_bucket_fold(F.col("embedding"), n_planes, dim, t).alias(f"t{t}")
+                for t in tables
+            ],
+        ).collect()
+        for t in tables
+    }
+
+    def codes(ts):
+        out = _lsh_codes(df, n_planes, dim, ts).select("vec_id", "tbl", "bucket")
+        return {(r.vec_id, r.tbl): r.bucket for r in out.collect()}
+
+    got = codes(tables)
+    assert len(got) == len(vecs) * len(tables)
+    assert got == want
+    for t in tables:
+        assert codes((t,)) == {k: v for k, v in want.items() if k[1] == t}
+    for i in range(len(vecs) - len(null_rows), len(vecs)):
+        assert [got[(i, t)] for t in tables] == [0, 0, 0]
+    assert len({v for (i, t), v in got.items() if t == 0}) > 1
+
+
 def test_rolling_fingerprint_order_sensitive(spark):
     rows = [
         (1, "alpha beta gamma", "en", "s1", 16),

@@ -133,6 +133,7 @@ _DIRECT_KERNELS = {
     ("functions/textops.py", "simhash64"),
     ("functions/simsearch.py", "_assign_arrow"),
     ("functions/simsearch.py", "_update_partials_arrow"),
+    ("functions/simsearch.py", "_lsh_codes"),
     ("functions/simsearch.py", "embedding_dedup"),
     ("functions/simsearch.py", "semdedup"),
 }
