@@ -37,15 +37,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _t_par(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
-    """_t plus the input-split guard (guide §2.5): parallelizes the
-    map-side work (JSON parsing, partial aggregation) when the table is
-    a single unsplittable scan partition; no-op on split inputs."""
-    from dce_spark.functions.textops import ensure_scan_parallelism
-
-    return ensure_scan_parallelism(_t(spark, sf_dir, name), key=key)
-
-
 # Committed golden tables for the non-SQL-expressible cetd_* queries:
 # generated by tools/make_cetd_goldens.py from the tier-1 scalar path
 # (itself locked to the reference's own assertions by tests/). The
@@ -732,7 +723,7 @@ def _q_events_json_props(spark, sf_dir):
     """Semi-structured parsing: extract a JSON field from the props
     column and aggregate — the crawl-metadata (WARC headers, page
     metadata) handling pattern."""
-    e = _t_par(spark, sf_dir, "events", "event_id")
+    e = _t(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
         e.select("event_type", k.alias("k"))
@@ -766,7 +757,7 @@ def _q_events_range_join(spark, sf_dir):
 def _q_events_rollup(spark, sf_dir):
     from dce_spark.functions.eventops import hypertable_rollup
 
-    return hypertable_rollup(_t_par(spark, sf_dir, "events", "event_id"))
+    return hypertable_rollup(_t(spark, sf_dir, "events"))
 
 
 def _q_doc_distinct_sketch(spark, sf_dir):
@@ -1157,7 +1148,7 @@ def _q_events_last_max(spark, sf_dir):
     # event_id among ties. A row_number window over the ~5-value
     # event_type key would sort each type's entire history through one
     # reducer at scale; the aggregate gets map-side partial combine.
-    e = _t_par(spark, sf_dir, "events", "event_id")
+    e = _t(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(

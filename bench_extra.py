@@ -10,6 +10,9 @@ Usage:
   python bench_extra.py [--sf DIR] [--repeats N] [--plans OUTDIR] \
       [--cpus N] [query ...]
 
+--sf defaults to the sf0.1 testdata, --cpus to the cores this process
+may run on.
+
 Prints one JSON line: {"sf": ..., "queries": {name: min_sec},
 "queries_all": {name: [s, s, ...]}}.
 """
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -27,11 +31,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf1.0")
+    ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--plans", default=None,
                     help="directory to write <query>.txt formatted plans")
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 

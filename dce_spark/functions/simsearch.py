@@ -208,12 +208,6 @@ def brute_force_topk(
     """
     from pyspark.sql.window import Window
 
-    from dce_spark.functions.textops import ensure_scan_parallelism
-
-    # input-split guard: parallelize the per-candidate cosine folds
-    # when the scan is a single unsplittable partition (guide §2.5)
-    embeddings = ensure_scan_parallelism(embeddings, key="vec_id")
-
     if query_ids is not None:
         queries = embeddings.filter(F.col("vec_id").isin(query_ids))
     else:
@@ -258,11 +252,6 @@ def cosine_pairs_threshold(
 ) -> DataFrame:
     """Set-semantics variant (oracle-friendly: no rank instability):
     all (query, candidate) pairs with cosine >= threshold."""
-    from dce_spark.functions.textops import ensure_scan_parallelism
-
-    # input-split guard: parallelize the per-candidate cosine folds
-    # when the scan is a single unsplittable partition (guide §2.5)
-    embeddings = ensure_scan_parallelism(embeddings, key="vec_id")
     queries = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -407,11 +396,6 @@ def _with_table_buckets(
 ) -> DataFrame:
     """(vec_id, embedding, tbl, bucket) — one row per (vector, table),
     the codes from ``_lsh_codes``."""
-    from dce_spark.functions.textops import ensure_scan_parallelism
-
-    embeddings = ensure_scan_parallelism(
-        embeddings.select("vec_id", "embedding"), key="vec_id"
-    )
     return _lsh_codes(
         embeddings.select(F.col("vec_id").cast("long").alias("vec_id"), "embedding"),
         n_planes, dim, range(max(n_tables, 1)),
@@ -523,8 +507,12 @@ def lsh_topk(
     if n_tables is None:
         # amplification follows the planes in use, pinned or derived
         n_tables = tables_for_planes(n_planes)
-    with_bucket = _with_table_buckets(embeddings, n_planes, dim, n_tables)
-    queries = with_bucket.filter(F.col("vec_id") < n_queries).select(
+    # each branch filters before it codes: Spark pushes no filter below
+    # a MapInArrow, so coding first would run the kernel over the whole
+    # corpus once per branch
+    queries = _with_table_buckets(
+        embeddings.filter(F.col("vec_id") < n_queries), n_planes, dim, n_tables
+    ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("tbl"),
@@ -542,7 +530,9 @@ def lsh_topk(
             ],
         )
         queries = queries.withColumn("bucket", F.explode(probe_buckets))
-    cands = with_bucket.filter(F.col("vec_id") >= n_queries).select(
+    cands = _with_table_buckets(
+        embeddings.filter(F.col("vec_id") >= n_queries), n_planes, dim, n_tables
+    ).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_emb"),
         F.col("tbl"),
@@ -649,8 +639,6 @@ def _assign_arrow(em: DataFrame, centroids: list[list[int]]) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    from dce_spark.functions.textops import ensure_scan_parallelism
-
     C = np.asarray(centroids, dtype=np.int64)
     dim = C.shape[1]
 
@@ -665,9 +653,9 @@ def _assign_arrow(em: DataFrame, centroids: list[list[int]]) -> DataFrame:
                 ),
             })
 
-    return ensure_scan_parallelism(
-        em.select("vec_id", "em"), key="vec_id"
-    ).mapInArrow(kernel, "vec_id long, cluster long")
+    return em.select("vec_id", "em").mapInArrow(
+        kernel, "vec_id long, cluster long"
+    )
 
 
 def _update_partials_arrow(em: DataFrame, centroids: list[list[int]]):
@@ -681,8 +669,6 @@ def _update_partials_arrow(em: DataFrame, centroids: list[list[int]]):
     partitioning."""
     import numpy as np
     import pyarrow as pa
-
-    from dce_spark.functions.textops import ensure_scan_parallelism
 
     C = np.asarray(centroids, dtype=np.int64)
     k, dim = C.shape
@@ -714,9 +700,7 @@ def _update_partials_arrow(em: DataFrame, centroids: list[list[int]]):
                 ),
             })
 
-    return ensure_scan_parallelism(
-        em.select("vec_id", "em"), key="vec_id"
-    ).select("em").mapInArrow(
+    return em.select("em").mapInArrow(
         kernel, "cluster long, pos int, s long, c long"
     )
 

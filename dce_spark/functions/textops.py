@@ -47,17 +47,29 @@ def tokens_col(col="text"):
 
 
 def ensure_scan_parallelism(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Input-skew guard ahead of a compute-heavy Arrow kernel (guide
-    §2.5: one huge unsplittable file -> repartition right after the
-    read). A single-row-group parquet file yields a 1-partition scan,
-    which would serialize a map-only kernel no matter how many cores
-    the session has. When the scan has fewer partitions than the
-    session's default parallelism, hash-repartition on the row key up
-    to it (hash, not round-robin: deterministic placement under task
-    retry, no sort-before-repartition pass); with healthily split
-    inputs — the 100 TB layout — the condition is false and the plan
-    is untouched. Costs one exchange of exactly the columns the kernel
-    needs, which the caller has already projected (guide §2.3)."""
+    """Input-split guard ahead of per-document text work (MD5,
+    shingling, n-grams, line and quality scans). A single-row-group
+    parquet file yields a 1-partition scan, which would serialize a
+    map-only kernel no matter how many cores the session has. When the
+    scan has fewer partitions than the session's default parallelism,
+    hash-repartition on the row key up to it (hash, not round-robin:
+    deterministic placement under task retry); with healthily split
+    inputs the condition is false and the plan is untouched. Costs one
+    exchange of the columns the caller has already projected.
+
+    Only this module's text operators call it, where it was measured
+    to pay: without it the MD5 and shingle queries lost 0.2-0.55 s
+    each (sf0.1, 4 cores). The embedding kernels (simsearch) and the
+    events queries read their input as given, because there they ran
+    faster without it: ``emb_kmeans`` 0.67-0.80 -> 0.51-0.58 s,
+    ``emb_semdedup`` best 1.37 -> 1.17 s, ``events_type_stats`` best
+    0.56 -> 0.46 s. For NumPy kernels over 1-2k vectors the exchange
+    costs more than it saves.
+
+    The ``df.rdd.getNumPartitions()`` probe plans ``df`` on the
+    driver. On an input with a shuffle below it (a gated or deduped
+    frame rather than a scan), that runs the shuffle stages as
+    separate jobs while the operator is still being built."""
     try:
         n = df.rdd.getNumPartitions()
         target = df.sparkSession.sparkContext.defaultParallelism
@@ -236,8 +248,6 @@ def bloom_dedup(
 
 
 def token_count(documents: DataFrame) -> DataFrame:
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     return documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -254,8 +264,6 @@ BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 def token_count_bpe(documents: DataFrame) -> DataFrame:
     """Subword-style token counting via regex pre-tokenization — the
     cheap cross-engine-deterministic stand-in for a real BPE pass."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     return documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -267,8 +275,6 @@ def token_count_bpe(documents: DataFrame) -> DataFrame:
 
 def quality_score(documents: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     toks = tokens_col()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS_EN])
@@ -301,8 +307,6 @@ def lang_distribution(documents: DataFrame) -> DataFrame:
 
 def fingerprint(documents: DataFrame) -> DataFrame:
     """Exact-document fingerprint: md5 over the normalized text."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     return documents.select(
@@ -322,8 +326,6 @@ def rolling_fingerprint(documents: DataFrame) -> DataFrame:
     chunk fingerprinting. Values stay < 2^31 so the fold arithmetic
     (< 2^36) is exact in 64-bit on any engine; the DuckDB oracle
     mirrors it with list_reduce."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     toks = tokens_col()
     m = F.lit(2147483647).cast("long")
@@ -344,8 +346,6 @@ def rolling_fingerprint(documents: DataFrame) -> DataFrame:
 
 def lang_id(documents: DataFrame) -> DataFrame:
     """Function-word-profile language ID (n-gram-heuristic family)."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     toks = tokens_col()
 
@@ -427,8 +427,6 @@ def gopher_quality(
     an alphabetic character, and a required minimum of canonical
     stopword hits. Emits the signals plus the combined keep flag — all
     pure Catalyst array expressions, one projection, no shuffle."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     n_words, mean_word_len, alpha_frac, stop_hits = _gopher_signal_cols()
     keep = (
@@ -596,8 +594,6 @@ def char_entropy(documents: DataFrame) -> DataFrame:
     eval with no subexpression reuse — measured ~40x slower.
     CollapseProject keeps the stages separate because each column is
     expensive and multiply-referenced."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     with_lower = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -784,8 +780,6 @@ def pii_redact(documents: DataFrame, text_col="text") -> DataFrame:
     shuffle, no Python). Redaction order is part of the contract:
     emails first (their local parts can contain digits), then IPs,
     then phones."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     text = F.col(text_col)
     counts = [
@@ -816,8 +810,6 @@ def kmv_minima(documents: DataFrame, k: int = 64) -> DataFrame:
     starving the sketch (<k survivors when distinct >= k) is nil; when
     distinct < 8k the threshold clamps to 1.0 and every hash survives.
     """
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition
     documents = ensure_scan_parallelism(documents)
     m = float(16**15)
     toks = documents.select(
@@ -1728,8 +1720,6 @@ def linear_quality_score(
     Shape: one projection (no explode — the per-token work happens
     inside array transform/aggregate on the row), no shuffle, no
     Python. Empty documents score exactly bias/10."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     if weights is None:
         # stand-in weights in [-10, 10] tenths, fixed by bucket index
@@ -2003,8 +1993,6 @@ def c4_filter(documents: DataFrame, min_words: int = 5,
     alias instead of re-inlining the expression (CollapseProject
     keeps stages apart when a non-cheap alias is referenced more
     than once) — one lambda evaluation per row, not five."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     keep_line = lambda ln: (
         F.right(F.rtrim(ln), F.lit(1)).isin(*_C4_TERMINALS)
@@ -2129,8 +2117,6 @@ def span_dedup(
     reassembles with sort_array — no windows anywhere. Total over
     input docs; a doc with fewer than n sentences has no spans and
     passes through unchanged."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     arr = F.split(F.col(text_col), r"[.!?] ")
     m = F.size(arr)
@@ -2236,8 +2222,6 @@ def tfidf_keywords(
     keyword, so the hot keys never reach the join), then one per-doc
     top-k via sort+slice inside an aggregate — no Window, no global
     sort. Docs whose every token was df-capped yield no rows."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     toks = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -2317,8 +2301,6 @@ def chunk_documents(
     yields exactly one chunk equal to itself (empty text yields one
     empty chunk — totality over input rows). Deterministic chunk ids
     (doc_id, chunk_id ascending from 0)."""
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
@@ -2396,8 +2378,6 @@ def boilerplate_lines(
 
     Returns (doc_id, text_clean, n_lines, n_boiler).
     """
-    # input-split guard: parallelize the text-heavy work when
-    # the scan is a single unsplittable partition (guide §2.5)
     documents = ensure_scan_parallelism(documents)
     lines = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -113,6 +113,32 @@ def test_lsh_codes_not_a_catalyst_fold(spark):
         assert "zip_with" not in plan, q
 
 
+def test_lsh_topk_codes_each_row_once(spark):
+    """Each branch of lsh_topk filters on vec_id BELOW its code
+    kernel: Spark pushes no filter through a MapInArrow, so a filter
+    above it would code the whole corpus once per branch."""
+    import __spark_entry__ as e
+
+    df = e.queries()["emb_lsh_topk"](spark, SF)
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+
+    def node_col(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    maps = [i for i, line in enumerate(lines) if "MapInArrow" in line]
+    assert len(maps) == 2, maps
+    for i in maps:
+        col = node_col(lines[i])
+        below = []
+        for line in lines[i + 1:]:
+            if node_col(line) <= col:
+                break
+            below.append(line)
+        assert any(
+            "Filter" in line and "vec_id" in line for line in below
+        ), "\n".join(lines)
+
+
 def test_events_last_max_partial_agg_no_window(spark):
     import __spark_entry__ as e
 
@@ -146,19 +172,30 @@ def test_simsearch_supplied_count_runs_no_action(spark, monkeypatch):
     """With a caller-supplied corpus count (catalog/manifest stats),
     embedding_dedup and lsh_topk must stay pure plan builders — no
     count() (or any other driver action) fired per call."""
-    from pyspark.sql import DataFrame
-
     from dce_spark.functions.simsearch import embedding_dedup, lsh_topk
 
     emb = spark.read.parquet(SF + "/embeddings.parquet")
+    # patch the concrete class: the classic DataFrame overrides every
+    # method of the pyspark.sql.DataFrame base
+    DataFrame = type(emb)
 
     def boom(self):
         raise AssertionError("driver action during plan build")
 
     for action in ("count", "collect", "take", "first", "head"):
         monkeypatch.setattr(DataFrame, action, boom)
+    # nor a partition-count probe: simsearch reads its input as given.
+    # Recorded as well as raised, since a probe may swallow the error.
+    probes = []
+
+    def probe(self):
+        probes.append(self)
+        boom(self)
+
+    monkeypatch.setattr(DataFrame, "rdd", property(probe))
     embedding_dedup(emb, threshold=0.9, n_candidates=200)
     lsh_topk(emb, n_queries=5, k=3, n_candidates=200)
+    assert not probes, "DataFrame.rdd read during plan build"
 
 
 def test_decontaminate_broadcast_and_pii_projection(spark):
