@@ -2223,7 +2223,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT vec_id, cluster FROM assign
         """,
         # SemDeDup with the bounded pairing exercised: same clustering,
-        # oversize clusters (> 32) sub-sharded by the low split_bits
+        # oversize clusters (> 32) sub-sharded by the low _split_bits
         # bits of the table-1 16-plane LSH bucket, every (cluster, sub)
         # hard-chunked to 32 rows by vec_id order, then within-GROUP
         # cosine pruning (sequential f64 dot == Spark's zip_with fold),

@@ -55,7 +55,6 @@ def curate_corpus(
     robots_bodies: DataFrame | None = None,
     robots_agent: str = "*",
     latest_only: bool = False,
-    url_ts_col: str = "ts",
     cc_dedup: bool = False,
 ) -> DataFrame:
     """Returns the packed shard table (source, doc_id, n_tokens, shard)
@@ -137,10 +136,7 @@ def curate_corpus(
                 "doc_id", "semi",
             )
         if latest_only:
-            latest = latest_snapshot(
-                surviving, id_col="doc_id", url_col="url",
-                ts_col=url_ts_col,
-            )
+            latest = latest_snapshot(surviving)
             surviving = surviving.join(
                 latest.select(F.col("kept_id").alias("doc_id")),
                 "doc_id", "semi",

@@ -59,10 +59,9 @@ def asof_join(
     events: DataFrame,
     probe_type: str,
     ref_type: str,
-    key: str = "user_id",
 ) -> DataFrame:
     """For every probe event, the most recent reference event of the
-    same key at or before the probe's timestamp (ties on ts: the
+    same user_id at or before the probe's timestamp (ties on ts: the
     larger event_id, i.e. the latest reference wins deterministically).
 
     Returns (key, probe event_id/ts_us, matched ref event_id/ts_us —
@@ -71,7 +70,7 @@ def asof_join(
     e = events.filter(
         F.col("event_type").isin([probe_type, ref_type])
     ).select(
-        F.col(key).cast("long").alias("key"),
+        F.col("user_id").cast("long").alias("key"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.col("event_id").cast("long").alias("event_id"),
         (F.col("event_type") == ref_type).alias("is_ref"),
@@ -102,9 +101,8 @@ def range_join_pairs(
     left_type: str,
     right_type: str,
     window_us: int = 300_000_000,
-    key: str = "user_id",
 ) -> DataFrame:
-    """All (left, right) event pairs of the same key whose timestamps
+    """All (left, right) event pairs of the same user_id whose timestamps
     are within ``window_us`` of each other (|t_r - t_l| <= window).
 
     Bin-join: both sides bucket by floor(ts/window); a pair within the
@@ -115,7 +113,7 @@ def range_join_pairs(
     """
     def side(t: str, alias: str) -> DataFrame:
         return events.filter(F.col("event_type") == t).select(
-            F.col(key).cast("long").alias("key"),
+            F.col("user_id").cast("long").alias("key"),
             F.unix_micros(F.col("ts").cast("timestamp")).alias(f"{alias}_ts"),
             F.col("event_id").cast("long").alias(f"{alias}_id"),
         )

@@ -16,38 +16,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 RANK_UNIT = 1_000_000  # 1.0 in micro-units
+DAMPING_MICRO = 850_000  # d = 0.85 in micro-units
 
 
-def host_pagerank(
-    edges: DataFrame,
-    iterations: int | None = 3,
-    damping_micro: int = 850_000,
-    include_internal: bool = False,
-    epsilon_micro: int = 1,
-    max_iterations: int = 100,
-    redistribute_dangling: bool = False,
-) -> DataFrame:
+def host_pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Weighted PageRank over (src_host, dst_host, n_links) edges in
     micro-unit integers: r'(v) = (1e6 - d) + d * sum_u((r(u) *
-    w_uv) div outdeg(u)) div 1e6, starting from r0 = 1e6. Self/
-    internal edges are dropped by default (intra-site nav links would
-    otherwise dominate inter-site authority).
-
-    ``iterations=None`` iterates to a fixed point instead: stop when
-    max_v |r'(v) - r(v)| <= ``epsilon_micro`` (an integer micro-unit
-    bound — exact, no float tolerance), capped at ``max_iterations``.
-    The convergence probe is one scalar aggregate per iteration over
-    the already-materialized rank checkpoints, the same driver-bounded
-    pattern as label_components' limit(1).count().
-
-    ``redistribute_dangling=True`` adds the classic dangling-mass
-    correction: each iteration, the rank mass sitting on hosts with no
-    (retained) out-edges is summed (one scalar agg) and every node
-    receives ``dangling_mass div n_nodes`` extra incoming mass before
-    damping. Truncating integer division keeps it bit-exact and
-    partition-independent; mass is conserved up to n_nodes micro-unit
-    remainders (documented, deterministic). Default stays off — ranks
-    as relative signals, matching the fixed-iteration oracle.
+    w_uv) div outdeg(u)) div 1e6, starting from r0 = 1e6, for a fixed
+    number of iterations. Self/internal edges are dropped (intra-site
+    nav links would otherwise dominate inter-site authority). Ranks are
+    relative signals: mass on hosts without out-edges is not
+    redistributed.
 
     Scale shape per iteration: one join of the edge list with the
     rank vector on src (both shuffled on host), one groupBy(dst) sum
@@ -67,39 +46,17 @@ def host_pagerank(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    e = edges
-    if not include_internal:
-        e = e.filter(F.col("src_host") != F.col("dst_host"))
-    e = e.select("src_host", "dst_host",
-                 F.col("n_links").cast("long").alias("w"))
+    e = edges.filter(F.col("src_host") != F.col("dst_host")).select(
+        "src_host", "dst_host", F.col("n_links").cast("long").alias("w"))
     outdeg = e.groupBy("src_host").agg(F.sum("w").alias("od"))
     # checkpoint the weighted edge list once: each iteration reuses
     # the materialized copy instead of re-deriving the outdeg shuffle
     # from the source K times
     ew = e.join(outdeg, "src_host").localCheckpoint(eager=False)
 
-    base = F.lit(RANK_UNIT - damping_micro).cast("long")
+    base = F.lit(RANK_UNIT - DAMPING_MICRO).cast("long")
     ranks = nodes.withColumn("r", F.lit(RANK_UNIT).cast("long"))
-    n_nodes = nodes.count() if redistribute_dangling else 0
-    dangling = (
-        nodes.join(ew.select("src_host").distinct(),
-                   nodes.host == F.col("src_host"), "left_anti")
-        .localCheckpoint(eager=False)
-        if redistribute_dangling else None
-    )
-    converge = iterations is None
-    n_iter = max_iterations if converge else iterations
-    prev = None
-    for _ in range(n_iter):
-        share = 0
-        if redistribute_dangling and n_nodes:
-            # scalar agg: rank mass parked on out-degree-0 hosts this
-            # iteration, split evenly (truncating) across all nodes
-            mass = (
-                ranks.join(dangling, "host").agg(F.sum("r")).first()[0]
-                or 0
-            )
-            share = mass // n_nodes
+    for _ in range(iterations):
         inc = (
             ew.join(ranks, ew.src_host == ranks.host)
             .select(
@@ -109,37 +66,19 @@ def host_pagerank(
             .groupBy("host")
             .agg(F.sum("contrib").alias("inc"))
         )
-        new_ranks = (
+        # lazy checkpoint: materialization fuses into the next
+        # iteration's join instead of costing a scheduled job per
+        # iteration
+        ranks = (
             nodes.join(inc, "host", "left")
             .select(
                 "host",
                 (
                     base
-                    + F.expr(
-                        f"({damping_micro} * (coalesce(inc, 0)"
-                        f" + {share})) div {RANK_UNIT}"
-                    )
+                    + F.expr(f"({DAMPING_MICRO} * coalesce(inc, 0))"
+                             f" div {RANK_UNIT}")
                 ).cast("long").alias("r"),
             )
             .localCheckpoint(eager=False)
         )
-        # lazy checkpoint: materialization fuses into the next
-        # consumer (the delta probe, or the next iteration's join)
-        # instead of costing a scheduled job per iteration
-        if converge:
-            delta = (
-                new_ranks.withColumnRenamed("r", "rn")
-                .join(ranks.withColumnRenamed("r", "ro"), "host")
-                .agg(F.max(F.abs(F.col("rn") - F.col("ro"))))
-                .first()[0]
-            )
-            # the probe materialized new_ranks, so the superseded
-            # checkpoint is safe to release (a lazily-checkpointed
-            # child must never outlive an unpersisted parent, so the
-            # fixed-iteration path keeps its K tiny rank tables)
-            if prev is not None:
-                prev.unpersist()
-        ranks, prev = new_ranks, new_ranks
-        if converge and (delta is None or delta <= epsilon_micro):
-            break
     return ranks.select("host", F.col("r").alias("rank_micro"))

@@ -195,12 +195,10 @@ def cosine_similarity_col(a, b):
 
 
 def brute_force_topk(
-    embeddings: DataFrame,
-    query_ids: list[int] | None = None,
-    k: int = 5,
-    n_queries: int = 10,
+    embeddings: DataFrame, k: int = 5, n_queries: int = 10
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for the query vectors.
+    """Exact top-k cosine neighbors for the query vectors (vec_id <
+    ``n_queries``) among the rest.
 
     The query side is tiny -> broadcast crossJoin; candidates stream
     through one whole-stage-codegen projection; top-k via a window on
@@ -208,20 +206,12 @@ def brute_force_topk(
     """
     from pyspark.sql.window import Window
 
-    if query_ids is not None:
-        queries = embeddings.filter(F.col("vec_id").isin(query_ids))
-    else:
-        queries = embeddings.filter(F.col("vec_id") < n_queries)
-    queries = queries.select(
+    queries = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     cands = embeddings.select(
         F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb")
-    ).filter(
-        ~F.col("cand_id").isin(query_ids)
-        if query_ids is not None
-        else F.col("cand_id") >= n_queries
-    )
+    ).filter(F.col("cand_id") >= n_queries)
     scored = (
         cands.crossJoin(F.broadcast(queries))
         .withColumn(
@@ -347,26 +337,21 @@ def embedding_dedup(
     )
 
 
-def derive_n_planes(
-    n_candidates: int,
-    target_bucket: int = 256,
-    min_planes: int = 6,
-    max_planes: int = 48,
-) -> int:
+def derive_n_planes(n_candidates: int) -> int:
     """Plane count must grow with the corpus: 2^planes buckets sized so
-    the EXPECTED bucket holds ~target_bucket candidates (at 10^9 vectors
-    a fixed 64-bucket table degenerates to ~10^7-candidate buckets).
-    At 10^12 vectors this returns 32 — the recall cost of long codes is
-    paid back by multi-table amplification (see derive_lsh_params), NOT
-    by clamping occupancy into the quadratic regime (the round-2
-    max_planes=24 clamp meant ~60k-vector buckets at 10^12). The 48 cap
-    only guards the int64 bucket id."""
+    the EXPECTED bucket holds ~256 candidates (at 10^9 vectors a fixed
+    64-bucket table degenerates to ~10^7-candidate buckets), at least
+    6 planes. At 10^12 vectors this returns 32 — the recall cost of
+    long codes is paid back by multi-table amplification (see
+    tables_for_planes), NOT by clamping occupancy into the quadratic
+    regime (a 24-plane clamp meant ~60k-vector buckets at 10^12). The
+    48 cap only guards the int64 bucket id."""
     import math
 
     if n_candidates <= 0:
-        return min_planes
-    need = math.ceil(math.log2(max(n_candidates / target_bucket, 1.0)))
-    return max(min_planes, min(max_planes, need))
+        return 6
+    need = math.ceil(math.log2(max(n_candidates / 256, 1.0)))
+    return max(6, min(48, need))
 
 
 def tables_for_planes(n_planes: int) -> int:
@@ -379,16 +364,6 @@ def tables_for_planes(n_planes: int) -> int:
     if n_planes <= 16:
         return 1
     return min(1 + ((n_planes - 16) + 7) // 8, 8)
-
-
-def derive_lsh_params(n_candidates: int) -> tuple[int, int]:
-    """(n_planes, n_tables) for a corpus size: planes keep expected
-    bucket occupancy ~256 (linear candidate generation at any N);
-    tables restore the recall that longer codes cost. At sandbox
-    scales this is (6, 1), so every pinned oracle is untouched; at
-    10^12 it is (32, 3)."""
-    n_planes = derive_n_planes(n_candidates)
-    return n_planes, tables_for_planes(n_planes)
 
 
 def _with_table_buckets(
@@ -470,7 +445,6 @@ def lsh_topk(
     k: int = 5,
     n_planes: int | None = None,
     dim: int = 64,
-    probes: int = 1,
     n_tables: int | None = None,
     n_candidates: int | None = None,
 ) -> DataFrame:
@@ -485,11 +459,6 @@ def lsh_topk(
       corpus grows. Pass ``n_candidates`` (catalog/manifest row count)
       to avoid the count() driver action; it is only consulted when
       n_planes is underived.
-    * ``probes`` enables multi-probe: each query additionally searches
-      the buckets at Hamming distance 1 (bit p flipped, for the first
-      ``probes - 1`` planes), recovering neighbors that fell across a
-      single hyperplane. probes=1 is exactly the single-bucket search
-      (oracle-identical).
     * ``n_tables`` > 1 (banded multi-table LSH, the 10^12-scale path):
       L independent hyperplane families; candidates occupy one bucket
       PER table and a (query, cand) pair is scored if it collides in
@@ -518,18 +487,6 @@ def lsh_topk(
         F.col("tbl"),
         F.col("bucket"),
     )
-    if probes > 1:
-        # probe buckets: the home bucket + single-bit flips; within one
-        # table a candidate occupies exactly one bucket, so no pair is
-        # produced twice by probing (cross-TABLE dups handled below)
-        probe_buckets = F.array(
-            F.col("bucket"),
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << p).cast("long"))
-                for p in range(min(probes - 1, n_planes))
-            ],
-        )
-        queries = queries.withColumn("bucket", F.explode(probe_buckets))
     cands = _with_table_buckets(
         embeddings.filter(F.col("vec_id") >= n_queries), n_planes, dim, n_tables
     ).select(
@@ -710,7 +667,6 @@ def kmeans_fit(
     k: int = 4,
     n_iters: int = 2,
     dim: int = 64,
-    sample_mod: int | None = None,
 ) -> list[list[int]]:
     """Fit Lloyd's k-means and return the FINAL centroids as k lists
     of dim fixed-point (1e-6) integers — the reusable model behind
@@ -731,12 +687,7 @@ def kmeans_fit(
     emits k*dim-row partial sums (``_update_partials_arrow``), one
     (cluster, pos) hash aggregation of those partials, and a
     k*dim-row collect — the standard k-means control-plane scalar
-    (MLlib's runs the same loop). ``sample_mod=m`` fits the update phase on the deterministic
-    1/m id-slice (``vec_id % m == 0``) — the 10^12-row path, where
-    scanning the full corpus ``n_iters`` times to place centroids is
-    waste; the final full-corpus assignment is unaffected by HOW the
-    centroids were fit, and the slice is reproducible (no RNG).
-    ``sample_mod=1`` (or None) is the exact full fit.
+    (MLlib's runs the same loop).
     """
     import math
 
@@ -748,17 +699,12 @@ def kmeans_fit(
         raise ValueError(
             f"k={k} exceeds the number of vectors ({len(init)})"
         )
-    em_fit = em
-    if sample_mod is not None and int(sample_mod) > 1:
-        em_fit = em.filter(
-            F.pmod(F.col("vec_id"), F.lit(int(sample_mod))) == 0
-        )
     centroids = [list(r.em) for r in init]
     for _ in range(n_iters):
         # fused assignment + k*dim-row partial sums per task (see
         # _update_partials_arrow)
         sums = (
-            _update_partials_arrow(em_fit, centroids)
+            _update_partials_arrow(em, centroids)
             .groupBy("cluster", "pos")
             .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
             .collect()
@@ -779,7 +725,6 @@ def kmeans_embeddings(
     k: int = 4,
     n_iters: int = 2,
     dim: int = 64,
-    sample_mod: int | None = None,
 ) -> DataFrame:
     """Lloyd's k-means over the embedding column — the clustering pass
     behind SemDeDup-style semantic dedup sharding and corpus domain
@@ -787,29 +732,35 @@ def kmeans_embeddings(
     pruning where the candidates actually live). Returns
     (vec_id, cluster); see ``kmeans_fit`` for the model semantics and
     the scale shape."""
-    centroids = kmeans_fit(embeddings, k, n_iters, dim, sample_mod)
+    centroids = kmeans_fit(embeddings, k, n_iters, dim)
     return _assign_arrow(_quantize_embeddings(embeddings), centroids)
 
 
-def split_bits(cnt: int, cap: int, max_bits: int = 16) -> int:
-    """Bits of LSH sub-bucket a cluster of ``cnt`` members needs so the
-    EXPECTED sub-cluster size is <= cap: the smallest p with
-    cnt <= cap * 2^p. Written as ceil(log2(m + 1)) for
-    m = (cnt - 1) // cap — integer-derived, so the identical formula
-    is float-safe in SQL oracles (log2 of a small exact integer never
-    lands a ULP below an integer boundary)."""
-    import math
+_SUB_PLANES = 16  # bits of semdedup's sub-shard LSH code
 
-    if cnt <= cap:
-        return 0
-    return min(max_bits, math.ceil(math.log2((cnt - 1) // cap + 1)))
+
+def _split_bits(cap: int):
+    """Bits of LSH sub-bucket a cluster of ``cnt`` members (column
+    ``cnt``) needs so the EXPECTED sub-cluster size is <= cap: the
+    smallest p with cnt <= cap * 2^p, at most ``_SUB_PLANES``. Written
+    as ceil(log2(m + 1)) for m = (cnt - 1) div cap — integer-derived,
+    so the identical formula is float-safe in SQL (log2 of a small
+    exact integer never lands a ULP below an integer boundary; the
+    DuckDB oracle computes the same expression)."""
+    return F.when(
+        F.col("cnt") <= cap, F.lit(0)
+    ).otherwise(
+        F.least(
+            F.lit(_SUB_PLANES).cast("long"),
+            F.ceil(F.log2(F.expr(f"(cnt - 1) div {cap}") + 1)),
+        )
+    ).cast("int")
 
 
 def semdedup(
     embeddings: DataFrame, k: int = 4, n_iters: int = 1, dim: int = 64,
     threshold: float = 0.95, max_cluster_size: int | None = None,
-    sub_planes: int = 16, keep_policy: str = "min_id",
-    sample_mod: int | None = None,
+    keep_policy: str = "min_id",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): k-means shards the
@@ -830,8 +781,8 @@ def semdedup(
     * clusters over the cap are sub-sharded by deterministic
       integer-hyperplane LSH signs (family table=1; similar vectors
       land in the same sub-bucket, so recall degrades gracefully, not
-      arbitrarily). Each cluster masks the shared ``sub_planes``-bit
-      bucket down to its OWN ``split_bits(count)`` low bits via a
+      arbitrarily). Each cluster masks the shared 16-bit bucket
+      down to its OWN ``_split_bits`` low bits (from its count) via a
       broadcast (cluster -> mask) table, so small clusters keep
       sub = 0 and are untouched;
     * a final deterministic chunk pass (row_number by vec_id within
@@ -871,7 +822,7 @@ def semdedup(
 
     if keep_policy not in ("min_id", "centroid_far"):
         raise ValueError(f"unknown keep_policy {keep_policy!r}")
-    centroids = kmeans_fit(embeddings, k, n_iters, dim, sample_mod)
+    centroids = kmeans_fit(embeddings, k, n_iters, dim)
     assigned = _assign_arrow(_quantize_embeddings(embeddings), centroids)
     withv = assigned.join(
         embeddings.select(
@@ -897,26 +848,13 @@ def semdedup(
         if cap < 1:
             raise ValueError("max_cluster_size must be >= 1")
         # (cluster -> mask) derived IN-PLAN from a broadcast size
-        # aggregate — split_bits' integer-derived formula is float-
-        # safe in SQL (see its docstring; the DuckDB oracle computes
-        # the identical expression), so the former sizes.collect()
-        # control-plane job disappears and the mask table rides the
-        # one query plan. mask = 2^min(max_bits, ceil(log2(
-        # (cnt-1) div cap + 1))) - 1 for oversize clusters, else 0.
-        bits = F.when(
-            F.col("cnt") <= cap, F.lit(0)
-        ).otherwise(
-            F.least(
-                F.lit(int(sub_planes)).cast("long"),
-                F.ceil(
-                    F.log2(F.expr(f"(cnt - 1) div {cap}") + 1)
-                ),
-            )
-        ).cast("int")
+        # aggregate, so the mask table rides the one query plan with no
+        # control-plane job. mask = 2^_split_bits - 1 (0 for clusters
+        # within the cap).
         info = F.broadcast(
             assigned.groupBy("cluster")
             .agg(F.count("*").alias("cnt"))
-            .select("cluster", bits.alias("_bits"))
+            .select("cluster", _split_bits(cap).alias("_bits"))
             .select(
                 "cluster",
                 F.expr(
@@ -925,7 +863,7 @@ def semdedup(
                 ).alias("mask"),
             )
         )
-        withv = _lsh_codes(withv, sub_planes, dim, (1,)).join(info, "cluster", "left")
+        withv = _lsh_codes(withv, _SUB_PLANES, dim, (1,)).join(info, "cluster", "left")
         withv = withv.withColumn(
             "sub", F.col("bucket").bitwiseAND(F.coalesce("mask", F.lit(0).cast("long")))
         ).drop("tbl", "bucket", "mask")
@@ -1026,8 +964,7 @@ def ivf_topk(
     pair is produced at most once regardless of ``n_probes`` — no
     dedup pass needed (unlike multi-table LSH). At 10^12 rows
     ``n_clusters`` scales with N / target-list-size (the Arrow
-    assignment has no k cap) and the fit phase runs over a
-    deterministic sample.
+    assignment has no k cap).
 
     Deterministic end to end: kmeans_fit is integer-exact, probe
     ranking orders by exact integer (distance, j), and final ranking

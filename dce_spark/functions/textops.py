@@ -42,17 +42,17 @@ LANG_PROFILES = {
 }
 
 
-def tokens_col(col="text"):
-    return F.split(F.col(col), " ")
+def tokens_col():
+    return F.split(F.col("text"), " ")
 
 
-def ensure_scan_parallelism(df: DataFrame, key: str = "doc_id") -> DataFrame:
+def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     """Input-split guard ahead of per-document text work (MD5,
     shingling, n-grams, line and quality scans). A single-row-group
     parquet file yields a 1-partition scan, which would serialize a
     map-only kernel no matter how many cores the session has. When the
     scan has fewer partitions than the session's default parallelism,
-    hash-repartition on the row key up to it (hash, not round-robin:
+    hash-repartition on ``doc_id`` up to it (hash, not round-robin:
     deterministic placement under task retry); with healthily split
     inputs the condition is false and the plan is untouched. Costs one
     exchange of the columns the caller has already projected.
@@ -76,7 +76,7 @@ def ensure_scan_parallelism(df: DataFrame, key: str = "doc_id") -> DataFrame:
     except Exception:
         return df
     if 0 < n < target:
-        return df.repartition(target, F.col(key))
+        return df.repartition(target, F.col("doc_id"))
     return df
 
 
@@ -108,16 +108,20 @@ _WORKER_CACHES: dict = {}
 _INT_ENTRY_BYTES = 192  # one gram -> int (SimHash mask, DSIR bucket)
 
 
-def _minhash_entry_bytes(n_seeds: int) -> int:
-    """One cached shingle: n_seeds 16-byte digests in a list."""
-    return 256 + 56 * n_seeds
+# MinHash LSH layout shared by every MinHash operator and its oracles:
+# 8 md5 seeds, split into 2 bands of 4 rows
+_MINHASH_SEEDS = 8
+_MINHASH_BANDS = 2
+# one cached shingle: the seeds' 16-byte digests in a list
+_MINHASH_ENTRY_BYTES = 256 + 56 * _MINHASH_SEEDS
 
 
 @functools.lru_cache(maxsize=None)
-def _minhash_bases(n_seeds: int) -> tuple:
+def _minhash_bases() -> tuple:
     """One md5 state per seed, primed with its ``"{seed}:"`` prefix
-    (copied per shingle); built once per worker."""
-    return tuple(md5(f"{s}:".encode()) for s in range(n_seeds))
+    (copied per shingle); built once per worker (md5 states do not
+    pickle, so the kernel closure cannot carry them)."""
+    return tuple(md5(f"{s}:".encode()) for s in range(_MINHASH_SEEDS))
 
 
 def _worker_cache(key, entry_bytes: int) -> tuple[dict, int]:
@@ -169,7 +173,6 @@ def _bloom_positions(text, n_hashes: int, n_bits: int):
 
 def bloom_filter_words(
     documents: DataFrame, n_hashes: int = 5, n_bits: int = 1 << 20,
-    text_col: str = "text",
 ) -> DataFrame:
     """Distributed Bloom filter over the corpus texts, AS A DATAFRAME:
     (word: long, bits: long) — word w holds bits [w*63, w*63+62] of
@@ -186,7 +189,7 @@ def bloom_filter_words(
     return (
         documents.select(
             F.explode(
-                _bloom_positions(F.col(text_col), n_hashes, n_bits)
+                _bloom_positions(F.col("text"), n_hashes, n_bits)
             ).alias("p")
         )
         .select(
@@ -204,8 +207,7 @@ def bloom_filter_words(
 
 def bloom_dedup(
     new_docs: DataFrame, seen_docs: DataFrame, n_hashes: int = 5,
-    n_bits: int = 1 << 20, id_col: str = "doc_id",
-    text_col: str = "text",
+    n_bits: int = 1 << 20,
 ) -> DataFrame:
     """Incremental corpus dedup: flag docs in ``new_docs`` whose text
     is (probably) already in ``seen_docs`` — the new-crawl-batch vs
@@ -224,14 +226,14 @@ def bloom_dedup(
     cost a few novel docs. Size ``n_bits`` ~10 bits/doc for ~1% FP at
     k=5.
 
-    Returns (id_col, probably_seen) — total over new_docs."""
-    flt = bloom_filter_words(seen_docs, n_hashes, n_bits, text_col)
+    Returns (doc_id, probably_seen) — total over new_docs."""
+    flt = bloom_filter_words(seen_docs, n_hashes, n_bits)
     if _filter_broadcasts(new_docs.sparkSession, n_bits):
         flt = F.broadcast(flt)
     probes = new_docs.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         F.explode(
-            _bloom_positions(F.col(text_col), n_hashes, n_bits)
+            _bloom_positions(F.col("text"), n_hashes, n_bits)
         ).alias("p"),
     ).withColumn("word", F.expr(f"p div {_BLOOM_BITS_PER_WORD}"))
     hit = F.when(F.col("bits").isNull(), F.lit(0)).otherwise(
@@ -242,7 +244,7 @@ def bloom_dedup(
     )
     return (
         probes.join(flt, "word", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg((F.min(hit) == 1).alias("probably_seen"))
     )
 
@@ -379,9 +381,8 @@ def lang_id(documents: DataFrame) -> DataFrame:
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
-# Gopher gate thresholds (Rae et al. 2021, §A1.1) — module constants so
-# gopher_quality and filter_funnel both read the SAME numbers; tune
-# here, not at one call site
+# Gopher gate thresholds (Rae et al. 2021, §A1.1), applied once in
+# _gopher_signal_cols for gopher_quality and filter_funnel
 GOPHER_MIN_WORDS = 50
 GOPHER_MAX_WORDS = 100_000
 GOPHER_MIN_MEAN_WORD_LEN = 3.0
@@ -390,11 +391,13 @@ GOPHER_MIN_ALPHA_FRAC = 0.8
 GOPHER_MIN_STOP_HITS = 2
 
 
-def _gopher_signal_cols(col: str = "text"):
-    """The four Gopher §A1.1 signal columns over `col` — shared by
+def _gopher_signal_cols():
+    """The four Gopher §A1.1 signal columns over ``text`` and the four
+    pass flags that gate them — (n_words, mean_word_len, alpha_frac,
+    stop_hits), (words, word length, alpha, stopwords) — shared by
     gopher_quality (per-doc signals) and filter_funnel (per-source
     telemetry) so the rules cannot diverge."""
-    toks = tokens_col(col)
+    toks = tokens_col()
     n_words = F.size(toks).cast("long")
     sum_len = F.aggregate(
         F.transform(toks, lambda t: F.length(t).cast("long")),
@@ -410,33 +413,27 @@ def _gopher_signal_cols(col: str = "text"):
     stop_hits = F.size(
         F.filter(toks, lambda t: F.array_contains(stop_arr, t))
     ).cast("long")
-    return n_words, mean_word_len, alpha_frac, stop_hits
+    passes = (
+        (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS),
+        (mean_word_len >= GOPHER_MIN_MEAN_WORD_LEN)
+        & (mean_word_len <= GOPHER_MAX_MEAN_WORD_LEN),
+        alpha_frac >= GOPHER_MIN_ALPHA_FRAC,
+        stop_hits >= GOPHER_MIN_STOP_HITS,
+    )
+    return (n_words, mean_word_len, alpha_frac, stop_hits), passes
 
 
-def gopher_quality(
-    documents: DataFrame,
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
-    min_mean_word_len: float = GOPHER_MIN_MEAN_WORD_LEN,
-    max_mean_word_len: float = GOPHER_MAX_MEAN_WORD_LEN,
-    min_alpha_frac: float = GOPHER_MIN_ALPHA_FRAC,
-    min_stop_hits: int = GOPHER_MIN_STOP_HITS,
-) -> DataFrame:
+def gopher_quality(documents: DataFrame) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, §A1.1):
     word-count bounds, mean-word-length bounds, fraction of words with
     an alphabetic character, and a required minimum of canonical
     stopword hits. Emits the signals plus the combined keep flag — all
     pure Catalyst array expressions, one projection, no shuffle."""
     documents = ensure_scan_parallelism(documents)
-    n_words, mean_word_len, alpha_frac, stop_hits = _gopher_signal_cols()
-    keep = (
-        (n_words >= min_words)
-        & (n_words <= max_words)
-        & (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len)
-        & (alpha_frac >= min_alpha_frac)
-        & (stop_hits >= min_stop_hits)
-    )
+    signals, passes = _gopher_signal_cols()
+    n_words, mean_word_len, alpha_frac, stop_hits = signals
+    p_words, p_wordlen, p_alpha, p_stop = passes
+    keep = p_words & p_wordlen & p_alpha & p_stop
     return documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         n_words.alias("n_words"),
@@ -500,17 +497,17 @@ def repetition_signals(documents: DataFrame) -> DataFrame:
 
 
 def deterministic_sample(
-    documents: DataFrame, rates: dict[str, float], salt: str = "s1"
+    documents: DataFrame, rates: dict[str, float]
 ) -> DataFrame:
     """Reproducible stratified sampling by language: keep a row iff the
-    md5-derived uniform of (salt, doc_id) falls under its stratum's
+    md5-derived uniform of ("s1", doc_id) falls under its stratum's
     rate. Hash-based (not RNG-based like sampleBy), so the SAME rows
     are kept on every engine, every run, any partitioning — the
     property training-data pipelines need for resumable sampling.
     Unknown strata default to rate 0."""
     u = (
         F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col("doc_id"))), 1, 15),
+            F.substring(F.md5(F.concat_ws(":", F.lit("s1"), F.col("doc_id"))), 1, 15),
             16, 10,
         ).cast("double")
         / float(16**15)
@@ -773,7 +770,7 @@ PII_PATTERNS = (
 )
 
 
-def pii_redact(documents: DataFrame, text_col="text") -> DataFrame:
+def pii_redact(documents: DataFrame) -> DataFrame:
     """PII scrubbing for training text: count and redact emails, IPv4
     addresses, and international-format phone numbers. Pure projection
     (regexp_count + chained regexp_replace — whole-stage codegen, no
@@ -781,7 +778,7 @@ def pii_redact(documents: DataFrame, text_col="text") -> DataFrame:
     emails first (their local parts can contain digits), then IPs,
     then phones."""
     documents = ensure_scan_parallelism(documents)
-    text = F.col(text_col)
+    text = F.col("text")
     counts = [
         F.regexp_count(text, F.lit(pat)).cast("long").alias(f"n_{name}")
         for name, pat in PII_PATTERNS
@@ -912,20 +909,19 @@ def _doc_shingles_arrow(
 
 def ngram_jaccard_pairs(
     documents: DataFrame, k: int = 3, threshold: float = 0.1,
-    max_df: int = 64,
 ) -> DataFrame:
     """Pairwise k-shingle Jaccard within a blocking key (source).
 
     Hot-shingle guard: a shingle shared by d docs within one source
     produces d^2 pre-aggregation join rows, so stop-phrase shingles
     ("of the and") are a quadratic skew bomb at corpus scale. Standard
-    practice is a document-frequency cap: shingles with df > max_df
+    practice is a document-frequency cap: shingles with df > 64
     carry ~no similarity signal and are dropped BEFORE pair generation
     (sizes stay full-set, so the score is a lower bound for pairs whose
     overlap was mostly stop-shingles). The hot-set anti-join is left
     unhinted: at bench scale AQE broadcasts it (the set is the
     vocabulary head), while at 10^12 rows — where the Zipf mid-tail
-    makes df>max_df shingles too numerous to broadcast — it falls back
+    makes df > 64 shingles too numerous to broadcast — it falls back
     to a shuffle join on the same (source, shingle) key the pair
     groupBy needs anyway.
     """
@@ -942,12 +938,12 @@ def ngram_jaccard_pairs(
     hot = (
         sh.groupBy("source", "shingle")
         .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_df)
+        .filter(F.col("df") > 64)
         .select("source", "shingle")
     )
     rare = sh.join(hot, ["source", "shingle"], "left_anti")
     # Inverted-index pair generation instead of a string-keyed self-join:
-    # one groupBy collects each shingle's doc list (bounded <= max_df by
+    # one groupBy collects each shingle's doc list (bounded <= 64 by
     # the anti-join, so agg-buffer memory is bounded), then the i<j
     # combinations explode in-memory — the same pair multiset the
     # self-join produced, without shuffling the shingle table twice.
@@ -995,9 +991,7 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _minhash_bands_arrow(
-    documents: DataFrame, n_seeds: int, n_bands: int, k: int
-) -> DataFrame:
+def _minhash_bands_arrow(documents: DataFrame, k: int) -> DataFrame:
     """(doc_id, bands array<string>) via one mapInArrow pass — the
     portable-hash (md5) MinHash signature computed per document in the
     Python worker instead of explode + 8 Catalyst md5 calls per
@@ -1011,13 +1005,8 @@ def _minhash_bands_arrow(
     lexicographic min over lowercase hex strings; duplicate shingles
     cannot change a min, so skipping array_distinct is value-neutral.
     Docs that produce no shingle (null text or < k tokens) emit no row,
-    exactly like the groupBy over an empty explode.
-
-    Raises ValueError unless ``n_bands`` divides ``n_seeds``: a
-    remainder seed would otherwise fall outside every band."""
-    if n_bands < 1 or n_seeds % n_bands != 0:
-        raise ValueError("n_bands must divide n_seeds")
-    r = n_seeds // n_bands
+    exactly like the groupBy over an empty explode."""
+    r = _MINHASH_SEEDS // _MINHASH_BANDS
 
     def bands(doc_id, t):
         if t is None:
@@ -1026,13 +1015,11 @@ def _minhash_bands_arrow(
         n = len(toks)
         if n < k:
             return
-        bases = _minhash_bases(n_seeds)
-        cache, cap = _worker_cache(
-            ("minhash", n_seeds), _minhash_entry_bytes(n_seeds)
-        )
+        bases = _minhash_bases()
+        cache, cap = _worker_cache("minhash", _MINHASH_ENTRY_BYTES)
         # compare raw digests: hex encoding is byte-order-preserving,
         # so the min digest IS the min hex string
-        mins: list = [None] * n_seeds
+        mins: list = [None] * _MINHASH_SEEDS
         for j in range(n - k + 1):
             sh = " ".join(toks[j:j + k])
             digs = cache.get(sh)
@@ -1046,14 +1033,14 @@ def _minhash_bands_arrow(
                     d.update(raw)
                     digs.append(d.digest())
                 cache[sh] = digs
-            for s in range(n_seeds):
+            for s in range(_MINHASH_SEEDS):
                 h = digs[s]
                 if mins[s] is None or h < mins[s]:
                     mins[s] = h
         hexes = [m.hex() for m in mins]
         yield doc_id, [
             md5("".join(hexes[b * r:(b + 1) * r]).encode()).hexdigest()
-            for b in range(n_bands)
+            for b in range(_MINHASH_BANDS)
         ]
 
     return map_rows(
@@ -1067,14 +1054,13 @@ def _minhash_bands_arrow(
     )
 
 
-def minhash_bands(
-    documents: DataFrame, n_seeds: int = 8, k: int = 3,
-) -> DataFrame:
-    """MinHash signature (lexicographic min per seed) + 2 LSH band
-    hashes of n_seeds/2 rows each. Candidate duplicate groups share a
-    band. Hashes derive from md5 hex digests so the exact same values
-    are computable in ANSI SQL (see ``_minhash_bands_arrow``)."""
-    sig = _minhash_bands_arrow(documents, n_seeds, 2, k)
+def minhash_bands(documents: DataFrame) -> DataFrame:
+    """MinHash signature (lexicographic min per seed over 3-word
+    shingles) + 2 LSH band hashes of 4 seeds each. Candidate duplicate
+    groups share a band. Hashes derive from md5 hex digests so the
+    exact same values are computable in ANSI SQL (see
+    ``_minhash_bands_arrow``)."""
+    sig = _minhash_bands_arrow(documents, 3)
     return sig.select(
         "doc_id",
         F.element_at("bands", 1).alias("band_a"),
@@ -1082,36 +1068,25 @@ def minhash_bands(
     )
 
 
-def minhash_band_table(
-    documents: DataFrame, n_seeds: int = 8, n_bands: int = 2, k: int = 3,
-) -> DataFrame:
-    """General (bands x rows) MinHash LSH in LONG form: one
-    (doc_id, band) row per band — the tunable API behind the fixed
-    2-band ``minhash_bands`` (whose wide schema the oracles pin).
-    More bands with fewer rows each = higher candidate recall at
-    lower similarity (the standard S-curve trade:
-    P(candidate) = 1-(1-j^r)^b); n_seeds must divide into n_bands.
-    At n_bands=2 the band values are bit-identical to
+def minhash_band_table(documents: DataFrame, k: int = 3) -> DataFrame:
+    """MinHash LSH in LONG form over ``k``-word shingles: one
+    (doc_id, band) row per band, the shape the dedup operators join
+    and store. At k=3 the band values are bit-identical to
     minhash_bands' band_a/band_b."""
-    sig = _minhash_bands_arrow(documents, n_seeds, n_bands, k)
+    sig = _minhash_bands_arrow(documents, k)
     return sig.select("doc_id", F.explode("bands").alias("band"))
 
 
-def minhash_dedup(
-    documents: DataFrame, n_seeds: int = 8, k: int = 3,
-    n_bands: int = 2,
-) -> DataFrame:
+def minhash_dedup(documents: DataFrame, k: int = 3) -> DataFrame:
     """Near-dup dedup decision: among docs sharing an LSH band, keep the
     smallest doc_id (the standard minhash-band dedup pass; at scale the
     exact-jaccard verify runs only within these buckets).
-    ``n_bands`` tunes candidate recall (see minhash_band_table); the
-    default 2 matches the oracled minhash_bands layout exactly.
 
     The decision table is TOTAL over the input: documents too short to
     shingle (< k tokens) produce no bands, so they are left-joined back
     and kept as their own keepers — a consumer can treat this as a
     complete keep/drop decision."""
-    both = minhash_band_table(documents, n_seeds, n_bands, k)
+    both = minhash_band_table(documents, k)
     keeper = both.groupBy("band").agg(F.min("doc_id").alias("keep_id"))
     decided = (
         both.join(keeper, "band")
@@ -1132,7 +1107,6 @@ def minhash_dedup(
 
 def dsir_weights(
     raw: DataFrame, target: DataFrame, n_buckets: int = 4096,
-    salt: str = "ds1",
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score each raw
@@ -1175,7 +1149,7 @@ def dsir_weights(
         def bucket_counts(doc_id, t):
             if t is None:
                 return
-            cache, cap = _worker_cache(("dsir", salt, B), _INT_ENTRY_BYTES)
+            cache, cap = _worker_cache(("dsir", B), _INT_ENTRY_BYTES)
             toks = t.split(" ")
             counts: dict = {}
             for g in toks + [a + " " + b for a, b in zip(toks, toks[1:])]:
@@ -1183,7 +1157,7 @@ def dsir_weights(
                 if b is None:
                     if len(cache) >= cap:
                         cache.clear()
-                    h = md5(f"{salt}:{g}".encode("utf-8")).hexdigest()
+                    h = md5(f"ds1:{g}".encode("utf-8")).hexdigest()
                     b = cache[g] = int(h[:8], 16) % B
                 counts[b] = counts.get(b, 0) + 1
             for b, c in counts.items():
@@ -1240,15 +1214,14 @@ def dsir_weights(
 
 
 def minhash_incremental_dedup(
-    new_docs: DataFrame, stored_bands: DataFrame,
-    n_seeds: int = 8, n_bands: int = 2, k: int = 3,
+    new_docs: DataFrame, stored_bands: DataFrame
 ) -> DataFrame:
     """Cross-crawl incremental near-dup gate — the MinHash analogue of
     bloom_dedup's historical Bloom probe: a NEW crawl batch
     is deduped against an already-signed history WITHOUT recomputing
     history signatures. ``stored_bands`` is the persisted
     minhash_band_table output for the historical corpus ((doc_id, band)
-    long form; must be built with the same n_seeds/n_bands/k, and
+    long form at the default k = 3, and
     doc_ids must be unique across history + new — monotone crawl ids
     satisfy both).
 
@@ -1267,9 +1240,7 @@ def minhash_incremental_dedup(
     the min-struct through both aggregations, so the flag costs no
     extra join.
     """
-    new_bands = minhash_band_table(
-        new_docs, n_seeds=n_seeds, n_bands=n_bands, k=k,
-    ).select(
+    new_bands = minhash_band_table(new_docs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "band",
         F.lit(False).alias("is_hist"),
@@ -1306,12 +1277,9 @@ def minhash_incremental_dedup(
     )
 
 
-def minhash_dedup_best(
-    documents: DataFrame, score_col: str = "n_chars",
-    n_seeds: int = 8, k: int = 3, n_bands: int = 2,
-) -> DataFrame:
+def minhash_dedup_best(documents: DataFrame) -> DataFrame:
     """Quality-aware near-dup keeper selection: like minhash_dedup,
-    but each LSH band keeps its BEST-scoring document (``score_col``
+    but each LSH band keeps its BEST-scoring document (``n_chars``
     descending, doc_id ascending on ties) instead of the smallest id —
     what production corpus dedup actually wants (keep the longest /
     cleanest copy of a template family, not whichever crawled first).
@@ -1326,12 +1294,11 @@ def minhash_dedup_best(
 
     Returns (doc_id, keep_id, keep_score, is_kept), total over input.
     """
-    score = F.col(score_col).cast("long")
     docs = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        score.alias("_score"),
+        F.col("n_chars").cast("long").alias("_score"),
     )
-    bands = minhash_band_table(documents, n_seeds, n_bands, k).select(
+    bands = minhash_band_table(documents).select(
         F.col("doc_id").cast("long").alias("doc_id"), "band"
     ).join(docs, "doc_id")
     # winner rides a max(struct): (score, -doc_id) so the tie-break is
@@ -1456,9 +1423,7 @@ def simhash64(documents: DataFrame) -> DataFrame:
     ).mapInArrow(kernel, "doc_id long, simhash long")
 
 
-def label_components(
-    membership: DataFrame, max_iter: int = 30
-) -> DataFrame:
+def label_components(membership: DataFrame) -> DataFrame:
     """Connected components of a bipartite membership graph
     (``id`` <-> ``grp``): returns (id, component) where component is
     the smallest id in the id's connected component (two ids are
@@ -1480,7 +1445,7 @@ def label_components(
     checkpoint dir and use checkpoint() for executor-loss safety).
 
     Termination is by convergence (zero labels changed, one scalar
-    count per round) with ``max_iter`` as the adversarial-diameter
+    count per round) with 30 rounds as the adversarial-diameter
     backstop; 30 doubling rounds cover any component a shuffle can
     hold.
     """
@@ -1495,7 +1460,7 @@ def label_components(
     labels = memb.select("id").distinct().select(
         "id", F.col("id").alias("lbl")
     ).localCheckpoint(eager=False)
-    for _ in range(max_iter):
+    for _ in range(30):
         grp_min = (
             memb.join(labels, "id")
             .groupBy("grp")
@@ -1542,10 +1507,7 @@ def label_components(
     return labels.select("id", F.col("lbl").alias("component"))
 
 
-def minhash_dedup_cc(
-    documents: DataFrame, n_seeds: int = 8, k: int = 3,
-    n_bands: int = 2,
-) -> DataFrame:
+def minhash_dedup_cc(documents: DataFrame, k: int = 3) -> DataFrame:
     """Transitive-closure dedup decision: cluster_id is the smallest
     doc_id in the doc's CONNECTED COMPONENT of the band-sharing graph.
 
@@ -1561,7 +1523,7 @@ def minhash_dedup_cc(
 
     Total over the input: shingle-less docs are their own clusters.
     """
-    memb = minhash_band_table(documents, n_seeds, n_bands, k)
+    memb = minhash_band_table(documents, k)
     comp = label_components(memb)
     all_docs = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     total = all_docs.join(
@@ -1575,7 +1537,7 @@ def minhash_dedup_cc(
     )
 
 
-def line_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def line_dedup(documents: DataFrame) -> DataFrame:
     """Corpus-level line deduplication (the CCNet-style pass: crawl
     boilerplate — cookie banners, nav rows, footers — repeats across
     MILLIONS of pages, so dedup below document granularity is what
@@ -1600,7 +1562,7 @@ def line_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """
     lines = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     )
     # blank lines are STRUCTURE (paragraph boundaries), not content —
     # deduping them would merge paragraphs corpus-wide after the first
@@ -1632,7 +1594,7 @@ def line_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
     )
     totals = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(F.split(F.col(text_col), "\n")).alias("n_lines"),
+        F.size(F.split(F.col("text"), "\n")).alias("n_lines"),
     )
     return totals.join(rebuilt, "doc_id", "left").select(
         "doc_id",
@@ -1646,13 +1608,12 @@ def mixture_sample(
     documents: DataFrame,
     weights: dict[str, float],
     total_tokens: int,
-    salt: str = "mix1",
 ) -> DataFrame:
     """Data mixing: draw a per-source token budget
     (``weight * total_tokens``) from each corpus — the pretraining
     step that turns N heterogeneous corpora into one mixture with
     chosen proportions. Within a source, documents are taken in a
-    reproducible SHUFFLED order (md5(salt:doc_id) — prefix-by-doc_id
+    reproducible SHUFFLED order (md5("mix1:" doc_id) — prefix-by-doc_id
     would bias the sample toward whatever the upstream writer emitted
     first) until the running token count crosses the budget; the
     boundary document is included, so every non-empty source meets
@@ -1688,7 +1649,7 @@ def mixture_sample(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.size(tokens_col()).cast("long").alias("n_tokens"),
         F.md5(
-            F.concat_ws(":", F.lit(salt), F.col("doc_id"))
+            F.concat_ws(":", F.lit("mix1"), F.col("doc_id"))
         ).alias("mix_key"),
         budget.alias("budget"),
     ).withColumn("cum", F.sum("n_tokens").over(w))
@@ -1971,17 +1932,16 @@ def dup_ngram_fraction(
 _C4_TERMINALS = (".", "!", "?", '"')
 
 
-def c4_filter(documents: DataFrame, min_words: int = 5,
-              min_sentences: int = 3) -> DataFrame:
+def c4_filter(documents: DataFrame) -> DataFrame:
     """C4 cleaning rules (Raffel et al. 2020, §2.2) as one fused
     projection — entirely inside whole-stage codegen, no shuffle:
 
     line level — keep only lines that (a) end in a terminal
-    punctuation mark, (b) contain >= min_words words, (c) do not
+    punctuation mark, (b) contain >= 5 words, (c) do not
     mention 'javascript';
     page level — drop the page when the raw text contains
     'lorem ipsum' or a curly brace (code), or when fewer than
-    min_sentences sentences survive line cleaning.
+    3 sentences survive line cleaning.
 
     Output is total over input docs: cleaned_text plus the keep
     decision and the counters a curation dashboard tracks. At 10^12
@@ -1996,7 +1956,7 @@ def c4_filter(documents: DataFrame, min_words: int = 5,
     documents = ensure_scan_parallelism(documents)
     keep_line = lambda ln: (
         F.right(F.rtrim(ln), F.lit(1)).isin(*_C4_TERMINALS)
-        & (F.size(F.split(F.trim(ln), " ")) >= F.lit(min_words))
+        & (F.size(F.split(F.trim(ln), " ")) >= F.lit(5))
         & ~F.contains(F.lower(ln), F.lit("javascript"))
     )
     staged = (
@@ -2015,7 +1975,7 @@ def c4_filter(documents: DataFrame, min_words: int = 5,
             "_drop",
             F.contains(F.lower(F.col("text")), F.lit("lorem ipsum"))
             | F.contains(F.col("text"), F.lit("{"))
-            | (F.col("_n_sent") < F.lit(min_sentences)),
+            | (F.col("_n_sent") < F.lit(3)),
         )
     )
     return staged.select(
@@ -2030,43 +1990,25 @@ def c4_filter(documents: DataFrame, min_words: int = 5,
     )
 
 
-def filter_funnel(
-    documents: DataFrame,
-    min_words: int = GOPHER_MIN_WORDS,
-    max_words: int = GOPHER_MAX_WORDS,
-    min_mean_word_len: float = GOPHER_MIN_MEAN_WORD_LEN,
-    max_mean_word_len: float = GOPHER_MAX_MEAN_WORD_LEN,
-    min_alpha_frac: float = GOPHER_MIN_ALPHA_FRAC,
-    min_stop_hits: int = GOPHER_MIN_STOP_HITS,
-) -> DataFrame:
+def filter_funnel(documents: DataFrame) -> DataFrame:
     """Per-source filter-funnel telemetry: for each Gopher gate, how
     many documents pass it independently AND how many survive the
     gates applied in order — the dashboard numbers a curation job
     watches to see WHICH rule is eating the corpus (a pass-rate
     collapse on one gate after a crawl-mix shift is the first alarm).
 
-    One projection of boolean flags (the exact _gopher_signal_cols
-    rules) followed by one integer groupBy on source — map-side
-    partials, output rows = |sources|. Pure counts, deterministic
-    under any partitioning; linear at 10^12 rows."""
-    n_words, mean_word_len, alpha_frac, stop_hits = _gopher_signal_cols()
-    p_words = (n_words >= min_words) & (n_words <= max_words)
-    p_wordlen = (mean_word_len >= min_mean_word_len) & (
-        mean_word_len <= max_mean_word_len
-    )
-    p_alpha = alpha_frac >= min_alpha_frac
-    p_stop = stop_hits >= min_stop_hits
+    One projection of the _gopher_signal_cols pass flags followed by
+    one integer groupBy on source — map-side partials, output rows =
+    |sources|. Pure counts, deterministic under any partitioning;
+    linear at 10^12 rows."""
+    _, passes = _gopher_signal_cols()
 
     def cnt(cond):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
 
-    flags = documents.select(
-        "source",
-        p_words.alias("_pw"),
-        p_wordlen.alias("_pl"),
-        p_alpha.alias("_pa"),
-        p_stop.alias("_ps"),
-    )
+    flags = documents.select("source", *[
+        p.alias(a) for p, a in zip(passes, ("_pw", "_pl", "_pa", "_ps"))
+    ])
     return flags.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         cnt(F.col("_pw")).alias("pass_words"),
@@ -2084,8 +2026,7 @@ def filter_funnel(
 
 
 def span_dedup(
-    documents: DataFrame, n: int = 3, text_col: str = "text",
-    hot_min_count: int = 1024, hot_max_keys: int = 100_000,
+    documents: DataFrame, n: int = 3, hot_min_count: int = 1024,
 ) -> DataFrame:
     """C4 three-sentence-span deduplication (Raffel et al. 2020 §2.2:
     "we discarded all but one of any three-sentence span occurring
@@ -2105,11 +2046,11 @@ def span_dedup(
     duplicate occurrences are found with a SKEW-PROOF two-phase
     join-back — unlike line_dedup, the duplicates themselves are
     needed here, so the occurrence table must be probed. The heaviest
-    keys (count >= ``hot_min_count``, top ``hot_max_keys`` by count,
+    keys (count >= ``hot_min_count``, top 100,000 by count,
     deterministically ordered) are broadcast, so their occurrences
     resolve map-side and never enter a shuffled join; everything else
     goes through the equi-join whose per-key multiplicity is bounded
-    below hot_min_count (or by the hot_max_keys-th hottest count) by
+    below hot_min_count (or by the 100,000th hottest count) by
     construction — no reliance on AQE skew splitting. With no key
     over the threshold the hot table is empty and the plan degenerates
     to the plain join. Duplicate occurrences explode to their covered
@@ -2118,7 +2059,7 @@ def span_dedup(
     input docs; a doc with fewer than n sentences has no spans and
     passes through unchanged."""
     documents = ensure_scan_parallelism(documents)
-    arr = F.split(F.col(text_col), r"[.!?] ")
+    arr = F.split(F.col("text"), r"[.!?] ")
     m = F.size(arr)
     span_struct = f"array<struct<pos:int,span:string>>"
     spans_arr = F.when(
@@ -2143,7 +2084,7 @@ def span_dedup(
     hot = (
         first_owner.filter(F.col("_n") >= hot_min_count)
         .orderBy(F.desc("_n"), "span")
-        .limit(hot_max_keys)
+        .limit(100_000)
         .select("span", F.col("first").alias("_hot_first"))
     )
     not_winner = lambda w: ~(
@@ -2200,7 +2141,6 @@ def span_dedup(
 
 def tfidf_keywords(
     documents: DataFrame, top_k: int = 5, max_df_frac: float = 0.3,
-    text_col: str = "text", broadcast_idf: bool = True,
 ) -> DataFrame:
     """Per-document TF-IDF keyword extraction: the standard corpus
     summarization / topic-tagging primitive. Returns one row per
@@ -2215,17 +2155,16 @@ def tfidf_keywords(
 
     Scale shape: one (doc_id, tok) count aggregate (map-side
     partials), one df aggregate over it, a broadcast join to attach
-    idf (vocab-sized — fits comfortably to ~10^8 entries; set
-    ``broadcast_idf=False`` past that and the join shuffles on tok,
-    where the ``max_df_frac`` cap has already REMOVED the Zipf head:
-    a token in more than that fraction of docs is a stopword, not a
-    keyword, so the hot keys never reach the join), then one per-doc
-    top-k via sort+slice inside an aggregate — no Window, no global
-    sort. Docs whose every token was df-capped yield no rows."""
+    idf (vocab-sized — fits comfortably to ~10^8 entries, and the
+    ``max_df_frac`` cap has already REMOVED the Zipf head: a token in
+    more than that fraction of docs is a stopword, not a keyword),
+    then one per-doc top-k via sort+slice inside an aggregate — no
+    Window, no global sort. Docs whose every token was df-capped yield
+    no rows."""
     documents = ensure_scan_parallelism(documents)
     toks = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(tokens_col(text_col)).alias("tok"),
+        F.explode(tokens_col()).alias("tok"),
     ).filter(F.col("tok") != "")
     tf = toks.groupBy("doc_id", "tok").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -2252,9 +2191,7 @@ def tfidf_keywords(
             ).cast("long").alias("idf_micro"),
         )
     )
-    if broadcast_idf:
-        idf = F.broadcast(idf)
-    scored = tf.join(idf, "tok").select(
+    scored = tf.join(F.broadcast(idf), "tok").select(
         "doc_id", "tok",
         (F.col("tf") * F.col("idf_micro")).alias("score_micro"),
     )
@@ -2286,7 +2223,6 @@ def tfidf_keywords(
 
 def chunk_documents(
     documents: DataFrame, chunk_tokens: int = 2048, overlap: int = 128,
-    text_col: str = "text",
 ) -> DataFrame:
     """Split each document into fixed-size token windows with overlap
     — the pretraining prep step between extraction and shard packing
@@ -2305,7 +2241,7 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
-    tk = tokens_col(text_col)
+    tk = tokens_col()
     n = F.size(tk)
     # starts: 0, stride, 2*stride, ... while start < max(n - overlap, 1)
     # (the last window covers the tail; a start that would yield only
@@ -2339,15 +2275,10 @@ def chunk_documents(
     )
 
 
-def boilerplate_lines(
-    documents: DataFrame,
-    min_docs: int = 3,
-    text_col: str = "text",
-    host_col: str = "source",
-) -> DataFrame:
+def boilerplate_lines(documents: DataFrame, min_docs: int = 3) -> DataFrame:
     """Per-SITE template-line removal — the CCNet-style boilerplate
     strip that complements ``line_dedup``: a line occurring on
-    >= ``min_docs`` DISTINCT documents of the same host is template
+    >= ``min_docs`` DISTINCT documents of the same host (``source``) is template
     chrome (navigation rows, cookie banners, footers) and is removed
     from EVERY page of that host — unlike line_dedup's first-owner
     rule, because a nav row is not content on the first page that
@@ -2381,8 +2312,8 @@ def boilerplate_lines(
     documents = ensure_scan_parallelism(documents)
     lines = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.col(host_col).alias("_host"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("source").alias("_host"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("_lh", F.xxhash64(F.col("_host"), F.col("line")))
     blank = F.trim(F.col("line")) == ""
     # a NULL host is no site: its lines never count as template
@@ -2424,38 +2355,27 @@ def boilerplate_lines(
 
 
 def split_assign(
-    documents: DataFrame,
-    val_permille: int = 10,
-    test_permille: int = 10,
-    salt: str = "split1",
-    by: str = "content",
+    documents: DataFrame, val_permille: int = 10, test_permille: int = 10,
 ) -> DataFrame:
     """Deterministic train/validation/test assignment — the step every
     training-data pipeline runs last, with the leakage hygiene most
-    get wrong: ``by="content"`` (default) keys the hash on the md5 of
-    the TEXT, so byte-identical duplicates land in the SAME split by
-    construction (an exact dup straddling train and test silently
-    inflates eval; run near-dup dedup upstream for the fuzzy version
-    of the same guarantee). ``by="doc_id"`` keys on the id (pure
-    random-but-reproducible assignment). ``salt`` re-draws the whole
-    assignment without touching data — bump it to rotate holdouts.
+    get wrong: the hash is keyed on the md5 of the TEXT, so
+    byte-identical duplicates land in the SAME split by construction
+    (an exact dup straddling train and test silently inflates eval;
+    run near-dup dedup upstream for the fuzzy version of the same
+    guarantee).
 
     Map-only projection (no shuffle, no state): bucket = the first 8
-    md5 hex digits of (salt + key) as an integer mod 1000, compared to
-    the permille thresholds — engine-exact in any SQL dialect, stable
-    across runs, partitionings and cluster sizes. Returns
+    md5 hex digits of ("split1:" + md5(text)) as an integer mod 1000,
+    compared to the permille thresholds — engine-exact in any SQL
+    dialect, stable across runs, partitionings and cluster sizes. Returns
     (doc_id, split) with split in {'train', 'validation', 'test'}.
     """
     if val_permille + test_permille >= 1000:
         raise ValueError("holdout permilles must sum below 1000")
-    if by not in ("content", "doc_id"):
-        raise ValueError(f"unknown split key {by!r}")
-    key = (
-        F.md5(F.col("text")) if by == "content"
-        else F.col("doc_id").cast("string")
-    )
+    key = F.md5(F.col("text"))
     bucket = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.lit(":"), key)), 1, 8),
+        F.substring(F.md5(F.concat(F.lit("split1:"), key)), 1, 8),
         16, 10,
     ).cast("long") % 1000
     return documents.select(

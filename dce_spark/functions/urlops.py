@@ -95,17 +95,17 @@ def url_normalize_col(url: Column) -> Column:
     )
 
 
-def url_normalize(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """df plus a ``url_norm`` column."""
-    return df.withColumn("url_norm", url_normalize_col(F.col(url_col)))
+def url_normalize(df: DataFrame) -> DataFrame:
+    """df plus a ``url_norm`` column, the canonical form of ``url``."""
+    return df.withColumn("url_norm", url_normalize_col(F.col("url")))
 
 
-def url_dedup(df: DataFrame, id_col: str, url_col: str = "url") -> DataFrame:
+def url_dedup(df: DataFrame, id_col: str) -> DataFrame:
     """URL-level dedup decision: one hash-shuffle on the canonical URL
     (the key is computed map-side in the scan projection), keeping the
     smallest id per canonical URL. Returns
     (url_norm, keep_id, dup_count)."""
-    norm = url_normalize(df, url_col)
+    norm = url_normalize(df)
     return norm.groupBy("url_norm").agg(
         F.min(F.col(id_col)).cast("long").alias("keep_id"),
         F.count(F.lit(1)).alias("dup_count"),
@@ -125,26 +125,21 @@ def url_host_col(url: Column) -> Column:
     return F.regexp_extract(F.lower(url), _HOST_RE, 1)
 
 
-def host_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
+def host_stats(df: DataFrame) -> DataFrame:
     """Per-domain corpus stats: (host, n_urls, n_canonical). The
     n_urls/n_canonical gap is the crawl-dup pressure of a domain —
     link-farm and mirror hosts show many URLs collapsing onto few
     canonical keys, a standard domain-level filter signal. One
     hash-shuffle on host; both keys are computed map-side in the scan
     projection."""
-    norm = url_normalize(df, url_col).withColumn(
-        "host", url_host_col(F.col(url_col))
-    )
+    norm = url_normalize(df).withColumn("host", url_host_col(F.col("url")))
     return norm.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_urls"),
         F.countDistinct("url_norm").alias("n_canonical"),
     )
 
 
-def latest_snapshot(
-    df: DataFrame, id_col: str = "doc_id", url_col: str = "url",
-    ts_col: str = "ts",
-) -> DataFrame:
+def latest_snapshot(df: DataFrame) -> DataFrame:
     """Crawl-snapshot dedup: the same page is re-fetched in every
     crawl; keep only the NEWEST capture of each canonical URL (the
     Common-Crawl "latest revision wins" policy), ties broken by the
@@ -157,12 +152,11 @@ def latest_snapshot(
     events_last_max plan test). At 10^12 rows this is exactly one
     linear shuffle on the canonical-url key; the canonical key itself
     is computed map-side in the scan projection."""
-    canon = url_normalize_col(F.col(url_col))
     return (
         df.select(
-            F.col(id_col).cast("long").alias("_id"),
-            canon.alias("canonical_url"),
-            F.col(ts_col).cast("long").alias("_ts"),
+            F.col("doc_id").cast("long").alias("_id"),
+            url_normalize_col(F.col("url")).alias("canonical_url"),
+            F.col("ts").cast("long").alias("_ts"),
         )
         .groupBy("canonical_url")
         .agg(
@@ -179,10 +173,7 @@ def latest_snapshot(
     )
 
 
-def url_blocklist_filter(
-    df: DataFrame, blocklist: DataFrame, id_col: str = "doc_id",
-    url_col: str = "url",
-) -> DataFrame:
+def url_blocklist_filter(df: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Domain-blocklist filtering (the UT1/adult-blocklist hygiene
     pass every crawl pipeline runs first): a page is blocked when its
     host OR ANY PARENT DOMAIN is listed — ads.tracker.example.com
@@ -200,7 +191,7 @@ def url_blocklist_filter(
     side. Output is TOTAL over input rows: (id, host, blocked) —
     callers keep ~blocked or route blocked rows to a quarantine
     sink."""
-    host = url_host_col(F.col(url_col))
+    host = url_host_col(F.col("url"))
     parts = F.split(host, r"\.")
     n = F.size(parts)
     sufs = F.transform(
@@ -214,13 +205,13 @@ def url_blocklist_filter(
         ).distinct()
     )
     exploded = df.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         host.alias("host"),
         F.explode(sufs).alias("suffix"),
     )
     return (
         exploded.join(bl, "suffix", "left")
-        .groupBy(id_col, "host")
+        .groupBy("doc_id", "host")
         .agg(
             F.max(F.coalesce(F.col("_hit"), F.lit(False))).alias(
                 "blocked"
@@ -229,10 +220,7 @@ def url_blocklist_filter(
     )
 
 
-def robots_filter(
-    df: DataFrame, rules: DataFrame, id_col: str = "doc_id",
-    url_col: str = "url",
-) -> DataFrame:
+def robots_filter(df: DataFrame, rules: DataFrame) -> DataFrame:
     """Robots-exclusion (REP, RFC 9309) rule evaluation for a crawl
     frontier: `rules` holds one row per (host, allow, prefix) — the
     already-parsed Allow/Disallow lines for the crawler's user-agent
@@ -247,13 +235,13 @@ def robots_filter(
     drop the hint past ~10^7 hosts), one startswith filter, one
     map-side-combined groupBy max, one join back for totality. Output
     (id, host, path, allowed) over ALL input rows."""
-    host = url_host_col(F.col(url_col))
+    host = url_host_col(F.col("url"))
     raw_path = F.regexp_extract(
-        F.col(url_col), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*(/.*)?$", 1
+        F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*(/.*)?$", 1
     )
     path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
     base = df.select(
-        F.col(id_col).cast("long").alias(id_col),
+        F.col("doc_id").cast("long").alias("doc_id"),
         host.alias("host"),
         path.alias("path"),
     )
@@ -270,11 +258,11 @@ def robots_filter(
     verdicts = (
         base.join(rl, "host")
         .filter(F.col("path").startswith(F.col("prefix")))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("_score").alias("_best"))
     )
-    return base.join(verdicts, id_col, "left").select(
-        id_col,
+    return base.join(verdicts, "doc_id", "left").select(
+        "doc_id",
         "host",
         "path",
         F.coalesce(F.pmod(F.col("_best"), F.lit(2)) == 1, F.lit(True))
@@ -282,9 +270,7 @@ def robots_filter(
     )
 
 
-def host_link_edges(
-    df: DataFrame, url_col: str = "url", links_col: str = "links"
-) -> DataFrame:
+def host_link_edges(df: DataFrame, links_col: str = "links") -> DataFrame:
     """Host-level web-graph edge list from extracted page links (the
     pipeline's `content_links` column): one (src_host, dst_host) edge
     row per link with a count — the primitive behind domain authority
@@ -297,7 +283,7 @@ def host_link_edges(
     repetition (nav bars emit the same edge hundreds of times per
     page), so the shuffle carries one row per page-edge, not per
     anchor. Linear at 10^12 pages."""
-    src = url_host_col(F.col(url_col))
+    src = url_host_col(F.col("url"))
     edges = df.select(
         src.alias("src_host"),
         F.explode(F.col(links_col)).alias("_dst"),
@@ -320,9 +306,7 @@ def host_link_edges(
     )
 
 
-def _robots_groups(
-    df: DataFrame, host_col: str, body_col: str, agent: str,
-):
+def _robots_groups(df: DataFrame, agent: str):
     """Shared REP front half: split bodies into (host, pos, field,
     value) lines, assign RFC 9309 groups, and select the group set the
     given agent obeys (longest-prefix UA token, '*' fallback). Returns
@@ -330,11 +314,10 @@ def _robots_groups(
     robots_directives to project."""
     from pyspark.sql.window import Window
 
-    host = F.col(host_col)
     lines = df.select(
-        host.alias("host"),
+        "host",
         F.posexplode(
-            F.split(F.col(body_col), r"\r\n|\r|\n")
+            F.split(F.col("body"), r"\r\n|\r|\n")
         ).alias("pos", "raw"),
     )
     parsed = lines.select(
@@ -395,10 +378,7 @@ def _robots_groups(
     return flagged, selected
 
 
-def parse_robots(
-    df: DataFrame, host_col: str = "host", body_col: str = "body",
-    agent: str = "*",
-) -> DataFrame:
+def parse_robots(df: DataFrame, agent: str = "*") -> DataFrame:
     """Parse raw robots.txt bodies into the (host, allow, prefix)
     rules table that :func:`robots_filter` evaluates — the missing
     front half of the REP pipeline (fetching gives you bodies; this
@@ -417,7 +397,7 @@ def parse_robots(
     the URL layer already uses. Everything else is projections and
     one semi-join of rule lines against the selected group set.
     """
-    flagged, selected = _robots_groups(df, host_col, body_col, agent)
+    flagged, selected = _robots_groups(df, agent)
     return (
         flagged.filter(
             F.col("field").isin("allow", "disallow")
@@ -433,10 +413,7 @@ def parse_robots(
     )
 
 
-def robots_directives(
-    df: DataFrame, host_col: str = "host", body_col: str = "body",
-    agent: str = "*",
-) -> DataFrame:
+def robots_directives(df: DataFrame, agent: str = "*") -> DataFrame:
     """The de-facto REP extensions a polite crawler consumes beyond
     allow/disallow: ``Crawl-delay`` (per selected user-agent group —
     the minimum numeric value across the obeyed groups, conservative
@@ -449,7 +426,7 @@ def robots_directives(
     half): host-keyed windows over RFC-bounded bodies, then one
     bounded agg per host.
     """
-    flagged, selected = _robots_groups(df, host_col, body_col, agent)
+    flagged, selected = _robots_groups(df, agent)
     delay = (
         flagged.filter(
             (F.col("field") == "crawl-delay")
@@ -482,10 +459,7 @@ def robots_directives(
     return delay.unionByName(sitemaps)
 
 
-def host_quota_sample(
-    df: DataFrame, max_per_host: int, url_col: str = "url",
-    id_col: str = "doc_id", salt: str = "hq1",
-) -> DataFrame:
+def host_quota_sample(df: DataFrame, max_per_host: int) -> DataFrame:
     """Domain balancing: cap each host's contribution at ~``max_per_
     host`` documents (the anti-SEO-farm / anti-mirror step — without
     it one blog platform is 10% of the corpus). A document is kept
@@ -504,18 +478,17 @@ def host_quota_sample(
     the probe side AQE skew-split applies — or pre-aggregate by
     (host, bucket) upstream. Output (id, host, kept) total over
     input."""
-    host = url_host_col(F.col(url_col))
     base = df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        host.alias("host"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        url_host_col(F.col("url")).alias("host"),
     )
     counts = base.groupBy("host").agg(
         F.count(F.lit(1)).cast("long").alias("_hc")
     )
     draw = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(f"{salt}:"),
-                           F.col(id_col).cast("string"))),
+            F.md5(F.concat(F.lit("hq1:"),
+                           F.col("doc_id").cast("string"))),
             1, 10,
         ),
         16, 10,
@@ -525,24 +498,21 @@ def host_quota_sample(
         f" * CAST({1 << 40} AS BIGINT)) div _hc"
     )
     return base.join(counts, "host").select(
-        id_col,
+        "doc_id",
         "host",
         (draw < threshold).alias("kept"),
     )
 
 
-def schedule_fetches(
-    frontier: DataFrame, directives: DataFrame,
-    default_delay: float = 1.0, url_col: str = "url",
-) -> DataFrame:
+def schedule_fetches(frontier: DataFrame, directives: DataFrame) -> DataFrame:
     """Politeness scheduler: assign every frontier URL a per-host fetch
     slot and an earliest-start offset honoring Crawl-delay — the last
     leg of the REP composition (parse_robots gates WHAT may be
     fetched, robots_directives says HOW FAST, this says WHEN).
 
     ``directives`` is robots_directives output (only its
-    directive='crawl_delay' rows are read); hosts without a delay use
-    ``default_delay`` seconds. Output (url, host, slot, not_before_ms):
+    directive='crawl_delay' rows are read); hosts without a delay wait
+    one second between fetches. Output (url, host, slot, not_before_ms):
     slot is the 0-based position of the url within its host (ordered
     by url — deterministic under any partitioning) and
     not_before_ms = slot * delay_ms with delay_ms a rounded integer,
@@ -565,12 +535,8 @@ def schedule_fetches(
             .alias("delay_ms"),
         )
     )
-    urls = frontier.select(
-        F.col(url_col).alias("url"),
-        url_host_col(F.col(url_col)).alias("host"),
-    )
+    urls = frontier.select("url", url_host_col(F.col("url")).alias("host"))
     w = Window.partitionBy("host").orderBy("url")
-    default_ms = int(round(default_delay * 1000))
     return (
         urls.withColumn("slot", F.row_number().over(w) - 1)
         .join(F.broadcast(delays), "host", "left")
@@ -579,7 +545,7 @@ def schedule_fetches(
             F.col("slot").cast("long").alias("slot"),
             (
                 F.col("slot")
-                * F.coalesce(F.col("delay_ms"), F.lit(default_ms))
+                * F.coalesce(F.col("delay_ms"), F.lit(1000))
             ).cast("long").alias("not_before_ms"),
         )
     )

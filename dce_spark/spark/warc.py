@@ -474,13 +474,11 @@ def wet_record_bytes(url: str, ts, text: str) -> bytes:
     return head + payload + b"\r\n\r\n"
 
 
-def write_wet_shards(
-    df, out_dir: str, compress: bool = True
-) -> list[dict]:
-    """Extraction output -> per-partition ``.warc.wet[.gz]`` shards.
+def write_wet_shards(df, out_dir: str) -> list[dict]:
+    """Extraction output -> per-partition ``.warc.wet.gz`` shards.
 
     ``df`` needs (url, warc_ts, extracted_text). One archive per
-    partition, written RECORD-BY-RECORD through a streaming (gz)
+    partition, written RECORD-BY-RECORD through a streaming gzip
     writer — peak executor memory is one record, independent of
     partition size; parallelism is the input partitioning (repartition
     upstream to size shards, exactly the many-files layout read_warc
@@ -492,7 +490,7 @@ def write_wet_shards(
     beyond the caller's partitioning.
 
     Filesystem posture (matches ``read_warc``): shards are written
-    with plain ``open``/``gzip.open`` on each EXECUTOR, so ``out_dir``
+    with ``gzip.open`` on each EXECUTOR, so ``out_dir``
     must be a shared filesystem visible to the driver and every
     executor (local mode, NFS, or a mounted object store) — on a
     cluster with executor-local disks the manifest would point at
@@ -502,14 +500,12 @@ def write_wet_shards(
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.wet.gz" if compress else ".warc.wet"
 
     def write_partition(idx, rows):
-        path = os.path.join(out_dir, f"part-{idx:05d}{ext}")
+        path = os.path.join(out_dir, f"part-{idx:05d}.warc.wet.gz")
         n = 0
         nbytes = 0
-        opener = gzip.open if compress else open
-        with opener(path, "wb") as fh:
+        with gzip.open(path, "wb") as fh:
             for r in rows:
                 text = r["extracted_text"]
                 if text is None:

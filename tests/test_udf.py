@@ -178,3 +178,90 @@ def test_row_kernels_go_through_the_scaffold():
                 ):
                     bad.append(f"{rel}:{node.lineno} {owner}: .{name}(")
     assert bad == []
+
+
+# Defaulted public parameters that no library, job, tool or bench call
+# site passes, kept on purpose: (module, function) -> (parameters,
+# reason); "*" covers every function of a module.
+_TEST_REACH = {
+    ("functions/simsearch.py", "lsh_topk"): (
+        {"dim", "n_tables", "n_candidates"},
+        "dim describes the input; several tables only past 16 planes "
+        "(~16M vectors); n_candidates spares the count job at scale"),
+    ("functions/simsearch.py", "embedding_dedup"): (
+        {"dim", "n_tables", "n_candidates"},
+        "same occupancy settings as lsh_topk"),
+    ("spark/warc.py", "read_warc"): (
+        {"chunk_bytes"}, "tests need archives that span several ranges"),
+    ("spark/pipeline.py", "run_pipeline"): (
+        {"table_provider"}, "a deployment setting"),
+    ("functions/textops.py", "span_dedup"): (
+        {"hot_min_count"}, "tests reach the hot-key broadcast on tiny corpora"),
+    ("functions/textops.py", "tfidf_keywords"): (
+        {"max_df_frac"}, "tests reach a mid-df token on tiny corpora"),
+    ("functions/urlops.py", "host_link_edges"): (
+        {"links_col"}, "the pipeline's own output names it content_links"),
+    ("functions/textops.py", "linear_quality_score"): (
+        {"weights", "bias"}, "the trained model a deployment supplies"),
+    ("spark/corpus.py", "*"): (None, "test-data builders"),
+    ("spark/evalcorpus.py", "*"): (None, "test-data builders"),
+}
+
+
+def _defaulted(fn):
+    """(parameter, positional index or None) for each defaulted
+    parameter of a function definition."""
+    pos = fn.args.posonlyargs + fn.args.args
+    out = [(a, i) for i, a in enumerate(pos)
+           if i >= len(pos) - len(fn.args.defaults)]
+    return out + [(a, None) for a, d in zip(fn.args.kwonlyargs,
+                                            fn.args.kw_defaults)
+                  if d is not None]
+
+
+def test_public_parameters_have_a_caller():
+    """Every defaulted parameter of a top-level public function in
+    dce_spark/ is passed, by keyword or by position, at some call site
+    outside the tests and examples; a setting only tests reach is a
+    constant with extra steps."""
+    pkg = Path(udf.__file__).resolve().parent.parent
+    root = pkg.parent
+    calls: dict = {}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(("tests/", "examples/", "perfbench/tests/", ".")):
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(
+                    node.func, "attr", None)
+                calls.setdefault(name, []).append(node)
+
+    def passed(call, arg, i):
+        return (
+            (i is not None and len(call.args) > i)
+            or any(isinstance(a, ast.Starred) for a in call.args)
+            or any(k.arg in (arg, None) for k in call.keywords)
+        )
+
+    unreached, kept = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            for a, i in _defaulted(fn):
+                if any(passed(c, a.arg, i) for c in calls.get(fn.name, [])):
+                    continue
+                if (rel, "*") in _TEST_REACH:
+                    continue
+                allowed = _TEST_REACH.get((rel, fn.name), (set(), ""))[0]
+                if a.arg in allowed:
+                    kept.add((rel, fn.name, a.arg))
+                else:
+                    unreached.append(f"{rel} {fn.name}({a.arg})")
+    assert unreached == []
+    # no stale exceptions: each listed parameter exists and is unreached
+    listed = {(rel, fn, p) for (rel, fn), (ps, _) in _TEST_REACH.items()
+              if fn != "*" for p in ps}
+    assert listed == kept

@@ -398,7 +398,7 @@ def test_schedule_fetches(spark):
          ("a.test", "sitemap", "https://a.test/s.xml", None)],
         ["host", "directive", "value_str", "value_num"])
     out = {r.url: r for r in schedule_fetches(
-        frontier, directives, default_delay=1.0).collect()}
+        frontier, directives).collect()}
     assert (out["https://a.test/1"].slot,
             out["https://a.test/1"].not_before_ms) == (0, 0)
     assert (out["https://a.test/2"].slot,
@@ -408,5 +408,5 @@ def test_schedule_fetches(spark):
     two_b = spark.createDataFrame(
         [("https://b.test/x",), ("https://b.test/y",)], ["url"])
     out2 = {r.url: r.not_before_ms for r in schedule_fetches(
-        two_b, directives, default_delay=1.0).collect()}
+        two_b, directives).collect()}
     assert out2["https://b.test/y"] == 1000  # default delay fallback
