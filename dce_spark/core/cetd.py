@@ -40,7 +40,6 @@ from dce_spark.core.htmlparse import KIND_TEXT, Document, parse_html
 from dce_spark.core.predicates import is_non_content_text, should_skip_element
 from dce_spark.core.textnorm import (
     count_graphemes,
-    join_text_fragments,
     normalize_text,
     rust_trim,
 )
@@ -300,8 +299,9 @@ class DensityTree:
             return ""
         if len(frags) == 1:
             return frags[0]
-        # fragments are pre-normalized; joining with single spaces is
-        # equivalent to join_text_fragments on the raw fragments
+        # fragments are pre-normalized; joining them with single spaces
+        # equals normalize_text of the raw fragments joined by spaces
+        # (reference src/unicode.rs:99-102)
         return " ".join(frags)
 
     # ------------------------------------------------------------------

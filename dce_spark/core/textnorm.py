@@ -80,12 +80,6 @@ def normalize_text(text: str) -> str:
     return " ".join(_NONWS_RUN.findall(nfc(text)))
 
 
-def join_text_fragments(fragments: list[str]) -> str:
-    """Join with a single space then normalize (reference
-    src/unicode.rs:99-102)."""
-    return normalize_text(" ".join(fragments))
-
-
 def detect_primary_script(text: str) -> str:
     """Heuristic Latin/Cyrillic/Han detection, exact port of the counting
     ranges in reference src/unicode.rs:125-150 (Latin wins ties)."""

@@ -224,10 +224,10 @@ def write_bucketed_pages(spark, path: str, n_synthetic: int, buckets: int,
     free from its target-file-size splitting)."""
     from pyspark.sql import functions as F
 
+    from dce_spark.spark.pipeline import url_bucket
+
     df = build_pages_df(spark, n_synthetic, include_fixtures, seed=seed)
-    df = df.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
-    )
+    df = df.withColumn("bucket", url_bucket(buckets))
     df.repartition(
         buckets * files_per_bucket, F.col("bucket"), F.xxhash64("url")
     ).write.mode("overwrite").partitionBy("bucket").parquet(path)

@@ -9,6 +9,12 @@ Physical plan (the job's ONLY shuffle is the bucket rebalance):
       -> CollectMetrics per-bucket manifest counters   (observe)
       -> Write bucket=k partitions + manifest commit   (resume unit)
 
+WARC input replaces the scan with the driver's byte-range plan:
+
+    LocalTableScan [path, start, end]      (planned once, no exchange)
+      -> MapInArrow WARC records [url, html, ...]      (one range per row)
+      -> Exchange REBALANCE(bucket) -> ...             (as above)
+
 Scale notes (10^12-row framing):
 
 * Skew: Common-Crawl inputs cluster by host and by page size. A bucket
@@ -23,7 +29,8 @@ Scale notes (10^12-row framing):
   per url at bucket granularity. On Iceberg this maps 1:1 to snapshot
   commits + an anti-join on the manifest table.
 * Lineage: per-bucket url/byte/ok/failed counters live in the manifest
-  table; the write job observes them, so no job re-reads the output.
+  table; the write job observes the first three (failed = urls - ok),
+  so no job re-reads the output.
 """
 
 from __future__ import annotations
@@ -94,10 +101,19 @@ def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
     return {r.bucket for r in mf.select("bucket").distinct().collect()}
 
 
+def url_bucket(buckets: int):
+    """The url-hash bucket column, pmod(xxhash64(url), buckets): the one
+    definition that resume, the pre-bucketed layout check and
+    ``corpus.write_bucketed_pages`` share."""
+    return F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
+
+
 def _observe_counters(df: DataFrame, chunk: list[int]):
     """The chunk's manifest counters as metrics of the write job itself,
     one struct per bucket. Spark merges them from successful task
-    attempts only, so a retried task is counted once."""
+    attempts only, so a retried task is counted once. The kernel sets
+    a status on every row, so the driver derives pages_failed as
+    url_count - pages_ok."""
     ok = F.col("status") == "ok"
 
     def counters(b: int):
@@ -107,7 +123,6 @@ def _observe_counters(df: DataFrame, chunk: list[int]):
             F.coalesce(F.sum(F.when(mine, F.col("bytes_in"))), F.lit(0))
             .alias("bytes_in"),
             F.count(F.when(mine & ok, 1)).alias("pages_ok"),
-            F.count(F.when(mine & ~ok, 1)).alias("pages_failed"),
         ).alias(str(b))
 
     obs = Observation()
@@ -238,12 +253,7 @@ def run_pipeline(
         for b in probe_buckets:
             sample.extend(
                 pages.filter(F.col("bucket") == b)
-                .select(
-                    "bucket",
-                    F.pmod(F.xxhash64("url"), F.lit(buckets))
-                    .cast("int")
-                    .alias("_expect"),
-                )
+                .select("bucket", url_bucket(buckets).alias("_expect"))
                 .limit(25)
                 .collect()
             )
@@ -256,9 +266,7 @@ def run_pipeline(
         pages = pages.withColumn("bucket", F.col("bucket").cast("int"))
         bucket_bytes = None  # scan splits hold one bucket each: no exchange
     else:
-        pages = pages.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
-        )
+        pages = pages.withColumn("bucket", url_bucket(buckets))
         # input bytes from driver-side Hadoop content summaries, no job
         jpath = spark._jvm.org.apache.hadoop.fs.Path(input_path)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -287,9 +295,8 @@ def run_pipeline(
                 subset = subset.hint("rebalance", "bucket")
                 size = min(64 << 20, int(bucket_bytes * len(chunk) / slices))
                 spark.conf.set(_ADVISORY, str(max(1, size)))
-            extracted = attach_extraction(subset, mode=mode).withColumn(
-                "bucket", F.pmod(F.xxhash64("url"), F.lit(buckets)).cast("int")
-            )
+            extracted = attach_extraction(subset, mode=mode)
+            extracted = extracted.withColumn("bucket", url_bucket(buckets))
             extracted, counters = _observe_counters(extracted, chunk)
 
             # Dynamic partition overwrite: rewriting a bucket is idempotent,
@@ -331,10 +338,11 @@ def run_pipeline(
             # rows, or resume would reprocess it forever.
             seen = counters.get
             now = _dt.datetime.now(_dt.timezone.utc)
-            rows = [
-                dict(bucket=b, **seen[str(b)].asDict(), wall_ms=wall_ms, committed_at=now)
-                for b in chunk
-            ]
+            rows = []
+            for b in chunk:
+                c = seen[str(b)].asDict()
+                c["pages_failed"] = c["url_count"] - c["pages_ok"]
+                rows.append(dict(bucket=b, **c, wall_ms=wall_ms, committed_at=now))
             _manifest_frame(spark, rows).write.mode("append").parquet(
                 _manifest_dir(manifest_root)
             )

@@ -8,19 +8,21 @@ plain ``.warc`` both work.
 
 Memory discipline (the 100 TB read):
 
-* **Range-chunked input** — the scan lists (path, length) only and
-  each task owns one byte range of one archive, streamed through a
-  file handle: at any instant a task holds one read block, gzip's
-  window and ONE record payload, never the archive (see
-  ``read_warc``).
+* **Range-chunked input** — the driver plans (path, start, end) byte
+  ranges from the archive listing and each task owns one range of one
+  archive, streamed through a file handle: at any instant a task holds
+  one read block, gzip's window and ONE record payload, never the
+  archive (see ``read_warc``).
 * **Bounded row batches** — records go through the shared row-map
   scaffold (``udf.map_rows``), which flushes an Arrow batch at 2048
   rows or 48 MB of url + payload bytes, so peak kernel memory is
   independent of archive size.
 
-Distributed shape: Spark's binaryFile source lists the archives
-(path and length only), the listing is exploded into byte ranges, and
-a ``mapInArrow`` row map parses the records of each range. WARC's
+Distributed shape: the driver lists the archives through the
+binaryFile source's file index (no job), cuts each into byte ranges
+and hands Spark the plan as one Arrow table, whose local scan spreads
+the ranges over min(ranges, cores) tasks with no exchange; a
+``mapInArrow`` row map parses the records of each range. WARC's
 gzip-member framing is found by scanning for verified member starts,
 so a many-member ``.warc.gz`` splits across tasks; a single-stream
 ``.gz`` or plain ``.warc`` is read whole by the task owning offset 0.
@@ -32,7 +34,8 @@ Knobs that matter at 100 TB:
 * only local paths and ``file:`` URIs are read (a shared mount on a
   cluster); other schemes raise ValueError on the driver.
 
-``read_wet`` reads ``conversion`` records through the same path.
+``write_wet_shards`` publishes extracted text as WET archives, whose
+``conversion`` records ``iter_warc_records`` also parses.
 """
 
 from __future__ import annotations
@@ -40,10 +43,11 @@ from __future__ import annotations
 import datetime as _dt
 import gzip
 import io
+import os
 from collections.abc import Iterator
 
 __all__ = ["iter_warc_records", "read_warc", "wet_record_bytes",
-           "write_wet_shards", "read_wet"]
+           "write_wet_shards"]
 
 _CRLF = b"\r\n"
 
@@ -345,9 +349,9 @@ def _local_path(path: str) -> str:
     )
 
 
-def _range_records(path: str, start: int, end: int, record_types):
-    """Records of ``record_types`` owned by the byte range
-    [start, end) of one archive (see ``read_warc``)."""
+def _range_records(path: str, start: int, end: int):
+    """Response records owned by the byte range [start, end) of one
+    archive (see ``read_warc``)."""
     with open(_local_path(path), "rb") as f:
         if f.read(len(_GZ_MAGIC)) != _GZ_MAGIC:
             # plain .warc (or foreign compression): not splittable —
@@ -365,43 +369,30 @@ def _range_records(path: str, start: int, end: int, record_types):
             if first is None:
                 return
             stream = io.BufferedReader(_MemberRangeStream(f, first, end))
-        yield from iter_warc_records(stream, record_types)
+        yield from iter_warc_records(stream, (b"response",))
 
 
 def _range_plan(spark, path: str, chunk_bytes: int):
-    """(path, start, end) rows: each archive cut into byte ranges of
-    ``chunk_bytes``, spread over the cluster's cores."""
-    from pyspark.sql import functions as F
+    """(path, start, end) rows, planned on the driver: each archive the
+    binaryFile source lists, cut into byte ranges of ``chunk_bytes``.
+    The rows travel as one Arrow table, so the scan is a local table
+    that Spark spreads over min(ranges, cores) tasks, with no job to
+    plan it and no exchange."""
+    import pyarrow as pa
 
-    _local_path(path)  # fail on the driver, not inside a task
-    meta = spark.read.format("binaryFile").load(path).select(
-        "path", "length"
+    _local_path(path)  # fail on the driver, before the listing
+    files = sorted(spark.read.format("binaryFile").load(path).inputFiles())
+    plan = {"path": [], "start": [], "end": []}
+    for f in files:
+        size = os.stat(_local_path(f)).st_size
+        for start in range(0, max(size, 1), chunk_bytes):
+            plan["path"].append(f)
+            plan["start"].append(start)
+            plan["end"].append(min(start + chunk_bytes, size))
+    schema = pa.schema(
+        [("path", pa.string()), ("start", pa.int64()), ("end", pa.int64())]
     )
-    cb = int(chunk_bytes)
-    chunks = meta.select(
-        "path",
-        "length",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.floor((F.greatest(F.col("length"), F.lit(1)) - 1) / cb),
-            )
-        ).alias("ci"),
-    ).select(
-        "path",
-        (F.col("ci") * cb).alias("start"),
-        F.least((F.col("ci") + 1) * cb, F.col("length")).alias("end"),
-    )
-    # the chunk PLAN is tiny (one row per range) and comes out of the
-    # listing as a handful of partitions; spread the ranges so each
-    # task owns ~one range of ~chunk_bytes of real work. The partition
-    # count is explicit — AQE would otherwise coalesce the few-KB plan
-    # rows into one partition, serializing the (heavy, kernel-side)
-    # range reads it cannot see.
-    return chunks.repartition(
-        spark.sparkContext.defaultParallelism,
-        F.col("path"), F.col("start"),
-    )
+    return spark.createDataFrame(pa.table(plan, schema=schema))
 
 
 def read_warc(spark, path: str, chunk_bytes: int = _CHUNK_BYTES):
@@ -410,9 +401,10 @@ def read_warc(spark, path: str, chunk_bytes: int = _CHUNK_BYTES):
     parsing.
 
     Peak task memory is bounded by the row-map scaffold's output budget
-    + fixed streaming buffers, independent of archive size: the scan
-    lists (path, length) only — never the file contents — and each
-    task owns the byte range [start, start + chunk_bytes) of one
+    + fixed streaming buffers, independent of archive size. The driver
+    lists the archives (no job), takes each length from the filesystem
+    and cuts it into ranges [start, start + chunk_bytes); the plan is
+    fixed when the frame is built, and each task owns one range of one
     archive. Common-Crawl ``.warc.gz`` archives are one gzip member
     per record, so a task scans for the first VERIFIED member boundary
     in its range (magic bytes + zlib header + decompressed ``WARC/``
@@ -430,7 +422,7 @@ def read_warc(spark, path: str, chunk_bytes: int = _CHUNK_BYTES):
     from dce_spark.spark.udf import map_rows
 
     def records(path, start, end):
-        for r in _range_records(path, start, end, (b"response",)):
+        for r in _range_records(path, start, end):
             yield r["url"], r["warc_ts"], r["html"], None, None
 
     return map_rows(
@@ -525,26 +517,4 @@ def write_wet_shards(df, out_dir: str) -> list[dict]:
             lambda idx, it: write_partition(idx, it)
         )
         .collect()
-    )
-
-
-def read_wet(spark, path: str):
-    """WET archive(s) -> (url, warc_ts, text) DataFrame — the reader
-    side of ``write_wet_shards`` and of Common Crawl's published
-    ``.warc.wet.gz``. Same range-chunked path as read_warc, keeping
-    ``conversion`` records; their payloads are bare text (no HTTP
-    header strip)."""
-    from dce_spark.spark.udf import map_rows
-
-    def records(path, start, end):
-        for r in _range_records(path, start, end, (b"conversion",)):
-            yield (
-                r["url"], r["warc_ts"],
-                r["html"].decode("utf-8", errors="replace"),
-            )
-
-    return map_rows(
-        _range_plan(spark, path, _CHUNK_BYTES),
-        "url string, warc_ts timestamp, text string",
-        records,
     )

@@ -528,18 +528,35 @@ def test_output_dirs_keep_uri_authority():
     assert _data_dir("s3a://bkt/out") == "s3a://bkt/out/data"
 
 
-def test_commit_runs_no_bookkeeping_job(spark, pages_path, tmp_path):
-    """Jobs per commit on parquet input: the bucket rebalance, the data
-    write (which also yields the manifest counters) and the manifest
-    write. A re-read of the output or a Python-task bookkeeping job
-    raises the count."""
+@pytest.mark.parametrize("input_format", ["parquet", "warc"])
+def test_commit_runs_no_bookkeeping_job(spark, pages_path, tmp_path,
+                                        input_format):
+    """Jobs per commit: the read + bucket rebalance, the data write
+    (which also yields the manifest counters) and the manifest write.
+    A re-read of the output, a Python-task bookkeeping job or a WARC
+    range-plan job raises the count."""
+    import gzip
+
+    from test_warc import HTML1, make_record
+
     sc = spark.sparkContext
+    src = pages_path
+    if input_format == "warc":
+        src = tmp_path / "warc"
+        src.mkdir()
+        for k in range(2):
+            (src / f"part-{k}.warc.gz").write_bytes(b"".join(
+                gzip.compress(make_record(f"https://j.test/{k}/{i}", HTML1))
+                for i in range(12)
+            ))
+        src = str(src)
 
     def jobs(name, **kw):
         sc.setJobGroup(name, name)
         try:
-            run_pipeline(spark, pages_path, str(tmp_path / name), buckets=4,
-                         buckets_per_commit=2, **kw)
+            run_pipeline(spark, src, str(tmp_path / name), buckets=4,
+                         buckets_per_commit=2, input_format=input_format,
+                         **kw)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(name))

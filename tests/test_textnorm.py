@@ -4,7 +4,6 @@ from dce_spark.core.textnorm import (
     RUST_WHITESPACE,
     count_graphemes,
     detect_primary_script,
-    join_text_fragments,
     normalize_text,
     rust_trim,
 )
@@ -30,17 +29,14 @@ def test_normalize_text():
     assert normalize_text("hello\n\t world") == "hello world"
     # doc example src/unicode.rs:65-69
     assert normalize_text("  café   \n  résumé  ") == "café résumé"
-
-
-def test_join_text_fragments():
-    # src/unicode.rs:187-199
-    assert join_text_fragments(["Hello", "world", "!"]) == "Hello world !"
+    # fragments joined by one space, then normalized (src/unicode.rs:187-199)
+    assert normalize_text(" ".join(["Hello", "world", "!"])) == "Hello world !"
     assert (
-        join_text_fragments(["  Text  ", " with ", "  extra  ", " spaces "])
+        normalize_text(" ".join(["  Text  ", " with ", "  extra  ", " spaces "]))
         == "Text with extra spaces"
     )
     # doc example src/unicode.rs:93-98
-    assert join_text_fragments(["Hello", "世界", "!"]) == "Hello 世界 !"
+    assert normalize_text(" ".join(["Hello", "世界", "!"])) == "Hello 世界 !"
 
 
 def test_detect_primary_script():

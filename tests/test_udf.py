@@ -265,3 +265,52 @@ def test_public_parameters_have_a_caller():
     listed = {(rel, fn, p) for (rel, fn), (ps, _) in _TEST_REACH.items()
               if fn != "*" for p in ps}
     assert listed == kept
+
+
+# Public functions that no library, job, tool or bench code calls, kept
+# on purpose: (module, function) -> reason.
+_CALLERLESS = {
+    ("spark/pipeline.py", "read_extracted"):
+        "the read half of the bucket-committed layout contract",
+    ("spark/corpus.py", "write_bucketed_pages"):
+        "the write half of the bucket-committed layout contract",
+    ("functions/multimodal.py", "pdf_text"):
+        "the pipeline's PDF/layout parse leg",
+    ("spark/evaljob.py", "mean_scores"): "the evaluation example's summary",
+    ("spark/warc.py", "write_wet_shards"): "the WET-publishing example's sink",
+}
+
+
+def test_public_functions_have_a_caller():
+    """Every top-level public function in dce_spark/ is called or
+    referenced somewhere outside the tests and examples; a function only
+    tests reach is test code on a library path."""
+    pkg = Path(udf.__file__).resolve().parent.parent
+    root = pkg.parent
+    used = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.startswith(("tests/", "examples/", "perfbench/tests/", ".")):
+            continue
+        # a call's callee is itself a Name or an Attribute node
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+
+    unused, kept = [], set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            if fn.name in used:
+                continue
+            if (rel, fn.name) in _CALLERLESS:
+                kept.add((rel, fn.name))
+            else:
+                unused.append(f"{rel} {fn.name}")
+    assert unused == []
+    # no stale exceptions: each listed function exists and is callerless
+    assert set(_CALLERLESS) == kept

@@ -238,27 +238,47 @@ def test_read_warc_many_records_into_extraction(spark, tmp_path):
 @pytest.mark.spark
 def test_warc_ts_is_utc_in_any_session_time_zone(spark, tmp_path):
     """WARC-Date 2025-06-01T12:00:00Z is the same instant whatever the
-    session time zone, for both readers."""
+    session time zone."""
     from pyspark.sql import functions as F
 
-    from dce_spark.spark.warc import read_warc, read_wet
+    from dce_spark.spark.warc import read_warc
 
     (tmp_path / "r.warc").write_bytes(make_record("https://z.test/1", HTML1))
-    wet = tmp_path / "wet"
-    wet.mkdir()
-    (wet / "s.warc.wet").write_bytes(
-        make_record("https://z.test/1", b"text", rtype="conversion"))
     key = "spark.sql.session.timeZone"
     old = spark.conf.get(key)
     try:
         for tz in ("America/Los_Angeles", "UTC"):
             spark.conf.set(key, tz)
-            for df in (read_warc(spark, str(tmp_path / "r.warc")),
-                       read_wet(spark, str(wet))):
-                got = df.select(F.unix_timestamp("warc_ts")).collect()
-                assert [r[0] for r in got] == [1748779200], tz
+            df = read_warc(spark, str(tmp_path / "r.warc"))
+            got = df.select(F.unix_timestamp("warc_ts")).collect()
+            assert [r[0] for r in got] == [1748779200], tz
     finally:
         spark.conf.set(key, old)
+
+
+@pytest.mark.spark
+def test_read_warc_plans_without_a_job_or_exchange(spark, tmp_path):
+    """The byte-range plan is built on the driver: building the frame
+    runs no job, and reading it shuffles nothing."""
+    from dce_spark.spark.warc import read_warc
+
+    for k in range(3):
+        (tmp_path / f"p{k}.warc.gz").write_bytes(b"".join(
+            gzip.compress(make_record(f"https://p.test/{k}/{i}", HTML1))
+            for i in range(5)
+        ))
+    sc = spark.sparkContext
+    group = f"warc-plan-{tmp_path.name}"
+    sc.setJobGroup(group, "read_warc plan")
+    try:
+        df = read_warc(spark, str(tmp_path), chunk_bytes=512)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.count() == 15
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
 
 @pytest.mark.spark
 def test_warc_to_curated_chunks_end_to_end(spark, tmp_path):
@@ -377,7 +397,7 @@ def test_wet_round_trip_shards(spark, tmp_path):
     are skipped; the lineage manifest accounts for every record."""
     import datetime as dt
 
-    from dce_spark.spark.warc import read_wet, write_wet_shards
+    from dce_spark.spark.warc import iter_warc_records, write_wet_shards
 
     ts = dt.datetime(2025, 6, 1, 12, 0, 0)
     rows = [
@@ -392,12 +412,15 @@ def test_wet_round_trip_shards(spark, tmp_path):
     manifest = write_wet_shards(df, out)
     assert sum(m["records"] for m in manifest) == 19
     assert all(m["path"].endswith(".warc.wet.gz") for m in manifest)
-    back = {(r.url, r.text) for r in read_wet(spark, out).collect()}
+    back = set()
+    for m in manifest:
+        with open(m["path"], "rb") as fh:
+            back |= {
+                (r["url"], r["html"].decode("utf-8"))
+                for r in iter_warc_records(fh, record_types=(b"conversion",))
+            }
     want = {(u, t) for u, _, t in rows if t is not None}
     assert back == want
-    # local-only, like the writer: a remote scheme fails on the driver
-    with pytest.raises(ValueError, match="s3a"):
-        read_wet(spark, "s3a://b/wet/")
 
 
 def test_wet_truncated_archive_total(tmp_path):
