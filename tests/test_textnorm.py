@@ -29,6 +29,9 @@ def test_normalize_text():
     assert normalize_text("hello\n\t world") == "hello world"
     # doc example src/unicode.rs:65-69
     assert normalize_text("  café   \n  résumé  ") == "café résumé"
+
+
+def test_join_text_fragments():
     # fragments joined by one space, then normalized (src/unicode.rs:187-199)
     assert normalize_text(" ".join(["Hello", "world", "!"])) == "Hello world !"
     assert (
