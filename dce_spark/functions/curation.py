@@ -92,9 +92,9 @@ def curate_corpus(
     ``cc_dedup=True`` swaps the near-dup stage's band-keeper decision
     for the transitive-closure connected-components one
     (textops.minhash_dedup_cc): A~B~C collapses to ONE survivor even
-    when A and C share no band. Costlier (O(log diameter)
-    label-propagation rounds) but the semantics most corpus papers
-    mean by "near-dedup"."""
+    when A and C share no band. Costlier (local contraction, one more
+    level per round of disagreeing labels) but the semantics most
+    corpus papers mean by "near-dedup"."""
     base = documents.withColumn("doc_id", F.col("doc_id").cast("long"))
 
     def _cut(frontier):
@@ -173,8 +173,8 @@ def curate_corpus(
     # times (shingle side + totalization + the semi-join back), and
     # Spark recomputes the full upstream lineage per reference — the
     # minhash subtree would re-run 2^stages times. Checkpointing the
-    # survivor frontier between gates (via _cut, the same cut
-    # label_components uses) bounds that to once per stage.
+    # survivor frontier between gates (via _cut, the cut each
+    # label_components level makes) bounds that to once per stage.
 
     if max_dup_ngram_frac is not None:
         dup = dup_ngram_fraction(g3, k=dup_k,

@@ -31,9 +31,9 @@ def host_pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
     Scale shape per iteration: one join of the edge list with the
     rank vector on src (both shuffled on host), one groupBy(dst) sum
     with map-side partials, one left join back to the node set for
-    the teleport base. Each iteration localCheckpoints (the
-    label_components pattern) so K iterations cost K fixed plans, not
-    an exponentially deep lineage. Overflow headroom: ranks stay
+    the teleport base. Each iteration localCheckpoints (as each
+    label_components level does) so K iterations cost K fixed plans,
+    not an exponentially deep lineage. Overflow headroom: ranks stay
     ~1e6-scale micro-units, so the damped sum fits BIGINT up to
     ~10^12 nodes; beyond that move the accumulator to DECIMAL(38,0).
     """

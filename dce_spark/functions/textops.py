@@ -114,6 +114,8 @@ _MINHASH_SEEDS = 8
 _MINHASH_BANDS = 2
 # one cached shingle: the seeds' 16-byte digests in a list
 _MINHASH_ENTRY_BYTES = 256 + 56 * _MINHASH_SEEDS
+# label_components raises past this many contraction levels
+_CC_MAX_LEVELS = 32
 
 
 @functools.lru_cache(maxsize=None)
@@ -1423,88 +1425,87 @@ def simhash64(documents: DataFrame) -> DataFrame:
     ).mapInArrow(kernel, "doc_id long, simhash long")
 
 
+def _contract_partitions(memb: DataFrame) -> DataFrame:
+    """(id, NULL, lbl) per id, (NULL, grp, lbl) per grp of each
+    partition after a REBALANCE on grp: lbl is the component minimum."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def kernel(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        # nodes: the sorted distinct ids, then the grps
+        ids = np.concatenate([b.column("id").to_numpy() for b in batches])
+        uid, u = np.unique(ids, return_inverse=True)
+        enc = pc.dictionary_encode(
+            pa.concat_arrays([b.column("grp") for b in batches]))
+        grps, g = enc.dictionary, pc.fill_null(enc.indices, -1).to_numpy()
+        n, u, v = len(uid), u[g >= 0], g[g >= 0] + len(uid)
+        # min-label hooking with pointer jumping: every unsettled edge
+        # hooks its larger root under the smaller, then nodes jump
+        parent = np.arange(n + len(grps))
+        while not np.array_equal(parent[u], parent[v]):
+            pu, pv = parent[u], parent[v]
+            np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+            while not np.array_equal(parent[parent], parent):
+                parent = parent[parent]
+        yield pa.RecordBatch.from_arrays([
+            pa.concat_arrays([pa.array(uid), pa.nulls(len(grps), pa.int64())]),
+            pa.concat_arrays([pa.nulls(n, grps.type), grps]),
+            pa.array(uid[parent])], names=["id", "grp", "lbl"])
+
+    grp = memb.schema["grp"].dataType.simpleString()
+    return memb.hint("rebalance", "grp").mapInArrow(
+        kernel, f"id long, grp {grp}, lbl long")
+
+
+def _component_min(memb: DataFrame, level: int) -> DataFrame:
+    """(id, lo), lo the smallest id of the id's component."""
+    keys = _contract_partitions(memb).groupBy("id", "grp").agg(
+        F.collect_set("lbl").alias("lbls")).localCheckpoint(eager=False)
+    labels = keys.where(F.col("id").isNotNull()).select(
+        "id", F.array_min("lbls").alias("lo"))
+    split = keys.where(F.size("lbls") > 1)
+    if not split.take(1):
+        return labels
+    if level + 1 == _CC_MAX_LEVELS:
+        raise RuntimeError(f"label_components: {split.count()} ids or groups"
+                           f" still disagree at contraction level {level}")
+    # contract: each key that disagrees links its labels under the one
+    # hashing lowest, seeded by level so id order cannot slow a chain
+    centre = F.array_min(F.transform("lbls", lambda x: F.named_struct(
+        F.lit("h"), F.xxhash64(F.lit(level), x), F.lit("l"), x)))
+    roots = _component_min(split.select(
+        F.explode("lbls").alias("id"), centre["l"].alias("grp")), level + 1
+    ).toDF("lo", "root")
+    return labels.join(roots, "lo", "left").select(
+        "id", F.coalesce("root", "lo").alias("lo"))
+
+
 def label_components(membership: DataFrame) -> DataFrame:
     """Connected components of a bipartite membership graph
-    (``id`` <-> ``grp``): returns (id, component) where component is
-    the smallest id in the id's connected component (two ids are
-    connected when they share a grp, transitively).
+    (``id`` <-> ``grp``): (id, component), component the smallest id
+    in the id's component (ids sharing a grp are connected,
+    transitively). NULL ids are dropped; a NULL grp links nothing.
 
-    Min-label propagation in its alternating-aggregation form (the
-    MapReduce-CC family of Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14): each round a grp takes the min
-    label of its members (groupBy grp) and an id takes the min over
-    its grps (groupBy id), then one pointer-jumping hop
-    (lbl <- lbl[lbl], a self-join on the label) halves remaining
-    chain depth, giving O(log diameter) rounds instead of
-    O(diameter). Every round is a fixed number of key-partitioned
-    shuffles; labels monotonically decrease, so the fixed point — all
-    members of a grp share one label, every label is a root — is the
-    exact component minimum. The loop localCheckpoints each round: an
-    iterative plan otherwise grows multiplicatively and re-executes
-    from the scan every round (on a cluster, set a reliable
-    checkpoint dir and use checkpoint() for executor-loss safety).
-
-    Termination is by convergence (zero labels changed, one scalar
-    count per round) with 30 rounds as the adversarial-diameter
-    backstop; 30 doubling rounds cover any component a shuffle can
-    hold.
+    Local contraction (Kiveris et al., SoCC'14; Łącki et al., 2018): a
+    REBALANCE on grp bounds each partition by AQE's advisory size, a
+    NumPy kernel labels each partition's ids and grps with their
+    component minimum there, a groupBy collects each key's labels and
+    one probe asks if any key has two. If none has, the labels are
+    exact: each is a piece's minimum, and labels agreeing on every
+    shared key are constant on the component. Otherwise the keys that
+    disagree form a contracted graph over the labels, solved one level
+    down (a lazy local checkpoint per level) and remapped through one
+    join; past _CC_MAX_LEVELS levels it raises RuntimeError.
     """
     memb = membership.select(
         F.col(membership.columns[0]).cast("long").alias("id"),
         F.col(membership.columns[1]).alias("grp"),
-    ).distinct()
-    # lazy cuts: materialization fuses into the first consumer's job
-    # (the convergence count below) instead of costing a scheduled
-    # job per round
-    memb = memb.localCheckpoint(eager=False)
-    labels = memb.select("id").distinct().select(
-        "id", F.col("id").alias("lbl")
-    ).localCheckpoint(eager=False)
-    for _ in range(30):
-        grp_min = (
-            memb.join(labels, "id")
-            .groupBy("grp")
-            .agg(F.min("lbl").alias("grp_lbl"))
-        )
-        via_grp = (
-            memb.join(grp_min, "grp")
-            .groupBy("id")
-            .agg(F.min("grp_lbl").alias("new_lbl"))
-        )
-        stepped = labels.join(via_grp, "id", "left").select(
-            "id",
-            F.col("lbl").alias("old"),
-            F.least(
-                F.col("lbl"), F.coalesce(F.col("new_lbl"), F.col("lbl"))
-            ).alias("lbl"),
-        )
-        # pointer jumping: follow the label one hop (labels always
-        # reference ids, min includes self, so the hop stays inside
-        # the component and is monotone)
-        roots = stepped.select(
-            F.col("id").alias("r_id"), F.col("lbl").alias("r_lbl")
-        )
-        # the change flag rides INSIDE the checkpointed frame, so the
-        # convergence probe below is a filter over the fresh cache —
-        # the former separate jumped-join-labels count job (one more
-        # shuffle per round) is gone
-        jumped = (
-            stepped.join(roots, stepped.lbl == roots.r_id, "left")
-            .select(
-                "id",
-                F.coalesce(F.col("r_lbl"), F.col("lbl")).alias("lbl"),
-                (
-                    F.coalesce(F.col("r_lbl"), F.col("lbl"))
-                    < F.col("old")
-                ).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = jumped.filter(F.col("chg")).limit(1).count()
-        labels = jumped.select("id", "lbl")
-        if changed == 0:
-            break
-    return labels.select("id", F.col("lbl").alias("component"))
+    ).where(F.col("id").isNotNull())
+    return _component_min(memb, 0).withColumnRenamed("lo", "component")
 
 
 def minhash_dedup_cc(documents: DataFrame, k: int = 3) -> DataFrame:
@@ -1517,14 +1518,13 @@ def minhash_dedup_cc(documents: DataFrame, k: int = 3) -> DataFrame:
     consumer keeping only is_kept rows then drops B AND C but keeps a
     near-dup pair (A, C-cluster) split across keepers. This operator
     closes the relation: every chained group collapses to one
-    canonical doc. Costs O(log diameter) shuffle rounds via
-    label_components; run it on the dup-dense slice at 10^12 scale,
-    the one-pass decision everywhere else.
+    canonical doc. Small groups cost label_components one contraction
+    level (two shuffles); run it on the dup-dense slice at 10^12
+    scale, the one-pass decision everywhere else.
 
     Total over the input: shingle-less docs are their own clusters.
     """
-    memb = minhash_band_table(documents, k)
-    comp = label_components(memb)
+    comp = label_components(minhash_band_table(documents, k))
     all_docs = documents.select(F.col("doc_id").cast("long").alias("doc_id"))
     total = all_docs.join(
         comp.withColumnRenamed("id", "doc_id"), "doc_id", "left"

@@ -5,6 +5,8 @@ Cross-engine value parity with DuckDB is the driver's CORRECTNESS gate
 pin the operator semantics themselves.
 """
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -674,8 +676,9 @@ def test_label_components_chain_and_isolates(spark):
     )
     out = {r.id: r.component for r in label_components(memb).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 9: 9}
-    # a longer chain exercises >1 propagation round (pointer jumping)
-    # group g_j links ids j and j+1: a 20-id path graph
+    # a longer chain takes the partition kernel several hooking and
+    # pointer-jumping rounds; group g_j links ids j and j+1: a 20-id
+    # path graph
     chain = spark.createDataFrame(
         [(i, f"g{j}") for i in range(20) for j in (i - 1, i)
          if 0 <= j < 19],
@@ -683,6 +686,157 @@ def test_label_components_chain_and_isolates(spark):
     )
     got = {r.id: r.component for r in label_components(chain).collect()}
     assert got == {i: 0 for i in range(20)}
+    # a NULL id names no member; a NULL grp links nothing
+    nulls = spark.createDataFrame(
+        [(5, None), (6, None), (None, "q"), (7, "q"), (8, "q")],
+        "id long, grp string",
+    )
+    got = {r.id: r.component for r in label_components(nulls).collect()}
+    assert got == {5: 5, 6: 6, 7: 7, 8: 7}
+
+
+@contextlib.contextmanager
+def _conf(spark, settings):
+    """Session settings for one block, restored (or unset) after it."""
+    old = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+_UNCOALESCED = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+
+
+def _union_find(rows):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first = {}
+    for i, g in rows:
+        find(i)
+        if g in first:
+            a, b = find(i), find(first[g])
+            parent[max(a, b)] = min(a, b)
+        else:
+            first[g] = i
+    return {x: find(x) for x in parent}
+
+
+def test_label_components_long_paths_across_partitions(spark):
+    """Paths of diameter 95 and 63 contracted over 8 uncoalesced
+    partitions: every level leaves labels that disagree, and the
+    recursion must still end at the exact minima. One path runs over
+    shuffled ids, the other over ids that increase along it."""
+    import random
+
+    from dce_spark.functions.textops import label_components
+
+    shuffled = list(range(96))
+    random.Random(7).shuffle(shuffled)
+    rising = list(range(200, 264))
+    # group <tag><i> links the path's i-th and (i+1)-th ids
+    rows = [(path[i + d], f"{tag}{i}")
+            for tag, path in (("s", shuffled), ("r", rising))
+            for i in range(len(path) - 1) for d in (0, 1)]
+    with _conf(spark, _UNCOALESCED):
+        got = {r.id: r.component for r in label_components(
+            spark.createDataFrame(rows, ["id", "grp"])).collect()}
+    assert got == {**{i: 0 for i in range(96)}, **{i: 200 for i in rising}}
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_label_components_match_union_find(spark, seed):
+    """Seeded random membership graphs (a few hub groups, many pairs,
+    isolated ids) against a pure-Python union-find, once with AQE's
+    coalescing and once over 8 uncoalesced partitions fed to the
+    kernel in Arrow batches of 64 rows."""
+    import random
+
+    from dce_spark.functions.textops import label_components
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(10_000), 300)
+    rows = [(rng.choice(ids), f"p{rng.randrange(220)}") for _ in range(400)]
+    rows += [(i, f"hub{rng.randrange(3)}") for i in rng.sample(ids, 12)]
+    rows += [(i, f"own{i}") for i in ids]
+    want = _union_find(rows)
+    memb = spark.createDataFrame(rows, ["id", "grp"])
+    got = {r.id: r.component for r in label_components(memb).collect()}
+    assert got == want
+    small_batches = {"spark.sql.execution.arrow.maxRecordsPerBatch": "64"}
+    with _conf(spark, {**_UNCOALESCED, **small_batches}):
+        got = {r.id: r.component for r in label_components(memb).collect()}
+    assert got == want
+
+
+def _hot_group(spark):
+    # 400 ids in one group, read from 4 partitions, then 50 pairs
+    rows = [(i, "hot") for i in range(400)]
+    rows += [(i, f"pair{i // 2}") for i in range(400, 500)]
+    return spark.createDataFrame(rows, ["id", "grp"]).repartition(4)
+
+
+_SPLIT_HOT = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k"}
+
+
+def test_label_components_hot_group_split_across_partitions(spark):
+    """A 1 KB advisory size makes the REBALANCE split the hot group
+    over several partitions, each piece labelled apart with no id in
+    common; the groupBy over groups must still join the pieces."""
+    memb = _hot_group(spark)
+    with _conf(spark, _SPLIT_HOT):
+        pieces = textops._contract_partitions(
+            memb.select(F.col("id").cast("long").alias("id"), "grp")
+        ).where(F.col("grp") == "hot").select("lbl").distinct().count()
+        got = {r.id: r.component
+               for r in textops.label_components(memb).collect()}
+    assert pieces > 1
+    assert got == {i: 0 if i < 400 else i - i % 2 for i in range(500)}
+
+
+def test_label_components_raises_at_the_depth_cap(spark, monkeypatch):
+    """Labels that still disagree at the last level raise instead of
+    coming back unconverged."""
+    monkeypatch.setattr(textops, "_CC_MAX_LEVELS", 1)
+    with _conf(spark, _SPLIT_HOT):
+        with pytest.raises(RuntimeError, match=r": 1 ids or groups still "
+                           r"disagree at contraction level 0$"):
+            textops.label_components(_hot_group(spark))
+
+
+def test_doc_minhash_cc_job_count(spark, tmp_path):
+    """doc_minhash_cc over the curate_ops benchmark's documents table
+    (3000 docs, 10% near-dups) runs at most 10 jobs, counted through
+    its job group. The former round loop ran 28."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from perfbench.gen import documents_table
+
+    pq.write_table(documents_table(1, 3000, 0.10),
+                   tmp_path / "documents.parquet")
+    sc = spark.sparkContext
+    group = f"cc-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = entry.queries()["doc_minhash_cc"](spark, str(tmp_path)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 3000
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 10, jobs
 
 
 def test_minhash_dedup_cc_closes_chains(spark):

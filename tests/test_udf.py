@@ -124,13 +124,15 @@ def test_output_budget_counts_markdown(monkeypatch):
     assert all(b.column("extracted_md")[0].as_py() == rec["extracted_md"] for b in out)
 
 
-# Kernels that do NumPy work over a whole batch or group, where a
-# per-row scaffold would be slower, plus the scaffold itself and the
-# extraction entry point (kept by name for tracing).
+# Kernels that do NumPy work over a whole batch, group or partition,
+# where a per-row scaffold would be slower, plus the scaffold itself
+# and the extraction entry point (kept by name for tracing).
 _DIRECT_KERNELS = {
     ("spark/udf.py", "map_rows"),
     ("spark/udf.py", "attach_extraction"),
     ("functions/textops.py", "simhash64"),
+    # connected components of a whole partition's (id, grp) rows
+    ("functions/textops.py", "_contract_partitions"),
     ("functions/simsearch.py", "_assign_arrow"),
     ("functions/simsearch.py", "_update_partials_arrow"),
     ("functions/simsearch.py", "_lsh_codes"),
