@@ -194,6 +194,28 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, cand_id, cosine_r) rows per query as
+    (query_id, cand_id, rank, cosine_r). Ranks on the ROUNDED score
+    (ties then by cand_id): deterministic and engine-independent,
+    unlike raw-f64 ordering at ULP distance."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_r").desc(), F.col("cand_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("query_id").cast("long").alias("query_id"),
+            F.col("cand_id").cast("long").alias("cand_id"),
+            F.col("rank").cast("long").alias("rank"),
+            F.col("cosine_r"),
+        )
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame, k: int = 5, n_queries: int = 10
 ) -> DataFrame:
@@ -204,8 +226,6 @@ def brute_force_topk(
     through one whole-stage-codegen projection; top-k via a window on
     the (small) query partition count.
     """
-    from pyspark.sql.window import Window
-
     queries = embeddings.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
@@ -220,21 +240,7 @@ def brute_force_topk(
         )
         .select("query_id", "cand_id", "cosine_r")
     )
-    # rank on the ROUNDED score (ties then by cand_id): deterministic
-    # and engine-independent, unlike raw-f64 ordering at ULP distance
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("cand_id").cast("long").alias("cand_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("cosine_r"),
-        )
-    )
+    return _topk(scored, k)
 
 
 def cosine_pairs_threshold(
@@ -258,6 +264,24 @@ def cosine_pairs_threshold(
             F.round("cosine", 6).alias("cosine_r"),
         )
     )
+
+
+def _lsh_shape(embeddings: DataFrame, n_planes, n_tables, n_candidates):
+    """(n_planes, n_tables) with each unset one derived. Occupancy comes
+    from a caller-supplied corpus size when available: at scale the
+    count is already known (catalog stats, the ingest manifest), and a
+    count job per call is a driver action the pipeline shouldn't pay.
+    Amplification follows the planes actually IN USE: a caller-pinned
+    long code needs its multi-table recall restore as much as a derived
+    one."""
+    if n_planes is None:
+        n_planes = derive_n_planes(
+            n_candidates if n_candidates is not None
+            else embeddings.count()
+        )
+    if n_tables is None:
+        n_tables = tables_for_planes(n_planes)
+    return n_planes, n_tables
 
 
 def embedding_dedup(
@@ -288,20 +312,9 @@ def embedding_dedup(
     Indyk-Motwani amplification). Duplicate cross-table edges are
     deduped before the keeper aggregation.
     """
-    if n_planes is None:
-        # derive occupancy from a caller-supplied corpus size when
-        # available: at scale the count is already known (catalog
-        # stats, the ingest manifest), and launching a count job per
-        # dedup call is a driver action the pipeline shouldn't pay
-        n_planes = derive_n_planes(
-            n_candidates if n_candidates is not None
-            else embeddings.count()
-        )
-    if n_tables is None:
-        # derive amplification from the planes actually IN USE: a
-        # caller-pinned long code needs its multi-table recall restore
-        # just as much as a derived one
-        n_tables = tables_for_planes(n_planes)
+    n_planes, n_tables = _lsh_shape(
+        embeddings, n_planes, n_tables, n_candidates
+    )
     with_bucket = _with_table_buckets(embeddings, n_planes, dim, n_tables)
     # Per-bucket min-qualifying-neighbor in ONE grouped Arrow kernel
     # (guide §4.2): the former a-join-b candidate join evaluated the
@@ -466,16 +479,9 @@ def lsh_topk(
       is what lets ``n_planes`` track the corpus size — occupancy stays
       N/2^planes linear while recall is amplified 1-(1-p^b)^L.
     """
-    from pyspark.sql.window import Window
-
-    if n_planes is None:
-        n_planes = derive_n_planes(
-            n_candidates if n_candidates is not None
-            else embeddings.count()
-        )
-    if n_tables is None:
-        # amplification follows the planes in use, pinned or derived
-        n_tables = tables_for_planes(n_planes)
+    n_planes, n_tables = _lsh_shape(
+        embeddings, n_planes, n_tables, n_candidates
+    )
     # each branch filters before it codes: Spark pushes no filter below
     # a MapInArrow, so coding first would run the kernel over the whole
     # corpus once per branch
@@ -507,19 +513,7 @@ def lsh_topk(
         # same pair found via several tables: the score is identical
         # (deterministic f64 fold + round), so a plain distinct dedups
         scored = scored.distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("cand_id").cast("long").alias("cand_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("cosine_r"),
-        )
-    )
+    return _topk(scored, k)
 
 
 def _quantize_embeddings(embeddings: DataFrame) -> DataFrame:
@@ -1018,16 +1012,4 @@ def ivf_topk(
         )
         .select("query_id", "cand_id", "cosine_r")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_r").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("cand_id").cast("long").alias("cand_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("cosine_r"),
-        )
-    )
+    return _topk(scored, k)

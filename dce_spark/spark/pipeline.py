@@ -9,10 +9,10 @@ Physical plan (the job's ONLY shuffle is the bucket rebalance):
       -> CollectMetrics per-bucket manifest counters   (observe)
       -> Write bucket=k partitions + manifest commit   (resume unit)
 
-WARC input replaces the scan with the driver's byte-range plan:
+WARC input replaces the scan with the driver's archive plan:
 
-    LocalTableScan [path, start, end]      (planned once, no exchange)
-      -> MapInArrow WARC records [url, html, ...]      (one range per row)
+    LocalTableScan [path]                  (planned once, no exchange)
+      -> MapInArrow WARC records [url, html, ...]    (one archive per row)
       -> Exchange REBALANCE(bucket) -> ...             (as above)
 
 Scale notes (10^12-row framing):

@@ -8,27 +8,26 @@ plain ``.warc`` both work.
 
 Memory discipline (the 100 TB read):
 
-* **Range-chunked input** — the driver plans (path, start, end) byte
-  ranges from the archive listing and each task owns one range of one
-  archive, streamed through a file handle: at any instant a task holds
+* **Streamed archives** — each task reads whole archives through a
+  file handle, decompressing incrementally: at any instant it holds
   one read block, gzip's window and ONE record payload, never the
-  archive (see ``read_warc``).
+  archive (see ``read_warc``). Member-per-record ``.warc.gz``,
+  single-stream ``.warc.gz`` and plain ``.warc`` stream alike.
 * **Bounded row batches** — records go through the shared row-map
   scaffold (``udf.map_rows``), which flushes an Arrow batch at 2048
   rows or 48 MB of url + payload bytes, so peak kernel memory is
   independent of archive size.
 
 Distributed shape: the driver lists the archives through the
-binaryFile source's file index (no job), cuts each into byte ranges
-and hands Spark the plan as one Arrow table, whose local scan spreads
-the ranges over min(ranges, cores) tasks with no exchange; a
-``mapInArrow`` row map parses the records of each range. WARC's
-gzip-member framing is found by scanning for verified member starts,
-so a many-member ``.warc.gz`` splits across tasks; a single-stream
-``.gz`` or plain ``.warc`` is read whole by the task owning offset 0.
-Knobs that matter at 100 TB:
+binaryFile source's file index (no job) and hands Spark the plan as
+one Arrow table of archive paths, whose local scan spreads the
+archives over min(archives, cores) tasks with no exchange; a
+``mapInArrow`` row map parses the records of each archive. Read
+parallelism is the archive count; row-cost skew is evened out after
+the read, where the pipeline rebalances by bucket. Knobs that matter
+at 100 TB:
 
-* file count x ranges >= cluster cores (the crawl layout, ~1 GB per
+* archive count >= cluster cores (the crawl layout, ~1 GB per
   archive and tens of thousands of archives per crawl, satisfies
   this);
 * only local paths and ``file:`` URIs are read (a shared mount on a
@@ -43,15 +42,12 @@ from __future__ import annotations
 import datetime as _dt
 import gzip
 import io
-import os
 from collections.abc import Iterator
 
 __all__ = ["iter_warc_records", "read_warc", "wet_record_bytes",
            "write_wet_shards"]
 
 _CRLF = b"\r\n"
-
-_CHUNK_BYTES = 64 << 20  # byte range per read task
 
 
 def _read_headers(stream) -> dict[bytes, bytes] | None:
@@ -217,122 +213,6 @@ def iter_warc_records(raw, record_types=(b"response",)) -> Iterator[dict]:
         return
 
 
-_GZ_MAGIC = b"\x1f\x8b\x08"
-
-
-def _verify_member_at(f, off: int, probe: int = 1 << 16) -> bool:
-    """True when ``off`` is a real gzip member start whose payload
-    begins with a WARC version line. A bare magic-byte hit inside
-    compressed data survives neither the zlib header parse nor the
-    WARC/ prefix check, so scanning + verification is framing-safe."""
-    import zlib
-
-    f.seek(off)
-    raw = f.read(probe)
-    try:
-        out = zlib.decompressobj(16 + zlib.MAX_WBITS).decompress(raw, 16)
-    except zlib.error:
-        return False
-    return out.startswith(b"WARC/")
-
-
-def _first_member_at_or_after(f, start: int, end: int) -> int | None:
-    """Absolute offset of the first VERIFIED gzip member starting in
-    [start, end), scanning the raw bytes windowed (1 MB + overlap) so
-    the scan itself is memory-bounded."""
-    win = 1 << 20
-    pos = start
-    while pos < end:
-        f.seek(pos)
-        buf = f.read(min(win + len(_GZ_MAGIC) - 1, end - pos + 2))
-        i = 0
-        while True:
-            i = buf.find(_GZ_MAGIC, i)
-            if i < 0 or pos + i >= end:
-                break
-            if _verify_member_at(f, pos + i):
-                return pos + i
-            i += 1
-        pos += win
-    return None
-
-
-class _MemberRangeStream(io.RawIOBase):
-    """Read-only stream of the DECOMPRESSED bytes of every gzip member
-    whose member START lies in [first, end) of file ``f`` (members are
-    back-to-back, so after the verified first boundary no scanning is
-    needed: each member's ``unused_data`` begins the next). A single-
-    stream gzip file is one giant member, so the chunk owning offset 0
-    degrades to decoding the whole file — streaming, never buffered.
-    Peak memory: one read block + zlib window + one decompressed
-    block."""
-
-    def __init__(self, f, first: int, end: int, block: int = 1 << 20):
-        import zlib
-
-        self._zlib = zlib
-        self._f = f
-        self._end = end
-        self._block = block
-        self._member_start = first
-        self._raw = b""  # undecoded tail carried between members
-        self._obj = None
-        self._eof = False
-        self._buf = b""
-        f.seek(first)
-
-    def readable(self):
-        return True
-
-    def readinto(self, b):
-        if not self._buf:
-            self._buf = self._read1()
-        n = min(len(self._buf), len(b))
-        b[:n] = self._buf[:n]
-        self._buf = self._buf[n:]
-        return n
-
-    def _read1(self) -> bytes:
-        z = self._zlib
-        while not self._eof:
-            if not self._raw:
-                self._raw = self._f.read(self._block)
-                if not self._raw:
-                    self._eof = True
-                    if self._obj is not None:
-                        # file ended inside a member: surface the
-                        # truncation the way GzipFile does, so the
-                        # record parser stops at the damage instead of
-                        # header-parsing a half-decompressed prefix
-                        raise EOFError(
-                            "gzip member truncated mid-stream"
-                        )
-                    break
-            if self._obj is None:
-                if self._member_start >= self._end:
-                    self._eof = True
-                    break
-                self._obj = z.decompressobj(16 + z.MAX_WBITS)
-            try:
-                out = self._obj.decompress(self._raw)
-            except z.error as exc:
-                self._eof = True  # corrupt member: stop at the damage
-                raise OSError(str(exc))
-            if self._obj.eof:
-                tail = self._obj.unused_data
-                # next member starts where this one's bytes ended
-                self._member_start = (
-                    self._f.tell() - len(tail)
-                )
-                self._raw = tail
-                self._obj = None
-            else:
-                self._raw = b""
-            if out:
-                return out
-        return b""
-
-
 def _local_path(path: str) -> str:
     """Filesystem path of a local path / file: URI; ValueError naming
     the scheme for anything else (route object-store archives through
@@ -349,85 +229,42 @@ def _local_path(path: str) -> str:
     )
 
 
-def _range_records(path: str, start: int, end: int):
-    """Response records owned by the byte range [start, end) of one
-    archive (see ``read_warc``)."""
-    with open(_local_path(path), "rb") as f:
-        if f.read(len(_GZ_MAGIC)) != _GZ_MAGIC:
-            # plain .warc (or foreign compression): not splittable —
-            # the offset-0 range streams the whole file, others own
-            # nothing
-            if start != 0:
-                return
-            f.seek(0)
-            stream = f
-        else:
-            first = (
-                0 if start == 0
-                else _first_member_at_or_after(f, start, end)
-            )
-            if first is None:
-                return
-            stream = io.BufferedReader(_MemberRangeStream(f, first, end))
-        yield from iter_warc_records(stream, (b"response",))
+def read_warc(spark, path: str):
+    """WARC archive(s) -> pages DataFrame (url, warc_ts, html, text,
+    lang): one row per archive in the plan, each task streaming whole
+    archives through ``iter_warc_records``.
 
-
-def _range_plan(spark, path: str, chunk_bytes: int):
-    """(path, start, end) rows, planned on the driver: each archive the
-    binaryFile source lists, cut into byte ranges of ``chunk_bytes``.
-    The rows travel as one Arrow table, so the scan is a local table
-    that Spark spreads over min(ranges, cores) tasks, with no job to
-    plan it and no exchange."""
+    The driver lists the archives (no job); the plan is fixed when the
+    frame is built. Each task opens its archive and decompresses it
+    incrementally through the file handle, so peak task memory is the
+    row-map scaffold's output budget plus gzip's window and one record
+    payload, independent of archive size. Member-per-record
+    ``.warc.gz`` (the Common Crawl layout), single-stream ``.warc.gz``
+    and plain ``.warc`` all read the same way; a truncated or corrupt
+    member ends its archive's rows at the damage. Only local paths and
+    ``file:`` URIs are read: any other scheme raises ValueError on the
+    driver before the listing runs. ``warc_ts`` is the record's
+    WARC-Date as a UTC instant, whatever the session time zone.
+    """
     import pyarrow as pa
 
-    _local_path(path)  # fail on the driver, before the listing
-    files = sorted(spark.read.format("binaryFile").load(path).inputFiles())
-    plan = {"path": [], "start": [], "end": []}
-    for f in files:
-        size = os.stat(_local_path(f)).st_size
-        for start in range(0, max(size, 1), chunk_bytes):
-            plan["path"].append(f)
-            plan["start"].append(start)
-            plan["end"].append(min(start + chunk_bytes, size))
-    schema = pa.schema(
-        [("path", pa.string()), ("start", pa.int64()), ("end", pa.int64())]
-    )
-    return spark.createDataFrame(pa.table(plan, schema=schema))
-
-
-def read_warc(spark, path: str, chunk_bytes: int = _CHUNK_BYTES):
-    """WARC archive(s) -> pages DataFrame (url, warc_ts, html, text,
-    lang) via a RANGE-CHUNKED scan + Arrow-batched streaming record
-    parsing.
-
-    Peak task memory is bounded by the row-map scaffold's output budget
-    + fixed streaming buffers, independent of archive size. The driver
-    lists the archives (no job), takes each length from the filesystem
-    and cuts it into ranges [start, start + chunk_bytes); the plan is
-    fixed when the frame is built, and each task owns one range of one
-    archive. Common-Crawl ``.warc.gz`` archives are one gzip member
-    per record, so a task scans for the first VERIFIED member boundary
-    in its range (magic bytes + zlib header + decompressed ``WARC/``
-    prefix — false positives are rejected) and streams members whose
-    start lies in the range; a single-stream ``.gz`` or plain
-    ``.warc`` file cannot be split safely, so the range at offset 0
-    streams the whole file (still through a file handle, never a
-    whole-file buffer) and the other ranges find no owned boundary and
-    emit nothing. Only local paths and ``file:`` URIs are read: any
-    other scheme raises ValueError on the driver before the listing
-    runs. ``warc_ts`` is the record's WARC-Date as a UTC instant,
-    whatever the session time zone.
-    """
     from dce_spark.spark.schema import PAGES_SCHEMA
     from dce_spark.spark.udf import map_rows
 
-    def records(path, start, end):
-        for r in _range_records(path, start, end):
-            yield r["url"], r["warc_ts"], r["html"], None, None
-
-    return map_rows(
-        _range_plan(spark, path, chunk_bytes), PAGES_SCHEMA, records
+    _local_path(path)  # fail on the driver, before the listing
+    files = sorted(spark.read.format("binaryFile").load(path).inputFiles())
+    # one Arrow table: a local scan spread over min(archives, cores)
+    # tasks, with no job to plan it and no exchange
+    plan = spark.createDataFrame(
+        pa.table({"path": pa.array(files, pa.string())})
     )
+
+    def records(path):
+        with open(_local_path(path), "rb") as f:
+            for r in iter_warc_records(f, (b"response",)):
+                yield r["url"], r["warc_ts"], r["html"], None, None
+
+    return map_rows(plan, PAGES_SCHEMA, records)
 
 
 # ---------------------------------------------------------------------

@@ -193,8 +193,6 @@ _TEST_REACH = {
     ("functions/simsearch.py", "embedding_dedup"): (
         {"dim", "n_tables", "n_candidates"},
         "same occupancy settings as lsh_topk"),
-    ("spark/warc.py", "read_warc"): (
-        {"chunk_bytes"}, "tests need archives that span several ranges"),
     ("spark/pipeline.py", "run_pipeline"): (
         {"table_provider"}, "a deployment setting"),
     ("functions/textops.py", "span_dedup"): (

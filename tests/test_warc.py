@@ -2,6 +2,7 @@
 truncation totality, and the Spark read path into extraction."""
 
 import gzip
+import io
 
 import pytest
 
@@ -258,7 +259,7 @@ def test_warc_ts_is_utc_in_any_session_time_zone(spark, tmp_path):
 
 @pytest.mark.spark
 def test_read_warc_plans_without_a_job_or_exchange(spark, tmp_path):
-    """The byte-range plan is built on the driver: building the frame
+    """The archive plan is built on the driver: building the frame
     runs no job, and reading it shuffles nothing."""
     from dce_spark.spark.warc import read_warc
 
@@ -271,7 +272,7 @@ def test_read_warc_plans_without_a_job_or_exchange(spark, tmp_path):
     group = f"warc-plan-{tmp_path.name}"
     sc.setJobGroup(group, "read_warc plan")
     try:
-        df = read_warc(spark, str(tmp_path), chunk_bytes=512)
+        df = read_warc(spark, str(tmp_path))
         assert sc.statusTracker().getJobIdsForGroup(group) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -451,14 +452,9 @@ def test_wet_truncated_archive_total(tmp_path):
 
 
 def test_read_warc_range_chunked_parity_and_split(spark, tmp_path):
-    """The range-chunked reader (VERDICT r6 item: bound input memory by
-    range, not archive size) must (a) return exactly the rows a whole-
-    file parse returns on a many-member .warc.gz even when chunk_bytes
-    is far smaller than the archive — members spanning chunk
-    boundaries are owned by exactly one range, none duplicated or
-    dropped; (b) actually split the work across several range tasks;
-    (c) degrade to a whole-file stream for single-stream gzip and
-    plain .warc inputs."""
+    """The archive reader returns exactly the records of the archive,
+    none duplicated or dropped, for a many-member .warc.gz, a single-
+    stream .warc.gz and a plain .warc alike."""
     from dce_spark.spark.warc import read_warc
 
     n = 60
@@ -475,29 +471,14 @@ def test_read_warc_range_chunked_parity_and_split(spark, tmp_path):
     plain.write_bytes(b"".join(records))
 
     expected = sorted(f"https://c.test/{i}" for i in range(n))
-    size = member_gz.stat().st_size
-    chunk = max(size // 7, 1024)  # force ~7 ranges
     for p in (member_gz, single_gz, plain):
-        out = read_warc(spark, str(p), chunk_bytes=chunk).select(
-            "url"
-        ).collect()
+        out = read_warc(spark, str(p)).select("url").collect()
         assert sorted(r.url for r in out) == expected, p.name
-
-    # the member archive's rows must come from MULTIPLE range tasks
-    from pyspark.sql import functions as F
-
-    parts = (
-        read_warc(spark, str(member_gz), chunk_bytes=chunk)
-        .select(F.spark_partition_id().alias("pid"))
-        .distinct()
-        .count()
-    )
-    assert parts > 1, "range chunking did not split the archive"
 
 
 def test_read_warc_range_chunked_truncated_member_total(spark, tmp_path):
     """A member cut mid-stream costs its own rows only: earlier
-    members in every range still parse (totality, as before)."""
+    members of the archive still parse (totality, as before)."""
     from dce_spark.spark.warc import read_warc
 
     body = b"<html><body>" + b"x" * 2000 + b"</body></html>"
@@ -508,6 +489,50 @@ def test_read_warc_range_chunked_truncated_member_total(spark, tmp_path):
     members[-1] = members[-1][: len(members[-1]) // 2]  # truncate last
     p = tmp_path / "trunc.warc.gz"
     p.write_bytes(b"".join(members))
-    out = read_warc(spark, str(p), chunk_bytes=1500).select("url").collect()
+    out = read_warc(spark, str(p)).select("url").collect()
     urls = sorted(r.url for r in out)
     assert urls == sorted(f"https://t.test/{i}" for i in range(9))
+
+
+class _CountingReader(io.RawIOBase):
+    """Raw reader over ``f`` that counts the bytes read through it."""
+
+    def __init__(self, f):
+        self.f = f
+        self.n = 0
+
+    def readable(self):
+        return True
+
+    def readinto(self, b):
+        k = self.f.readinto(b)
+        self.n += k
+        return k
+
+
+def test_iter_warc_records_streams_the_first_record(tmp_path):
+    """Memory does not grow with the archive: the first record of an
+    archive of 8 MiB or more comes out after reading at most 1 MiB of
+    it, the call ``read_warc`` makes per archive, in member-per-record
+    gz, single-stream gz and plain layouts."""
+    import random
+
+    rnd = random.Random(7)
+    records = [  # incompressible bodies keep the gz archives 8 MiB+
+        make_record(f"https://s.test/{i}", rnd.randbytes(128 << 10))
+        for i in range(66)
+    ]
+    layouts = {
+        "members.warc.gz": b"".join(gzip.compress(r) for r in records),
+        "single.warc.gz": gzip.compress(b"".join(records)),
+        "plain.warc": b"".join(records),
+    }
+    for name, blob in layouts.items():
+        p = tmp_path / name
+        p.write_bytes(blob)
+        assert p.stat().st_size >= 8 << 20, name
+        with open(p, "rb", buffering=0) as f:
+            counted = _CountingReader(f)
+            first = next(iter_warc_records(counted, (b"response",)))
+            assert first["url"] == "https://s.test/0", name
+            assert counted.n <= 1 << 20, (name, counted.n)
